@@ -313,7 +313,9 @@ object Bench {
     try {
       sets.flatMap(_._1).distinct.foreach { q =>
         try q.run(s, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] warm-up ${q.name} failed: $e")
+        }
       }
       Engine.clearSwapCaches(s)
       val cal = calibrate(s)
@@ -443,7 +445,7 @@ object Bench {
         BenchArtifact.parse(new String(java.nio.file.Files.readAllBytes(p),
           java.nio.charset.StandardCharsets.UTF_8))
       else None
-    } catch { case _: Throwable => None }
+    } catch { case _: java.io.IOException => None }
     def writeArtifact(): Unit = try {
       val extra =
         if (extras.isEmpty) ""

@@ -69,7 +69,7 @@ object BenchArtifact {
         case o: ObjectNode => Some(o)
         case _ => None
       }
-    } catch { case _: Throwable => None }
+    } catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
 
   private def calOf(n: JsonNode): Option[Double] =
     Option(n.get("cal")).filter(_.isNumber).map(_.asDouble)

@@ -51,20 +51,10 @@ object Engine {
       // classifier's corpus×corpus doc_id joins died exactly there
       // ("not enough memory to build hash map", measured r14). 64 MiB ×
       // 32 tasks caps concurrent build memory at 2 GiB; anything larger
-      // belongs in a sort-merge join anyway.
-      // Parameterized (OPTIMIZATION r15, VERDICT r14 #2's adjudication
-      // hook): SPARK_GRAFT_SHJ_THRESHOLD overrides for controlled A/Bs
-      // (graft.ShjDev runs the TPC-H set under a given cap and dumps the
-      // FINAL adaptive plans). Adjudicated at sf10: the lineitem⋈orders
-      // SMJ→SHJ conversion fires under BOTH 64m and 256m (the final
-      // plans in plans/r15/q{3,5,10}*_shj{64,256}m.txt all show
-      // ShuffledHashJoin BuildRight on o_orderkey — sf10's per-partition
-      // build side is well under the cap), and the timed A/B at
-      // comparable cal showed no difference (q3 2.14 vs 2.02, q5 3.35
-      // vs 3.54, q10 2.66 vs 2.66) — the r14 fresh-run TPC-H residual
-      // was not this cap. The concurrency-priced 64m default stands.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+      // belongs in a sort-merge join anyway. A sf10 A/B against 256m
+      // (plans/r15/q{3,5,10}*_shj{64,256}m.txt) converted the same joins
+      // to shuffled hash joins and timed the same, so 64m stands.
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       // Broadcast threshold stays at the Spark DEFAULT (10m). Round 7
       // raised it session-wide to 64m for the TPC-H dimension joins and
       // the judge measured the blast radius: dedup_minhash_lsh compiled
@@ -88,7 +78,7 @@ object Engine {
     */
   private def ensureNanosConf(spark: SparkSession): Unit =
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    catch { case _: org.apache.spark.sql.AnalysisException => () }
 
   // (session, dir, name) → DataFrame. Plans are immutable; caching skips
   // re-listing parquet footers on every query invocation.

@@ -2,8 +2,10 @@ package graft.queries
 
 import graft.{Engine, QueryDef}
 import graft.ivm.IncrementalAggView
+import graft.sources.SegmentedIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** End-to-end incremental-view scenario, oracle-verified.
@@ -432,21 +434,15 @@ object Ivm {
     * returned probe plan is lazy; callers time its materialization. */
   def bm25RetractRun(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9)
-      r
-    }
     Engine.table(spark, dir, "documents").createOrReplaceTempView("documents")
     TextAnalysis.bigramPostings(spark, "documents")
     val dt = spark.table("btok_tf")
     val statePath = Engine.scratchDir("graft_ivm_bm25_")
     val view = new IncrementalAggView(spark, Seq("doc_id", "token"), Seq("tf"), statePath)
-    timed("init") {
+    SegmentedIndex.timed(timer, "init") {
       view.initialize(dt.select(col("doc_id"), col("token"), col("tf")))
     }
-    timed("refresh") {
+    SegmentedIndex.timed(timer, "refresh") {
       view.applyDelta(dt.filter(col("doc_id") % 13 === 0)
         .select(col("doc_id"), col("token"), col("tf"), lit(-1L).as(view.freqCol)))
     }
@@ -581,18 +577,15 @@ object Ivm {
     * maintained state is vocabulary-sized (so a refresh may rewrite the
     * whole — small — state), the ANN index's state is CORPUS-sized
     * (~600 B/vector: floats + int8 codes + JL projection), so an honest
-    * refresh must not rewrite it. Maintenance here is LSM-shaped, the
-    * FAISS `remove_ids` + add-segment serving pattern:
-    *   - deletes land as a TOMBSTONE relation of cand_ids — O(|deletes|);
-    *   - re-ingests land as a DELTA segment written with the index's own
-    *     schema and cell layout — O(|adds|);
-    *   - the live index is (base ∖ tombstones) ∪ delta, composed at
-    *     probe time: the tombstone anti-join broadcasts (edits are small
-    *     next to the corpus), the delta segment unions under the same
-    *     cell partitioning, and the base segment's files are NEVER
-    *     rewritten (IvmSpec pins byte-identical base files across the
-    *     edit — the O(|delta|) law the reference's freq-retraction
-    *     storage aims at, `storage/table.rs:309-347`).
+    * refresh must not rewrite it. Maintenance is a
+    * [[graft.sources.SegmentedIndex]]: deletes land as a tombstone
+    * relation of cand_ids, re-ingests as a delta segment written with the
+    * index's own schema and cell layout, and the live index is composed
+    * at probe time — the delta segment unions under the same cell
+    * partitioning, and the base segment's files are NEVER rewritten
+    * (IvmSpec pins byte-identical base files across the edit — the
+    * O(|delta|) law the reference's freq-retraction storage aims at,
+    * `storage/table.rs:309-347`).
     * Scenario: retract vec_id % 13 = 0 (an embedding-audit withdrawal),
     * re-ingest the % 26 = 0 half (the audit cleared them). The probe
     * over the composed index must equal a one-shot SQ8-IVF probe over
@@ -604,94 +597,36 @@ object Ivm {
     * 0–7 alive — here 0 is retracted but re-added via % 26, 1–7 are
     * untouched; any future slice must preserve that property (see
     * [[Similarity.ivfSq8OracleOver]]). */
-  /** One LSM-shaped retractable index: an immutable base segment, an
-    * O(|deletes|) tombstone relation, an O(|adds|) delta segment. Shared
-    * by the ANN (`ivm_ann`), minhash-band (`ivm_dedup`) and BM25-posting
-    * (`ivm_bm25_lsm`) compositions. */
-  final case class SegmentedIndexState(base: String, tombstones: String, delta: String)
-
-  /** Read a segment relation, or an empty relation of `like`'s schema
-    * when the segment hasn't landed yet — a stream that has only seen
-    * deletes has no delta segment, one that has only seen adds has no
-    * tombstones, and the probe must serve correctly at every point of
-    * the edit stream ([[graft.streaming.Streams.maintainAnnIndex]]). */
-  private def segmentOr(spark: SparkSession, path: String,
-      like: => DataFrame): DataFrame =
-    try spark.read.parquet(path)
-    catch { case _: org.apache.spark.sql.AnalysisException => like.limit(0) }
-
   def annRetractBuild(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => (),
-      root: String = Engine.scratchDir("graft_ivm_ann_")): SegmentedIndexState = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9); r
-    }
-    val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    timed("build") { Similarity.writeIvfSq8Index(spark, dir, st.base) }
-    timed("retract") {
-      // writeIvfSq8Index registered the `embeddings` view above
-      spark.sql("SELECT vec_id AS cand_id FROM embeddings WHERE vec_id % 13 = 0")
-        .write.mode("overwrite").parquet(st.tombstones)
-    }
-    timed("append") {
-      Similarity.writeIvfSq8Index(spark, dir, st.delta, slice = "vec_id % 26 = 0")
-    }
-    st
-  }
-
-  /** The live composed index as a DataFrame: (base ∖ tombstones ∖
-    * delta-ids) ∪ delta. DELTA WINS (ADVICE r13): a re-ingested id
-    * replaces any base copy whether or not the edit stream tombstoned it
-    * first, so correctness never depends on delta ⊆ tombstones and a
-    * re-add can never duplicate cand_id rows into the rerank join. Both
-    * edit relations broadcast — edits are small next to the corpus.
-    *
-    * Delta reads dropDuplicates on the id: an edit STREAM may land the
-    * same id in several appended delta segments, and the segment model
-    * is content-addressed — delta rows for one id are replicas of one
-    * deterministic derivation, so keep-any is exact. (An id whose
-    * CONTENT changed must be tombstoned and re-added after a compact();
-    * mutable re-derivation would need versioned segments, which the
-    * reference's append-only storage doesn't model either.) */
-  private def annLiveIndex(spark: SparkSession, st: SegmentedIndexState): DataFrame = {
-    val base = spark.read.parquet(st.base)
-    val tomb = segmentOr(spark, st.tombstones, base.select(col("cand_id")))
-    val delta = segmentOr(spark, st.delta, base).dropDuplicates("cand_id")
-    base
-      .join(broadcast(tomb.select("cand_id")), Seq("cand_id"), "left_anti")
-      .join(broadcast(delta.select("cand_id")), Seq("cand_id"), "left_anti")
-      .unionByName(delta)
-  }
+      root: String = Engine.scratchDir("graft_ivm_ann_")): SegmentedIndex.State =
+    SegmentedIndex.build(spark, root, timer, "build")(
+      Similarity.writeIvfSq8Index(spark, dir, _),
+      // writeIvfSq8Index registered the `embeddings` view
+      "SELECT vec_id AS cand_id FROM embeddings WHERE vec_id % 13 = 0",
+      Similarity.writeIvfSq8Index(spark, dir, _, slice = "vec_id % 26 = 0"))
 
   def annRetractProbe(spark: SparkSession, dir: String,
-      st: SegmentedIndexState): DataFrame = {
-    annLiveIndex(spark, st).createOrReplaceTempView("sq8_index")
+      st: SegmentedIndex.State): DataFrame = {
+    SegmentedIndex.liveTable(spark, st, "", "cand_id").createOrReplaceTempView("sq8_index")
     Similarity.probeSq8View(spark, dir)
   }
 
-  /** Compaction — the GC the LSM comments promise (VERDICT r13 #2): fold
-    * the live composition (base ∖ tombstones ∖ delta-ids) ∪ delta into a
-    * NEW immutable base segment under the index's own cell layout, with
-    * the tombstone and delta relations reset to empty. The composed and
-    * compacted probes are the same relation by construction (IvmSpec
-    * pins composed ≡ compacted ≡ one-shot, and that probing leaves the
-    * new base's files untouched). Cost: one pass over the live state —
-    * pay it when the edit history's probe overhead (tombstone anti-join
-    * input + dead delta rows) outgrows a base rewrite; the
+  /** Compaction on the vector axis: the live index becomes a NEW
+    * immutable base segment under the index's own cell layout. The
     * `ivm_compact_sf1` bench cell prices it against the one-shot rebuild
     * it replaces. */
-  def annCompact(spark: SparkSession, st: SegmentedIndexState,
-      root: String = Engine.scratchDir("graft_ivm_ann_c_")): SegmentedIndexState = {
-    val nu = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    annLiveIndex(spark, st).write.partitionBy("cell").parquet(nu.base)
-    // empty edit relations, schema preserved (flat — a partitionBy write
-    // of zero rows would produce an unreadable directory)
-    spark.read.parquet(st.base).select("cand_id").limit(0)
-      .coalesce(1).write.parquet(nu.tombstones)
-    spark.read.parquet(nu.base).limit(0).coalesce(1).write.parquet(nu.delta)
-    nu
-  }
+  def annCompact(spark: SparkSession, st: SegmentedIndex.State,
+      root: String = Engine.scratchDir("graft_ivm_ann_c_")): SegmentedIndex.State =
+    SegmentedIndex.compact(spark, root, "cand_id", "") { nu =>
+      SegmentedIndex.liveTable(spark, st, "", "cand_id").write.partitionBy("cell").parquet(nu.base)
+    }
+
+  /** The vector axis's signed-edit stream fold: re-ingests land through
+    * the index's own writer, so delta segments keep the cell layout. */
+  def annMaintain(edits: DataFrame, dir: String, st: SegmentedIndex.State): StreamingQuery =
+    SegmentedIndex.maintain(edits, st, "vec_id", "cand_id")((s, pred) =>
+      Similarity.writeIvfSq8Index(s, dir, st.delta, mode = "append", slice = pred))
 
   val annRetract: QueryDef = QueryDef.sqlBacked(
     "ivm_ann",
@@ -727,47 +662,21 @@ object Ivm {
     * from scratch, delta × edited-index exact Jaccard. */
   def dedupRetractBuild(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => (),
-      root: String = Engine.scratchDir("graft_ivm_dedup_")): SegmentedIndexState = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9); r
-    }
-    val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    timed("build") { Dedup.writeBandIndex(spark, dir, st.base) }
-    timed("retract") {
+      root: String = Engine.scratchDir("graft_ivm_dedup_")): SegmentedIndex.State =
+    SegmentedIndex.build(spark, root, timer, "build")(
+      Dedup.writeBandIndex(spark, dir, _),
       // dedup_sh registered by writeBandIndex's cachedShingles above
-      spark.sql("SELECT doc_id FROM dedup_sh WHERE doc_id % 10 <> 0 AND doc_id % 2 = 0")
-        .write.mode("overwrite").parquet(st.tombstones)
-    }
-    timed("append") {
-      Dedup.writeBandIndex(spark, dir, st.delta, pred = "doc_id % 4 = 0")
-    }
-    st
-  }
+      "SELECT doc_id FROM dedup_sh WHERE doc_id % 10 <> 0 AND doc_id % 2 = 0",
+      Dedup.writeBandIndex(spark, dir, _, pred = "doc_id % 4 = 0"))
 
-  /** Live group map: (base groups ∖ tombstones ∖ delta-ids) ∪ delta
-    * groups — the same delta-wins rule as [[annLiveIndex]] (ADVICE r13:
-    * a re-ingested doc must not appear twice in the membership map even
-    * when the edit stream never tombstoned it). */
-  private def dedupLiveGroups(spark: SparkSession, st: SegmentedIndexState): DataFrame = {
-    val base = spark.read.parquet(s"${st.base}/groups")
-    val tomb = segmentOr(spark, st.tombstones, base.select(col("doc_id")))
-    // dropDuplicates: same content-addressed multi-append rule as
-    // [[annLiveIndex]] — a doc streamed into several delta segments owns
-    // ONE live membership row (duplicates would double same-fp pairs)
-    val delta = segmentOr(spark, s"${st.delta}/groups", base).dropDuplicates("doc_id")
-    base
-      .join(broadcast(tomb.select("doc_id")), Seq("doc_id"), "left_anti")
-      .join(broadcast(delta.select("doc_id")), Seq("doc_id"), "left_anti")
-      .unionByName(delta)
-  }
-
+  /** Probe over the live group map (a doc streamed into several delta
+    * segments owns ONE live membership row — duplicates would double
+    * same-fp pairs) and every stored band. */
   def dedupRetractProbe(spark: SparkSession, dir: String,
-      st: SegmentedIndexState): DataFrame = {
-    val baseBands = spark.read.parquet(s"${st.base}/bands")
-    dedupLiveGroups(spark, st).createOrReplaceTempView("bidx_groups")
-    baseBands.unionByName(segmentOr(spark, s"${st.delta}/bands", baseBands))
-      .createOrReplaceTempView("bidx_bands")
+      st: SegmentedIndex.State): DataFrame = {
+    SegmentedIndex.liveTable(spark, st, "/groups", "doc_id")
+      .createOrReplaceTempView("bidx_groups")
+    SegmentedIndex.allSegments(spark, st, "/bands").createOrReplaceTempView("bidx_bands")
     Dedup.probeBandViews(spark, dir)
   }
 
@@ -780,28 +689,27 @@ object Ivm {
     * bands, the "dead weight" the composed probe expands to zero rows,
     * are dropped here. rep → fp resolves through the PRE-tombstone group
     * maps (a rep is a member of its own segment's map by construction). */
-  def dedupCompact(spark: SparkSession, st: SegmentedIndexState,
-      root: String = Engine.scratchDir("graft_ivm_dedup_c_")): SegmentedIndexState = {
-    val nu = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    val live = dedupLiveGroups(spark, st)
-    live.write.parquet(s"${nu.base}/groups")
-    val baseGroups = spark.read.parquet(s"${st.base}/groups")
-    val allGroups = baseGroups
-      .unionByName(segmentOr(spark, s"${st.delta}/groups", baseGroups))
-      .distinct()
-    val baseBands = spark.read.parquet(s"${st.base}/bands")
-    baseBands.unionByName(segmentOr(spark, s"${st.delta}/bands", baseBands))
-      .distinct()
-      .join(allGroups, Seq("doc_id"))
-      .join(spark.read.parquet(s"${nu.base}/groups").select("fp").distinct(),
-        Seq("fp"), "left_semi")
-      .select("doc_id", "band_idx", "band_sig")
-      .write.parquet(s"${nu.base}/bands")
-    baseGroups.select("doc_id").limit(0).coalesce(1).write.parquet(nu.tombstones)
-    live.limit(0).coalesce(1).write.parquet(s"${nu.delta}/groups")
-    baseBands.limit(0).coalesce(1).write.parquet(s"${nu.delta}/bands")
-    nu
-  }
+  def dedupCompact(spark: SparkSession, st: SegmentedIndex.State,
+      root: String = Engine.scratchDir("graft_ivm_dedup_c_")): SegmentedIndex.State =
+    SegmentedIndex.compact(spark, root, "doc_id", "/groups", "/bands") { nu =>
+      SegmentedIndex.liveTable(spark, st, "/groups", "doc_id")
+        .write.parquet(s"${nu.base}/groups")
+      SegmentedIndex.allSegments(spark, st, "/bands").distinct()
+        .join(SegmentedIndex.allSegments(spark, st, "/groups").distinct(), Seq("doc_id"))
+        .join(spark.read.parquet(s"${nu.base}/groups").select("fp").distinct(),
+          Seq("fp"), "left_semi")
+        .select("doc_id", "band_idx", "band_sig")
+        .write.parquet(s"${nu.base}/bands")
+    }
+
+  /** The dedup axis's signed-edit stream fold: deletes tombstone the
+    * GROUP map; re-ingests land as appended band/group delta segments via
+    * writeBandIndex's own per-batch-rep append contract (the probe's
+    * DISTINCT fp-pair collapse plus the live map's dedup make replay and
+    * multi-append idempotent). */
+  def dedupMaintain(edits: DataFrame, dir: String, st: SegmentedIndex.State): StreamingQuery =
+    SegmentedIndex.maintain(edits, st, "doc_id", "doc_id")((s, pred) =>
+      Dedup.writeBandIndex(s, dir, st.delta, mode = "append", pred = pred))
 
   val dedupRetract: QueryDef = QueryDef.sqlBacked(
     "ivm_dedup",
@@ -820,11 +728,10 @@ object Ivm {
     *   - re-ingests tokenize ONLY their slice into a delta segment under
     *     the same token sort ([[TextAnalysis.writeBm25IndexSlice]]) —
     *     O(|adds|);
-    *   - the live posting relation is (base ∖ tombstones ∖ delta-ids) ∪
-    *     delta, composed at probe time with broadcast anti-joins (delta
-    *     wins, so a re-ingest never depends on being tombstoned first);
-    *     doclen composes identically, and N/avgdl/df re-derive from the
-    *     composed relations, so [[TextAnalysis.bm25Sql]] runs verbatim.
+    *   - the live posting relation is composed at probe time
+    *     ([[graft.sources.SegmentedIndex.live]]); doclen composes
+    *     identically, and N/avgdl/df re-derive from the composed
+    *     relations, so [[TextAnalysis.bm25Sql]] runs verbatim.
     * The base segment's files are never rewritten (IvmSpec pins the
     * inventory captured when the init phase completes), so an edit costs
     * the tombstone write plus |delta|'s tokenization — the
@@ -836,59 +743,41 @@ object Ivm {
     * the query set — doc 0 is retracted AND re-added, so all 8 do.) */
   def bm25LsmBuild(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => (),
-      root: String = Engine.scratchDir("graft_ivm_bm25lsm_")): SegmentedIndexState = {
-    def timed[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      timer(label, (System.nanoTime() - t0) / 1e9); r
-    }
+      root: String = Engine.scratchDir("graft_ivm_bm25lsm_")): SegmentedIndex.State = {
     Engine.table(spark, dir, "documents").createOrReplaceTempView("documents")
-    val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    timed("init") { TextAnalysis.writeBm25Index(spark, dir, st.base) }
-    timed("retract") {
-      spark.sql("SELECT doc_id FROM documents WHERE doc_id % 13 = 0")
-        .write.mode("overwrite").parquet(st.tombstones)
-    }
-    timed("append") {
-      TextAnalysis.writeBm25IndexSlice(spark, dir, st.delta, pred = "doc_id % 26 = 0")
-    }
-    st
+    SegmentedIndex.build(spark, root, timer, "init")(
+      TextAnalysis.writeBm25Index(spark, dir, _),
+      "SELECT doc_id FROM documents WHERE doc_id % 13 = 0",
+      TextAnalysis.writeBm25IndexSlice(spark, dir, _, pred = "doc_id % 26 = 0"))
   }
 
-  /** Probe the composed text index. The probe PRUNES both posting
-    * segments to the query batch's vocabulary BEFORE composing them
-    * (the same bounded-collect → pushed-filter shape as
-    * [[TextAnalysis.probeBm25Index]], riding the token sort's row-group
-    * pruning): the first cut composed the full corpus-sized posting
-    * union and ran bm25Sql over it — at the 1000× tier (5 M docs) that
-    * plan built corpus-sized hash maps from a statistics-less union and
-    * died of executor memory, a measured scale-killer. After pruning,
-    * everything downstream of the anti-joins is proportional to the
-    * query tokens' postings; the one corpus-sized input left is the
-    * composed doclen relation, which feeds a 2-column aggregate (N,
-    * avgdl) and the per-candidate length join — the same inputs the
-    * stored-index probe handles at 5 M docs. df still comes exactly
-    * from the pruned slice (count over the live postings per token). */
-  def bm25LsmProbe(spark: SparkSession, dir: String,
-      st: SegmentedIndexState, k: Int = 10): DataFrame = {
-    val basePost = spark.read.parquet(s"${st.base}/postings")
-    val tomb = broadcast(segmentOr(spark, st.tombstones,
-      basePost.select(col("doc_id"))).select("doc_id"))
-    // dropDuplicates: content-addressed multi-append rule (see
-    // [[annLiveIndex]]) — a doc streamed into several delta segments
-    // must not double its postings' tf into the scores
-    val deltaPost = segmentOr(spark, s"${st.delta}/postings", basePost)
-      .dropDuplicates("doc_id", "token")
-    val deltaIds = broadcast(deltaPost.select("doc_id").distinct())
-    def live(base: DataFrame, delta: DataFrame): DataFrame =
-      base
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .join(deltaIds, Seq("doc_id"), "left_anti")
-        .unionByName(delta)
+  /** The live postings, keyed (doc_id, token): a doc streamed into
+    * several delta segments must not double its postings' tf into the
+    * scores. */
+  private def bm25LivePostings(spark: SparkSession, st: SegmentedIndex.State): DataFrame =
+    SegmentedIndex.liveTable(spark, st, "/postings", "doc_id", "token")
 
+  /** Probe the composed text index. The probe PRUNES the live postings
+    * to the query batch's vocabulary (the same bounded-collect →
+    * pushed-filter shape as [[TextAnalysis.probeBm25Index]]; the token
+    * predicate pushes through the composition into both posting segment
+    * scans, riding the token sort's row-group pruning): the first cut
+    * composed the full corpus-sized posting union and ran bm25Sql over
+    * it — at the 1000× tier (5 M docs) that plan built corpus-sized hash
+    * maps from a statistics-less union and died of executor memory, a
+    * measured scale-killer. After pruning, everything downstream of the
+    * anti-joins is proportional to the query tokens' postings; the one
+    * corpus-sized input left is the composed doclen relation, which
+    * feeds a 2-column aggregate (N, avgdl) and the per-candidate length
+    * join — the same inputs the stored-index probe handles at 5 M docs.
+    * df still comes exactly from the pruned slice (count over the live
+    * postings per token). */
+  def bm25LsmProbe(spark: SparkSession, dir: String,
+      st: SegmentedIndex.State, k: Int = 10): DataFrame = {
+    val post = bm25LivePostings(spark, st)
     // query tokens = the LIVE postings of the census query docs; the
     // doc_id predicate pushes through the union into both segment scans
-    live(basePost, deltaPost).filter(col("doc_id") < 8)
-      .createOrReplaceTempView("ivm_bm25_lsm_qt")
+    post.filter(col("doc_id") < 8).createOrReplaceTempView("ivm_bm25_lsm_qt")
     // bounded collect: the query batch's vocabulary (8 docs' bigrams —
     // the same bounded class as probeBm25Index's pushed filter)
     val toks = spark.sql("SELECT DISTINCT token FROM ivm_bm25_lsm_qt")
@@ -899,22 +788,16 @@ object Ivm {
           |  CAST(NULL AS BIGINT) AS score, CAST(NULL AS INT) AS rnk WHERE false""".stripMargin)
     // same 4096 In-list cap as probeBm25Index (ADVICE r12): a bigger
     // batch degrades to a broadcast left-semi join — still one scan
-    val tokRel =
-      if (toks.length > 4096) Some(broadcast(spark.createDataFrame(
+    val pruned =
+      if (toks.length > 4096) post.join(broadcast(spark.createDataFrame(
         spark.sparkContext.parallelize(
           toks.toIndexedSeq.map(org.apache.spark.sql.Row(_)), 1),
         new org.apache.spark.sql.types.StructType()
-          .add("token", org.apache.spark.sql.types.StringType, nullable = false))))
-      else None
-    def pruned(df: DataFrame): DataFrame = tokRel match {
-      case Some(r) => df.join(r, Seq("token"), "left_semi")
-      case None => df.filter(col("token").isin(toks.toIndexedSeq: _*))
-    }
-    live(pruned(basePost), pruned(deltaPost))
-      .createOrReplaceTempView("ivm_bm25_lsm_post")
-    val baseDl = spark.read.parquet(s"${st.base}/doclen")
-    live(baseDl, segmentOr(spark, s"${st.delta}/doclen", baseDl)
-        .dropDuplicates("doc_id"))
+          .add("token", org.apache.spark.sql.types.StringType, nullable = false))),
+        Seq("token"), "left_semi")
+      else post.filter(col("token").isin(toks.toIndexedSeq: _*))
+    pruned.createOrReplaceTempView("ivm_bm25_lsm_post")
+    SegmentedIndex.liveTable(spark, st, "/doclen", "doc_id")
       .createOrReplaceTempView("ivm_bm25_lsm_dl")
     spark.sql(TextAnalysis.bm25Sql(
       "SELECT DISTINCT doc_id AS query_id, token FROM ivm_bm25_lsm_qt",
@@ -925,32 +808,23 @@ object Ivm {
   /** Compaction on the text axis — same law as [[annCompact]]: fold the
     * live posting and doclen relations into a new immutable base (under
     * the same token sort, so probe-side row-group pruning survives the
-    * fold), reset the edit relations. */
-  def bm25LsmCompact(spark: SparkSession, st: SegmentedIndexState,
-      root: String = Engine.scratchDir("graft_ivm_bm25lsm_c_")): SegmentedIndexState = {
-    val nu = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
-    val basePost = spark.read.parquet(s"${st.base}/postings")
-    val tomb = segmentOr(spark, st.tombstones, basePost.select(col("doc_id")))
-    val deltaPost = segmentOr(spark, s"${st.delta}/postings", basePost)
-      .dropDuplicates("doc_id", "token")
-    val deltaIds = broadcast(deltaPost.select("doc_id").distinct())
-    def live(base: DataFrame, delta: DataFrame): DataFrame =
-      base
-        .join(broadcast(tomb.select("doc_id")), Seq("doc_id"), "left_anti")
-        .join(deltaIds, Seq("doc_id"), "left_anti")
-        .unionByName(delta)
-    live(basePost, deltaPost)
-      .repartition(col("token")).sortWithinPartitions("token")
-      .write.parquet(s"${nu.base}/postings")
-    val baseDl = spark.read.parquet(s"${st.base}/doclen")
-    live(baseDl, segmentOr(spark, s"${st.delta}/doclen", baseDl)
-        .dropDuplicates("doc_id"))
-      .write.parquet(s"${nu.base}/doclen")
-    tomb.limit(0).coalesce(1).write.parquet(nu.tombstones)
-    basePost.limit(0).coalesce(1).write.parquet(s"${nu.delta}/postings")
-    baseDl.limit(0).coalesce(1).write.parquet(s"${nu.delta}/doclen")
-    nu
-  }
+    * fold). */
+  def bm25LsmCompact(spark: SparkSession, st: SegmentedIndex.State,
+      root: String = Engine.scratchDir("graft_ivm_bm25lsm_c_")): SegmentedIndex.State =
+    SegmentedIndex.compact(spark, root, "doc_id", "/postings", "/doclen") { nu =>
+      bm25LivePostings(spark, st)
+        .repartition(col("token")).sortWithinPartitions("token")
+        .write.parquet(s"${nu.base}/postings")
+      SegmentedIndex.liveTable(spark, st, "/doclen", "doc_id")
+        .write.parquet(s"${nu.base}/doclen")
+    }
+
+  /** The text axis's signed-edit stream fold: re-ingests tokenize ONLY
+    * the batch's docs into an appended delta posting segment (same token
+    * sort, so probe-side row-group pruning covers every segment). */
+  def bm25LsmMaintain(edits: DataFrame, dir: String, st: SegmentedIndex.State): StreamingQuery =
+    SegmentedIndex.maintain(edits, st, "doc_id", "doc_id")((s, pred) =>
+      TextAnalysis.writeBm25IndexSlice(s, dir, st.delta, pred = pred, mode = "append"))
 
   val bm25Lsm: QueryDef = QueryDef.sqlBacked(
     "ivm_bm25_lsm",
@@ -961,48 +835,43 @@ object Ivm {
   /** The ANN retract loop maintained by a STREAM of signed edits
     * (VERDICT r13 #4): the same (retract % 13, re-ingest % 26) scenario
     * as `ivm_ann`, but the edits arrive as micro-batches of (vec_id,
-    * freq ±1) rows that [[graft.streaming.Streams.maintainAnnIndex]]
-    * folds into tombstone appends and delta segments via foreachBatch —
-    * the production serving loop for the LSM indexes, probed live
-    * between batches (the probe's segment-tolerant reads and delta-wins
-    * rule make it correct at every stream point). Same edited-corpus
-    * oracle as `ivm_ann`: stream-of-edits ≡ batch edit ≡ one-shot
-    * rebuild. */
+    * freq ±1) rows that [[annMaintain]] folds into tombstone appends and
+    * delta segments via foreachBatch — the production serving loop for
+    * the LSM indexes, probed live between batches (the probe's
+    * segment-tolerant reads and delta-wins rule make it correct at every
+    * stream point). Same edited-corpus oracle as `ivm_ann`:
+    * stream-of-edits ≡ batch edit ≡ one-shot rebuild. */
   val annStream: QueryDef = QueryDef.sqlBacked(
     "ivm_ann_stream",
     Similarity.ivfSq8OracleOver(
       "(SELECT * FROM embeddings WHERE vec_id % 13 <> 0 OR vec_id % 26 = 0)")
   ) { (spark, dir) =>
-    val root = Engine.scratchDir("graft_ivm_annstr_")
-    val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
+    val st = SegmentedIndex.State.under(Engine.scratchDir("graft_ivm_annstr_"))
     Similarity.writeIvfSq8Index(spark, dir, st.base) // registers `embeddings`
-    val edits = editBatches(spark, "vec_id", "vec_id",
+    drain(spark, signedEdits(spark, "vec_id",
       "FROM embeddings WHERE vec_id % 13 = 0",
-      "FROM embeddings WHERE vec_id % 26 = 0")
-    drainEdits(spark, edits, "vec_id",
-      graft.streaming.Streams.maintainAnnIndex(_, dir, st))
+      "FROM embeddings WHERE vec_id % 26 = 0"), annMaintain(_, dir, st))
     annRetractProbe(spark, dir, st)
   }
 
-  private def editBatches(spark: SparkSession, idCol: String, idSql: String,
-      delPred: String, addPred: String): String = {
-    val editDir = Engine.scratchDir("graft_ivm_edits_")
-    spark.sql(s"""SELECT CAST($idSql AS BIGINT) AS $idCol, CAST(-1 AS BIGINT) AS freq
-                 |$delPred""".stripMargin).write.parquet(s"$editDir/b1")
-    spark.sql(s"""SELECT CAST($idSql AS BIGINT) AS $idCol, CAST(1 AS BIGINT) AS freq
-                 |$addPred""".stripMargin).write.parquet(s"$editDir/b2")
-    editDir
-  }
+  /** The signed-edit batches of a census stream key: (idCol, freq −1)
+    * rows `FROM` the delete slice, then (idCol, +1) rows from the
+    * re-ingest slice. */
+  private def signedEdits(spark: SparkSession, idCol: String, delFrom: String,
+      addFrom: String): Seq[DataFrame] =
+    Seq(-1 -> delFrom, 1 -> addFrom).map { case (f, from) =>
+      spark.sql(s"SELECT CAST($idCol AS BIGINT) AS $idCol, CAST($f AS BIGINT) AS freq $from")
+    }
 
-  private def drainEdits(spark: SparkSession, editDir: String, idCol: String,
-      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("freq",
-        org.apache.spark.sql.types.LongType)))
-    val q = start(spark.readStream.schema(schema)
-      .option("recursiveFileLookup", "true").parquet(editDir))
+  /** Land `batches` as parquet under one scratch directory and drain
+    * them through the streaming query `start` builds over it — the edit
+    * feed of every census stream key. */
+  private def drain(spark: SparkSession, batches: Seq[DataFrame],
+      start: DataFrame => StreamingQuery): Unit = {
+    val dir = Engine.scratchDir("graft_ivm_edits_")
+    batches.zipWithIndex.foreach { case (b, i) => b.write.parquet(s"$dir/b$i") }
+    val q = start(spark.readStream.schema(spark.read.parquet(s"$dir/b0").schema)
+      .option("recursiveFileLookup", "true").parquet(dir))
     try q.processAllAvailable() finally q.stop()
   }
 
@@ -1015,14 +884,11 @@ object Ivm {
     TextAnalysis.bm25OracleOver(TextAnalysis.bigramDtDuck(
       "(SELECT * FROM documents WHERE doc_id % 13 <> 0 OR doc_id % 26 = 0)"))
   ) { (spark, dir) =>
-    val root = Engine.scratchDir("graft_ivm_bm25str_")
-    val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
+    val st = SegmentedIndex.State.under(Engine.scratchDir("graft_ivm_bm25str_"))
     TextAnalysis.writeBm25Index(spark, dir, st.base) // registers `documents`
-    val edits = editBatches(spark, "doc_id", "doc_id",
+    drain(spark, signedEdits(spark, "doc_id",
       "FROM documents WHERE doc_id % 13 = 0",
-      "FROM documents WHERE doc_id % 26 = 0")
-    drainEdits(spark, edits, "doc_id",
-      graft.streaming.Streams.maintainBm25Index(_, dir, st))
+      "FROM documents WHERE doc_id % 26 = 0"), bm25LsmMaintain(_, dir, st))
     bm25LsmProbe(spark, dir, st)
   }
 
@@ -1051,25 +917,19 @@ object Ivm {
       Engine.scratchDir("graft_ivm_nbs_p_"))
     prior.initialize(trd.select(col("pos")))
 
-    def drain(view: IncrementalAggView, deltas: Seq[DataFrame]): Unit = {
-      val dir0 = Engine.scratchDir("graft_ivm_nbs_d_")
-      deltas.zipWithIndex.foreach { case (d, i) => d.write.parquet(s"$dir0/b$i") }
-      val schema = spark.read.parquet(s"$dir0/b0").schema
-      val q = view.maintainFrom(spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true").parquet(dir0))
-      try q.processAllAvailable() finally q.stop()
-    }
     val retractP = trp.filter(col("doc_id") % 13 === 0)
-    drain(model, Seq(
+    drain(spark, Seq(
       retractP.select(col("token"), col("pos"), col("tf"),
         lit(-1L).as(model.freqCol)),
       retractP.filter(col("doc_id") % 4 === 0)
-        .select(col("token"), col("pos"), col("tf"), lit(1L).as(model.freqCol))))
+        .select(col("token"), col("pos"), col("tf"), lit(1L).as(model.freqCol))),
+      model.maintainFrom)
     val retractD = trd.filter(col("doc_id") % 13 === 0)
-    drain(prior, Seq(
+    drain(spark, Seq(
       retractD.select(col("pos"), lit(-1L).as(prior.freqCol)),
       retractD.filter(col("doc_id") % 4 === 0)
-        .select(col("pos"), lit(1L).as(prior.freqCol))))
+        .select(col("pos"), lit(1L).as(prior.freqCol))),
+      prior.maintainFrom)
 
     model.current()
       .select(col("token"), col("pos"), col("sum_tf").cast(LongType).as("tf"))
@@ -1109,16 +969,11 @@ object Ivm {
         Engine.scratchDir(s"graft_ivm_lms_${name}_"))
       v.initialize(base.select(col("token"), col("tf")))
       val retract = base.filter(col("doc_id") % 13 === 0)
-      val dir0 = Engine.scratchDir(s"graft_ivm_lms_d_${name}_")
-      Seq(
+      drain(spark, Seq(
         retract.select(col("token"), col("tf"), lit(-1L).as(v.freqCol)),
         retract.filter(col("doc_id") % 4 === 0)
-          .select(col("token"), col("tf"), lit(1L).as(v.freqCol))
-      ).zipWithIndex.foreach { case (d, i) => d.write.parquet(s"$dir0/b$i") }
-      val schema = spark.read.parquet(s"$dir0/b0").schema
-      val q = v.maintainFrom(spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true").parquet(dir0))
-      try q.processAllAvailable() finally q.stop()
+          .select(col("token"), col("tf"), lit(1L).as(v.freqCol))),
+        v.maintainFrom)
       v.current()
         .select(col("token"), col("sum_tf").cast(LongType).as("c"))
         .createOrReplaceTempView(s"ivm_lms_$name")
@@ -1137,14 +992,11 @@ object Ivm {
     Dedup.incrementalOracleOver(
       "i.doc_id % 10 <> 0 AND (i.doc_id % 2 <> 0 OR i.doc_id % 4 = 0)")
   ) { (spark, dir) =>
-    val root = Engine.scratchDir("graft_ivm_dedupstr_")
-    val st = SegmentedIndexState(s"$root/base", s"$root/tombstones", s"$root/delta")
+    val st = SegmentedIndex.State.under(Engine.scratchDir("graft_ivm_dedupstr_"))
     Dedup.writeBandIndex(spark, dir, st.base) // registers `dedup_sh`
-    val edits = editBatches(spark, "doc_id", "doc_id",
+    drain(spark, signedEdits(spark, "doc_id",
       "FROM dedup_sh WHERE doc_id % 10 <> 0 AND doc_id % 2 = 0",
-      "FROM dedup_sh WHERE doc_id % 4 = 0")
-    drainEdits(spark, edits, "doc_id",
-      graft.streaming.Streams.maintainBandIndex(_, dir, st))
+      "FROM dedup_sh WHERE doc_id % 4 = 0"), dedupMaintain(_, dir, st))
     dedupRetractProbe(spark, dir, st)
   }
 

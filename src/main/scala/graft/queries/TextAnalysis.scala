@@ -1196,7 +1196,7 @@ object TextAnalysis {
 
   /** Write ONE doc slice's bigram postings + lengths as an index segment
     * — the delta-segment writer of the LSM-shaped retractable text index
-    * ([[graft.queries.Ivm.bm25LsmBuild]]). Same layout as
+    * ([[graft.sources.SegmentedIndex]], `ivm_bm25_lsm`). Same layout as
     * [[writeBm25Index]] (token-sorted postings so a probe's token
     * predicate still prunes row groups, plus the per-doc length
     * relation), but the slice's postings are computed in one direct pass

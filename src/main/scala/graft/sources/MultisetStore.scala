@@ -87,7 +87,12 @@ object MultisetStore {
   /** Current logical state (one row per distinct tuple + freq), merging
     * pending deltas on the fly. Single-snapshot chains skip the merge —
     * the common shape after compaction — so steady-state reads are a
-    * plain parquet scan. */
+    * plain parquet scan. A longer chain is ONE multi-path scan (one
+    * listing, one schema inference) rather than a union of per-version
+    * reads, so building the read plan costs the same at every chain
+    * length. Every version must carry the table's schema — GraftSession's
+    * INSERT and DELETE align each delta to it — since a multi-path scan
+    * does not widen types the way a union does. */
   private def state(spark: SparkSession, path: String,
       upTo: Int = Int.MaxValue): Option[DataFrame] =
     chain(path, upTo) match {
@@ -95,7 +100,7 @@ object MultisetStore {
       case Seq(v) if !isDelta(path, v) =>
         Some(spark.read.parquet(versionDir(path, v)))
       case vs =>
-        Some(mergeFreq(vs.map(v => spark.read.parquet(versionDir(path, v)))))
+        Some(mergeFreq(Seq(spark.read.parquet(vs.map(versionDir(path, _)): _*))))
     }
 
   private def normalize(df: DataFrame, freq: Long): DataFrame = {

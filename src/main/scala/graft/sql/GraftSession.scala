@@ -788,9 +788,11 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     * (non-ANSI: unparseable → NULL, the reference's cast semantics). */
   private def multisetInsert(table: String, colList: Option[String],
       source: String): DataFrame = {
-    val path = msPath(table)
-    val snap = graft.sources.MultisetStore.snapshot(spark, path)
-    val dataCols = snap.columns.filterNot(_ == graft.sources.MultisetStore.freqCol).toIndexedSeq
+    // the columns and types of the view syncMultisetViews registered at
+    // the start of this statement — no second read plan over the chain
+    val (db, name) = viewKeyOf(table)
+    val current = spark.table(msMangled(db, name))
+    val dataCols = current.columns.toIndexedSeq
     val srcSql =
       if (source.trim.toLowerCase.startsWith("values")) s"SELECT * FROM ($source)"
       else source
@@ -806,11 +808,11 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     val byName = src.columns.zip(listed).map { case (s, t) => (t, col(s)) }.toMap
     val aligned = src.select(dataCols.map { c =>
       byName.get(c.toLowerCase) match {
-        case Some(e) => e.cast(snap.schema(c).dataType).as(c)
-        case None => lit(null).cast(snap.schema(c).dataType).as(c)
+        case Some(e) => e.cast(current.schema(c).dataType).as(c)
+        case None => lit(null).cast(current.schema(c).dataType).as(c)
       }
     }: _*)
-    graft.sources.MultisetStore.appendDelta(spark, path, aligned)
+    graft.sources.MultisetStore.appendDelta(spark, msPath(table), aligned)
     spark.emptyDataFrame
   }
 

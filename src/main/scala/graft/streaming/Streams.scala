@@ -281,99 +281,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming maintenance of an LSM-shaped segmented ANN index
-    * ([[graft.queries.Ivm.SegmentedIndexState]]): a micro-batch stream
-    * of SIGNED edits — (vec_id, freq) rows, freq < 0 retract / freq > 0
-    * re-ingest, the reference's tuple model
-    * (/root/reference/src/storage/src/storage.rs:34-63) applied to an
-    * index — lands via foreachBatch as tombstone appends and delta
-    * segments against the same state the batch path composes:
-    *   - deletes append their ids to the tombstone relation,
-    *     O(|deletes|) per batch;
-    *   - re-ingests collect the batch's ids (bounded by the micro-batch,
-    *     the same bounded-collect class as the BM25 probe's query
-    *     vocabulary) into a slice predicate and land as ONE delta
-    *     segment written with the index's own schema and cell layout,
-    *     O(|adds|);
-    *   - the base segment is never touched, and
-    *     [[graft.queries.Ivm.annRetractProbe]] serves live BETWEEN
-    *     batches — its segment-tolerant reads cover the before-first-
-    *     batch states, and its delta-wins anti-join makes a re-ingest
-    *     authoritative whether or not its id was tombstoned first, so
-    *     correctness never depends on batch boundaries or ordering.
-    * Stream-of-edits ≡ batch edit ≡ one-shot rebuild is pinned in
-    * IvmSpec and gated by the `ivm_ann_stream` census oracle. */
-  def maintainAnnIndex(edits: DataFrame, dir: String,
-      st: graft.queries.Ivm.SegmentedIndexState): org.apache.spark.sql.streaming.StreamingQuery =
-    edits.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.cache()
-        try {
-          val dels = b.filter(col("freq") < 0)
-            .select(col("vec_id").cast(LongType).as("cand_id"))
-          if (!dels.isEmpty) dels.write.mode("append").parquet(st.tombstones)
-          val adds = b.filter(col("freq") > 0).select(col("vec_id"))
-            .collect().map(_.getLong(0)) // bounded: one micro-batch's ids
-          if (adds.nonEmpty)
-            graft.queries.Similarity.writeIvfSq8Index(s, dir, st.delta,
-              mode = "append", slice = s"vec_id IN (${adds.mkString(",")})")
-        } finally { b.unpersist(blocking = false); () }
-      }
-      .start()
-
-  /** Streamed maintenance of the LSM text index — the same signed-edit
-    * fold as [[maintainAnnIndex]] on the BM25 posting axis
-    * ([[graft.queries.Ivm.bm25LsmBuild]]'s state): deletes append doc
-    * ids to the tombstone relation; re-ingests tokenize ONLY the batch's
-    * docs into an appended delta posting segment (same token sort, so
-    * probe-side row-group pruning covers every segment). The probe's
-    * content-addressed dropDuplicates makes re-sending a doc idempotent,
-    * so foreachBatch's at-least-once replay after failure is safe. */
-  def maintainBm25Index(edits: DataFrame, dir: String,
-      st: graft.queries.Ivm.SegmentedIndexState): org.apache.spark.sql.streaming.StreamingQuery =
-    edits.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.cache()
-        try {
-          val dels = b.filter(col("freq") < 0)
-            .select(col("doc_id").cast(LongType).as("doc_id"))
-          if (!dels.isEmpty) dels.write.mode("append").parquet(st.tombstones)
-          val adds = b.filter(col("freq") > 0).select(col("doc_id"))
-            .collect().map(_.getLong(0)) // bounded: one micro-batch's ids
-          if (adds.nonEmpty)
-            graft.queries.TextAnalysis.writeBm25IndexSlice(s, dir, st.delta,
-              pred = s"doc_id IN (${adds.mkString(",")})", mode = "append")
-        } finally { b.unpersist(blocking = false); () }
-      }
-      .start()
-
-  /** Streamed maintenance of the minhash-band dedup index — the third
-    * corpus-sized axis, same fold: deletes tombstone the GROUP map;
-    * re-ingests land as appended band/group delta segments via
-    * writeBandIndex's own per-batch-rep append contract (the probe's
-    * DISTINCT fp-pair collapse plus the live map's dropDuplicates make
-    * replay and multi-append idempotent). */
-  def maintainBandIndex(edits: DataFrame, dir: String,
-      st: graft.queries.Ivm.SegmentedIndexState): org.apache.spark.sql.streaming.StreamingQuery =
-    edits.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.cache()
-        try {
-          val dels = b.filter(col("freq") < 0)
-            .select(col("doc_id").cast(LongType).as("doc_id"))
-          if (!dels.isEmpty) dels.write.mode("append").parquet(st.tombstones)
-          val adds = b.filter(col("freq") > 0).select(col("doc_id"))
-            .collect().map(_.getLong(0)) // bounded: one micro-batch's ids
-          if (adds.nonEmpty)
-            graft.queries.Dedup.writeBandIndex(s, dir, st.delta,
-              mode = "append", pred = s"doc_id IN (${adds.mkString(",")})")
-        } finally { b.unpersist(blocking = false); () }
-      }
-      .start()
-
   /** Stream → multiset-table ingestion: every micro-batch lands as ONE
     * O(|batch|) freq delta in the [[graft.sources.MultisetStore]] chain —
     * the streaming twin of the reference's TableInsert write path, wired

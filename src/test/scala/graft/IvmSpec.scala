@@ -448,7 +448,7 @@ class IvmSpec extends AnyFunSuite {
     // edits fold into tombstone appends / delta segments via
     // foreachBatch, and the index serves correctly BETWEEN batches.
     val root = Engine.scratchDir("graft_ivm_annstr_spec_")
-    val st = queries.Ivm.SegmentedIndexState(
+    val st = sources.SegmentedIndex.State(
       s"$root/base", s"$root/tombstones", s"$root/delta")
     queries.Similarity.writeIvfSq8Index(spark, sf, st.base)
     val baseInv = inventory(st.base)
@@ -459,7 +459,7 @@ class IvmSpec extends AnyFunSuite {
     val schema = spark.read.parquet(s"$editDir/b1").schema
     val edits = spark.readStream.schema(schema)
       .option("recursiveFileLookup", "true").parquet(editDir)
-    val q = graft.streaming.Streams.maintainAnnIndex(edits, sf, st)
+    val q = queries.Ivm.annMaintain(edits, sf, st)
     try {
       q.processAllAvailable()
       // mid-stream: only the retract batch has landed (no delta segment
@@ -496,7 +496,7 @@ class IvmSpec extends AnyFunSuite {
     // so the SAME re-ingest batch landing twice (two delta segments with
     // identical content-addressed rows) must not change the probe —
     // the live composition dropDuplicates on the id
-    val q2 = graft.streaming.Streams.maintainAnnIndex(
+    val q2 = queries.Ivm.annMaintain(
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(editDir), sf, st)
     try {
@@ -513,7 +513,7 @@ class IvmSpec extends AnyFunSuite {
   test("ivm_bm25_stream / ivm_dedup_stream: streamed edits equal the batch edit on the text and dedup axes") {
     // text axis
     val broot = Engine.scratchDir("ivm_bm25str_spec_")
-    val bst = queries.Ivm.SegmentedIndexState(
+    val bst = sources.SegmentedIndex.State(
       s"$broot/base", s"$broot/tombstones", s"$broot/delta")
     queries.TextAnalysis.writeBm25Index(spark, sf, bst.base)
     val bschema = org.apache.spark.sql.types.StructType(Seq(
@@ -528,7 +528,7 @@ class IvmSpec extends AnyFunSuite {
     spark.sql("""SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(1 AS BIGINT) AS freq
                 |FROM documents WHERE doc_id % 26 = 0""".stripMargin)
       .write.parquet(s"$beDir/b2")
-    val bq = graft.streaming.Streams.maintainBm25Index(
+    val bq = queries.Ivm.bm25LsmMaintain(
       spark.readStream.schema(bschema)
         .option("recursiveFileLookup", "true").parquet(beDir), sf, bst)
     try bq.processAllAvailable() finally bq.stop()
@@ -542,7 +542,7 @@ class IvmSpec extends AnyFunSuite {
 
     // dedup axis
     val droot = Engine.scratchDir("ivm_dedupstr_spec_")
-    val dst = queries.Ivm.SegmentedIndexState(
+    val dst = sources.SegmentedIndex.State(
       s"$droot/base", s"$droot/tombstones", s"$droot/delta")
     queries.Dedup.writeBandIndex(spark, sf, dst.base)
     val deDir = Engine.scratchDir("ivm_dedupstr_spec_e_")
@@ -552,7 +552,7 @@ class IvmSpec extends AnyFunSuite {
     spark.sql("""SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(1 AS BIGINT) AS freq
                 |FROM dedup_sh WHERE doc_id % 4 = 0""".stripMargin)
       .write.parquet(s"$deDir/b2")
-    val dq = graft.streaming.Streams.maintainBandIndex(
+    val dq = queries.Ivm.dedupMaintain(
       spark.readStream.schema(bschema)
         .option("recursiveFileLookup", "true").parquet(deDir), sf, dst)
     try dq.processAllAvailable() finally dq.stop()
@@ -563,5 +563,34 @@ class IvmSpec extends AnyFunSuite {
       .collect().map(_.toString).toSeq
     assert(dStreamed.nonEmpty && dStreamed == dBatch,
       "streamed band-index edits diverged from the batch edit")
+  }
+
+  test("segment reader: data-less or missing edit segments serve as empty, unreadable ones raise") {
+    // The contract SegmentedIndex.segment keeps: only a segment that has
+    // not landed (missing, or a directory without data files) reads as
+    // empty; a segment whose files exist but cannot be read fails the
+    // probe instead of silently serving the base.
+    val root = Engine.scratchDir("graft_ivm_segread_spec_")
+    val st = sources.SegmentedIndex.State.under(root)
+    queries.Similarity.writeIvfSq8Index(spark, sf, st.base)
+    val baseOnly = queries.Similarity.probeIvfSq8Index(spark, sf, st.base)
+      .collect().map(_.toString).toSeq
+    def probe(): Seq[String] =
+      queries.Ivm.annRetractProbe(spark, sf, st).collect().map(_.toString).toSeq
+    val tomb = java.nio.file.Paths.get(st.tombstones)
+
+    // no tombstone or delta directory yet
+    assert(baseOnly.nonEmpty && probe() == baseOnly,
+      "missing edit segments changed the probe")
+
+    // a tombstone directory holding only _SUCCESS (the delta still missing)
+    java.nio.file.Files.createDirectories(tomb)
+    java.nio.file.Files.createFile(tomb.resolve("_SUCCESS"))
+    assert(probe() == baseOnly, "a data-less tombstone segment changed the probe")
+
+    // a corrupt part file in the tombstone segment
+    java.nio.file.Files.write(tomb.resolve("part-00000.parquet"),
+      "not a parquet file".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    intercept[org.apache.spark.SparkException](probe())
   }
 }
