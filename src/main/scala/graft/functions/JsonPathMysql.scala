@@ -192,8 +192,23 @@ object GraftFunctions {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions.{call_function, lit}
 
+  // function registries already filled, by identity; weak, so a dropped
+  // session's registry is collected. A session's set-up reaches register
+  // from Engine.build, new GraftSession and Engine.registerAll, and each
+  // repeat would replace every function (and log each replacement).
+  private val filled = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[AnyRef, java.lang.Boolean]())
+
+  /** Register every custom function in `spark`'s session; a no-op for a
+    * session whose registry this already filled. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
+    filled.synchronized {
+      if (!filled.contains(reg)) { fill(reg); filled.add(reg) }
+    }
+  }
+
+  private def fill(reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
     reg.createOrReplaceTempFunction(
       "json_extract_mysql", exprs => JsonExtractMysql(exprs(0), exprs(1)), "built-in")
     reg.createOrReplaceTempFunction(

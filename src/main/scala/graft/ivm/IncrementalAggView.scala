@@ -1,5 +1,6 @@
 package graft.ivm
 
+import graft.sources.{MultisetStore, StoredParquet}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,15 +19,23 @@ import org.apache.spark.sql.types._
   *     sums as Σ value×freq) persisted as versioned parquet snapshots;
   *   - refresh = union(state-partials, delta-partials) → one hash
   *     aggregation on the view key → new snapshot. Groups whose count
-  *     reaches zero vanish, i.e. full retraction semantics;
+  *     and sums all reach zero vanish, i.e. full retraction semantics; a
+  *     group whose count nets to zero while a sum does not (a retraction
+  *     that arrived before its insert) stays in state, hidden on read,
+  *     so the insert still nets out;
   *   - finalized values (avg = sum/count) are derived on read, so state
   *     stays mergeable — the same initialize/apply/merge/finalize split
   *     as the reference's AggregateFunction trait.
   *
-  * Scale: the refresh shuffles only |state ∪ delta-partials| rows keyed
-  * by the view key — independent of base-table size. With the state
+  * Scale: a refresh is ONE hash aggregation — each delta row is its own
+  * partial, unioned with the stored state — so it has one exchange,
+  * carrying |state| + |delta| rows pre-aggregated per map task and keyed
+  * by the view key, independent of base-table size. Building a refresh
+  * or read plan launches no Spark job: state is read with the schema its
+  * writer stored ([[graft.sources.StoredParquet]]). With the state
   * bucketed by key on a real cluster the merge is co-partitioned and the
-  * exchange disappears; at 100 TB the delta is the only new I/O.
+  * exchange disappears; at 100 TB the delta is the only new I/O. Every
+  * refresh writes a full snapshot; [[vacuum]] is the retention cut.
   */
 final class IncrementalAggView(
     spark: SparkSession,
@@ -37,6 +46,8 @@ final class IncrementalAggView(
   val freqCol = "__freq"
   private def sumName(c: String) = s"sum_$c"
   private var version: Int = -1
+  // oldest snapshot still on disk; [[vacuum]] moves it up to `version`
+  private var oldest: Int = 0
 
   private def versionDir(v: Int) = s"$statePath/v$v"
 
@@ -57,21 +68,38 @@ final class IncrementalAggView(
       else base.withColumn(freqCol, lit(1L))
     partials(withFreq).write.mode("overwrite").parquet(versionDir(0))
     version = 0
+    oldest = 0
   }
 
-  /** Apply one freq-annotated delta batch → next snapshot version. */
+  /** Apply one freq-annotated delta batch → next snapshot version. Each
+    * delta row is its own partial (cnt = freq, sum = value × freq),
+    * unioned with the stored state and merged by ONE aggregation on the
+    * view key. Groups whose count and sums all net to zero vanish. */
   def applyDelta(delta: DataFrame): Unit = {
     require(version >= 0, "view not initialized")
     require(delta.columns.contains(freqCol), s"delta needs $freqCol")
-    val state = spark.read.parquet(versionDir(version))
-    val merged = state.unionByName(partials(delta))
+    val rowPartials = delta.select(
+      keyCols.map(col) ++ (col(freqCol).cast(LongType).as("cnt") +:
+        sumCols.map(c => (col(c).cast(DecimalType(18, 2)) * col(freqCol))
+          .cast(DecimalType(38, 2)).as(sumName(c)))): _*)
+    val merged = StoredParquet.read(spark, versionDir(version)).unionByName(rowPartials)
       .groupBy(keyCols.map(col): _*)
       .agg(
         sum(col("cnt")).as("cnt"),
         sumCols.map(c => sum(col(sumName(c))).cast(DecimalType(38, 2)).as(sumName(c))): _*)
-      .filter(col("cnt") =!= 0)
+      .filter(sumCols.foldLeft(col("cnt") =!= 0)((keep, c) => keep || col(sumName(c)) =!= 0))
     merged.write.mode("overwrite").parquet(versionDir(version + 1))
     version += 1
+  }
+
+  /** Retention cut, mirroring [[graft.sources.MultisetStore.vacuum]]:
+    * delete every snapshot older than the current version. Ends time
+    * travel into them; safe once no reader holds a plan over them. */
+  def vacuum(): Unit = {
+    require(version >= 0, "view not initialized")
+    (oldest until version).foreach(v =>
+      MultisetStore.deleteRecursively(java.nio.file.Paths.get(versionDir(v))))
+    oldest = version
   }
 
   /** Finalized view: count, sums, and derived averages per key. */
@@ -80,17 +108,19 @@ final class IncrementalAggView(
   /** Time-travel read of any retained snapshot version — the Spark-side
     * analog of the reference's MVCC read-at-LogicalTimestamp scans
     * (/root/reference/src/storage/src/table.rs:128-171): every applyDelta
-    * produces an immutable version, so historical states stay queryable. */
+    * produces an immutable version, so historical states stay queryable
+    * until [[vacuum]] deletes them. */
   def at(v: Int): DataFrame = {
     require(version >= 0, "view not initialized")
-    require(v >= 0 && v <= version, s"version $v out of range [0, $version]")
-    val st = spark.read.parquet(versionDir(v))
+    require(v >= oldest && v <= version,
+      s"version $v out of the retained range [$oldest, $version]")
+    val st = StoredParquet.read(spark, versionDir(v))
     val finalCols =
       keyCols.map(col) ++ Seq(col("cnt")) ++
         sumCols.map(c => col(sumName(c))) ++
         sumCols.map(c =>
           (col(sumName(c)).cast(DoubleType) / col("cnt")).as(s"avg_$c"))
-    st.select(finalCols: _*)
+    st.filter(col("cnt") =!= 0).select(finalCols: _*)
   }
 
   def currentVersion: Int = version

@@ -1,5 +1,6 @@
 package graft.ivm
 
+import graft.sources.StoredParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,6 +30,8 @@ import org.apache.spark.sql.functions._
   * real cluster, bucket both side-stores by the join key: the delta
   * joins become co-partitioned and the only exchange left is the delta's
   * own repartition — at 100 TB the delta is the only new I/O per batch.
+  * Every state read is planned from the schema its writer stored
+  * ([[graft.sources.StoredParquet]]), so building a plan runs no job.
   */
 final class IncrementalJoinView(
     spark: SparkSession,
@@ -64,7 +67,8 @@ final class IncrementalJoinView(
     val b0 = compact(withFreq(b))
     a0.write.mode("overwrite").parquet(dir("a", 0))
     b0.write.mode("overwrite").parquet(dir("b", 0))
-    compact(joinFreq(spark.read.parquet(dir("a", 0)), spark.read.parquet(dir("b", 0))))
+    compact(joinFreq(StoredParquet.read(spark, dir("a", 0)),
+      StoredParquet.read(spark, dir("b", 0))))
       .write.mode("overwrite").parquet(dir("view", 0))
     version = 0
   }
@@ -79,8 +83,8 @@ final class IncrementalJoinView(
     * maintenance pipelines chain without ever recomputing upstream state. */
   def applyDelta(deltaA: Option[DataFrame], deltaB: Option[DataFrame]): DataFrame = {
     require(version >= 0, "view not initialized")
-    val oldA = spark.read.parquet(dir("a", version))
-    val oldB = spark.read.parquet(dir("b", version))
+    val oldA = StoredParquet.read(spark, dir("a", version))
+    val oldB = StoredParquet.read(spark, dir("b", version))
     val da = deltaA.map(withFreq)
     val db = deltaB.map(withFreq)
 
@@ -91,11 +95,11 @@ final class IncrementalJoinView(
 
     // ΔV = ΔA ⋈ B_new ∪ A_old ⋈ ΔB (read the just-written B_new back so
     // the delta joins run against compacted parquet, not a live plan)
-    val bNewStored = spark.read.parquet(dir("b", version + 1))
+    val bNewStored = StoredParquet.read(spark, dir("b", version + 1))
     val dViewParts =
       da.map(d => joinFreq(d, bNewStored)).toSeq ++
         db.map(d => joinFreq(oldA, d)).toSeq
-    val oldView = spark.read.parquet(dir("view", version))
+    val oldView = StoredParquet.read(spark, dir("view", version))
     val newView = dViewParts.foldLeft(oldView)(_ unionByName _)
     compact(newView).write.mode("overwrite").parquet(dir("view", version + 1))
     // persist ΔV so the returned frame reads a snapshot, not a live plan
@@ -105,7 +109,7 @@ final class IncrementalJoinView(
       .map(compact).getOrElse(oldView.limit(0))
     dView.write.mode("overwrite").parquet(dir("dview", version + 1))
     version += 1
-    spark.read.parquet(dir("dview", version))
+    StoredParquet.read(spark, dir("dview", version))
   }
 
   /** The maintained join view (freq-annotated) at the latest version. */
@@ -115,7 +119,7 @@ final class IncrementalJoinView(
   def at(v: Int): DataFrame = {
     require(version >= 0, "view not initialized")
     require(v >= 0 && v <= version, s"version $v out of range [0, $version]")
-    spark.read.parquet(dir("view", v))
+    StoredParquet.read(spark, dir("view", v))
   }
 
   def currentVersion: Int = version

@@ -31,7 +31,10 @@ import org.apache.spark.sql.functions._
   *     retained in state, as the reference retains it, so a retraction
   *     arriving before its insert nets out correctly).
   *
-  * Scale: the compaction merge is ONE hash aggregation keyed on the tuple
+  * Scale: building any read plan launches no Spark job — the scan's
+  * schema comes from the footer the engine wrote ([[StoredParquet]]), not
+  * from inference, so a statement pays only for the jobs it executes. The
+  * compaction merge is ONE hash aggregation keyed on the tuple
   * — the same shuffle a distinct would cost — and its input is
   * |state| + Σ|delta| where |state| is bounded by distinct tuples, not
   * inserts. Delta appends never touch existing state, so ingest cost is
@@ -88,19 +91,21 @@ object MultisetStore {
     * pending deltas on the fly. Single-snapshot chains skip the merge —
     * the common shape after compaction — so steady-state reads are a
     * plain parquet scan. A longer chain is ONE multi-path scan (one
-    * listing, one schema inference) rather than a union of per-version
-    * reads, so building the read plan costs the same at every chain
-    * length. Every version must carry the table's schema — GraftSession's
-    * INSERT and DELETE align each delta to it — since a multi-path scan
-    * does not widen types the way a union does. */
+    * listing) rather than a union of per-version reads, so building the
+    * read plan costs the same at every chain length. The scan is planned
+    * from the schema stored in the oldest version's footer
+    * ([[StoredParquet]]), so building it runs no Spark job. Every version
+    * must carry the table's schema — GraftSession's INSERT and DELETE
+    * align each delta to it — since a multi-path scan does not widen
+    * types the way a union does. */
   private def state(spark: SparkSession, path: String,
       upTo: Int = Int.MaxValue): Option[DataFrame] =
     chain(path, upTo) match {
       case Seq() => None
       case Seq(v) if !isDelta(path, v) =>
-        Some(spark.read.parquet(versionDir(path, v)))
+        Some(StoredParquet.read(spark, versionDir(path, v)))
       case vs =>
-        Some(mergeFreq(Seq(spark.read.parquet(vs.map(versionDir(path, _)): _*))))
+        Some(mergeFreq(Seq(StoredParquet.read(spark, vs.map(versionDir(path, _)): _*))))
     }
 
   private def normalize(df: DataFrame, freq: Long): DataFrame = {
@@ -231,7 +236,7 @@ object MultisetStore {
     }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.exists(p)) {
       val s = java.nio.file.Files.walk(p)

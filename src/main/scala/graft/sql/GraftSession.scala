@@ -661,14 +661,7 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
       multisets -= ((db, bare))
       spark.catalog.dropTempView(msMangled(db, bare))
       if (bareMsNames.contains(bare)) { spark.catalog.dropTempView(bare); bareMsNames -= bare }
-      // delete the chain
-      if (java.nio.file.Files.exists(path)) {
-        val s = java.nio.file.Files.walk(path)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.toVector.reverse.foreach(java.nio.file.Files.delete)
-        } finally s.close()
-      }
+      graft.sources.MultisetStore.deleteRecursively(path) // the chain
       spark.emptyDataFrame
     case dropTableRe(ifExists, name) =>
       spark.sql(s"DROP TABLE ${Option(ifExists).getOrElse("")}$name")
@@ -775,7 +768,7 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     // Stage through a temp path so the overwrite never reads its target.
     val tmp = java.nio.file.Files.createTempDirectory("graft_delete_").toString
     remaining.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").insertInto(table)
+    graft.sources.StoredParquet.read(spark, tmp).write.mode("overwrite").insertInto(table)
     spark.emptyDataFrame
   }
 
@@ -882,7 +875,7 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     }: _*)
     val tmp = java.nio.file.Files.createTempDirectory("graft_update_").toString
     projected.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").insertInto(table)
+    graft.sources.StoredParquet.read(spark, tmp).write.mode("overwrite").insertInto(table)
     spark.emptyDataFrame
   }
 
@@ -984,7 +977,7 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     val result = inserted.map(keptUpdated.unionByName(_)).getOrElse(keptUpdated)
     val tmp = java.nio.file.Files.createTempDirectory("graft_merge_").toString
     result.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").insertInto(table)
+    graft.sources.StoredParquet.read(spark, tmp).write.mode("overwrite").insertInto(table)
     spark.emptyDataFrame
   }
 
