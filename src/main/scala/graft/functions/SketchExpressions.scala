@@ -1266,8 +1266,8 @@ case class PqEncode(left: Expression, right: Expression)
       val outer = ctx.freshName("outer")
       s"""
          |int $m = $cb.numElements() / 16;
-         |if ($m == 0 || $cb.numElements() % 16 != 0
-         |    || $v.numElements() % $m != 0) { ${ev.isNull} = true; }
+         |if ($m == 0 || $cb.numElements() % 16 != 0 ||
+         |    $v.numElements() % $m != 0) { ${ev.isNull} = true; }
          |for (int $i = 0; !${ev.isNull} && $i < $v.numElements(); $i++) {
          |  if ($v.isNullAt($i)) { ${ev.isNull} = true; }
          |}

@@ -26,6 +26,9 @@ import org.apache.spark.sql.functions._
   *     `autoCompactDeltas` deltas accumulate, like a size-tiered LSM);
   *   - [[append]] is the eager path — merge-on-write, one-version chain —
   *     for callers that read far more often than they write (IVM state);
+  *   - a write may name `measures`: columns summed per tuple like
+  *     `__freq` rather than part of the tuple's identity (an aggregate
+  *     view's `sum_*` partials), so one store holds IVM state too;
   *   - `read` expands `__freq` copies per tuple (freq ≤ 0 rows yield
   *     nothing, matching the reference's read path; negative freq is
   *     retained in state, as the reference retains it, so a retraction
@@ -79,12 +82,18 @@ object MultisetStore {
     }
   }
 
-  private def mergeFreq(parts: Seq[DataFrame]): DataFrame = {
+  /** Merge per tuple: a row's identity is its non-freq, non-measure
+    * columns; `__freq` and every measure are summed (each measure keeps
+    * its stored type). A row goes only once its freq AND every measure
+    * net to zero, so a retraction that arrives before its insert with a
+    * different measure value still nets out when the insert lands. */
+  private def mergeFreq(parts: Seq[DataFrame], measures: Seq[String] = Nil): DataFrame = {
     val unioned = parts.reduce(_ unionByName _)
-    val dataCols = unioned.columns.filter(_ != freqCol).toIndexedSeq
-    unioned.groupBy(dataCols.map(col): _*)
-      .agg(sum(col(freqCol)).as(freqCol))
-      .filter(col(freqCol) =!= 0L) // fully-retracted tuples compact away
+    val identity = unioned.columns.filterNot(c => c == freqCol || measures.contains(c)).toIndexedSeq
+    unioned.groupBy(identity.map(col): _*)
+      .agg(sum(col(freqCol)).as(freqCol),
+        measures.map(m => sum(col(m)).cast(unioned.schema(m).dataType).as(m)): _*)
+      .filter(measures.foldLeft(col(freqCol) =!= 0L)((keep, m) => keep || col(m) =!= 0))
   }
 
   /** Current logical state (one row per distinct tuple + freq), merging
@@ -99,13 +108,13 @@ object MultisetStore {
     * align each delta to it — since a multi-path scan does not widen
     * types the way a union does. */
   private def state(spark: SparkSession, path: String,
-      upTo: Int = Int.MaxValue): Option[DataFrame] =
+      upTo: Int = Int.MaxValue, measures: Seq[String] = Nil): Option[DataFrame] =
     chain(path, upTo) match {
       case Seq() => None
       case Seq(v) if !isDelta(path, v) =>
         Some(StoredParquet.read(spark, versionDir(path, v)))
       case vs =>
-        Some(mergeFreq(Seq(StoredParquet.read(spark, vs.map(versionDir(path, _)): _*))))
+        Some(mergeFreq(Seq(StoredParquet.read(spark, vs.map(versionDir(path, _)): _*)), measures))
     }
 
   private def normalize(df: DataFrame, freq: Long): DataFrame = {
@@ -127,10 +136,10 @@ object MultisetStore {
     * rename/conditional-put — the same discipline every file-commit
     * protocol needs there.
     */
-  private def claimNextVersion(path: String)(build: java.nio.file.Path => Unit): Unit = {
-    var committed = false
+  private def claimNextVersion(path: String)(build: java.nio.file.Path => Unit): Int = {
+    var committed = -1
     var attempts = 0
-    while (!committed) {
+    while (committed < 0) {
       attempts += 1
       require(attempts <= 20, s"multiset write at $path lost the version race 20 times")
       val next = versionsOf(path).lastOption.map(_ + 1).getOrElse(0)
@@ -141,7 +150,7 @@ object MultisetStore {
       try {
         java.nio.file.Files.move(staging, target,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        committed = true
+        committed = next
       } catch {
         case _: java.nio.file.FileAlreadyExistsException
              | _: java.nio.file.FileSystemException =>
@@ -150,36 +159,42 @@ object MultisetStore {
             s"atomic rename to $target failed but the version is unclaimed")
       }
     }
+    committed
   }
 
   /** Eager merge-on-write: folds `df` (each row weighted `freq`; +1 =
     * insert, −1 = single-copy delete — NegateFreq) and any pending deltas
     * into a fresh one-version snapshot. O(|state|) per call; use
-    * [[appendDelta]] on write-heavy paths. */
-  def append(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L): Unit = {
+    * [[appendDelta]] on write-heavy paths. `measures` are summed per
+    * tuple like `__freq` (see [[mergeFreq]]). */
+  def append(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L,
+      measures: Seq[String] = Nil): Unit = {
     val delta = normalize(df, freq)
     claimNextVersion(path) { staging =>
       // base re-read inside the claim loop: a lost race re-merges on the
       // winner's state, so no concurrent append is dropped
-      val merged = state(spark, path) match {
-        case None       => mergeFreq(Seq(delta))
-        case Some(base) => mergeFreq(Seq(base, delta))
+      val merged = state(spark, path, measures = measures) match {
+        case None       => mergeFreq(Seq(delta), measures)
+        case Some(base) => mergeFreq(Seq(base, delta), measures)
       }
       merged.write.mode("overwrite").parquet(staging.toString)
     }
   }
 
   /** LSM write path: persist ONLY the delta — O(|delta|) I/O regardless
-    * of table size. Reads merge pending deltas on the fly; once
-    * [[autoCompactDeltas]] deltas accumulate the chain is folded into a
-    * new snapshot so merge-on-read cost stays bounded. */
-  def appendDelta(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L): Unit = {
+    * of table size — and return the version it committed. Reads merge
+    * pending deltas on the fly; once [[autoCompactDeltas]] deltas
+    * accumulate the chain is folded into a new snapshot (the version
+    * after the returned one) so merge-on-read cost stays bounded. */
+  def appendDelta(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L,
+      measures: Seq[String] = Nil): Int = {
     val delta = normalize(df, freq)
-    claimNextVersion(path) { staging =>
+    val v = claimNextVersion(path) { staging =>
       delta.write.mode("overwrite").parquet(staging.toString)
       java.nio.file.Files.createFile(staging.resolve(deltaMarker))
     }
-    if (chain(path).count(isDelta(path, _)) >= autoCompactDeltas) compact(spark, path)
+    if (chain(path).count(isDelta(path, _)) >= autoCompactDeltas) compact(spark, path, measures)
+    v
   }
 
   private def tokenFile(token: String) =
@@ -219,8 +234,8 @@ object MultisetStore {
   /** Fold the snapshot-plus-deltas chain into a single fresh snapshot
     * version (the LSM compaction step). Older versions stay on disk for
     * in-flight readers until [[vacuum]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    state(spark, path).foreach { merged =>
+  def compact(spark: SparkSession, path: String, measures: Seq[String] = Nil): Unit =
+    state(spark, path, measures = measures).foreach { merged =>
       claimNextVersion(path) { staging =>
         merged.write.mode("overwrite").parquet(staging.toString)
       }
@@ -258,8 +273,8 @@ object MultisetStore {
 
   /** The compacted logical state: one row per distinct tuple + freq
     * (pending deltas merged on the fly). */
-  def snapshot(spark: SparkSession, path: String): DataFrame =
-    state(spark, path).getOrElse(
+  def snapshot(spark: SparkSession, path: String, measures: Seq[String] = Nil): DataFrame =
+    state(spark, path, measures = measures).getOrElse(
       throw new IllegalStateException(s"no multiset snapshot at $path"))
 
   /** All version ids currently on disk, oldest first. */
@@ -273,8 +288,9 @@ object MultisetStore {
     * the current-state read does. (The reference's RocksDB storage holds
     * the analogous property internally via sequence numbers; here it is
     * surfaced as a first-class read API.) */
-  def snapshotAt(spark: SparkSession, path: String, version: Int): DataFrame =
-    state(spark, path, version).getOrElse(
+  def snapshotAt(spark: SparkSession, path: String, version: Int,
+      measures: Seq[String] = Nil): DataFrame =
+    state(spark, path, version, measures).getOrElse(
       throw new IllegalStateException(s"no multiset version <= $version at $path"))
 
   /** [[read]] against the state as of `version`: `__freq` copies per
@@ -290,17 +306,24 @@ object MultisetStore {
     * two endpoints contributes nothing, because compaction changes layout,
     * not state (MultisetStoreSpec pins that, plus the reconciliation law
     * state(from) ⊎ changes = state(to)). `fromVersion = -1` reads the
-    * feed from the beginning of history. */
+    * feed from the beginning of history. When every version in
+    * (from, to] is a delta, the feed is just those deltas merged: no
+    * state is read, so the feed of one delta append costs O(|delta|). */
   def changes(spark: SparkSession, path: String,
       fromVersion: Int, toVersion: Int): DataFrame = {
     require(fromVersion < toVersion,
       s"changes needs fromVersion < toVersion, got [$fromVersion, $toVersion]")
-    val to = state(spark, path, toVersion).getOrElse(
-      throw new IllegalStateException(s"no multiset version <= $toVersion at $path"))
-    state(spark, path, fromVersion) match {
-      case None => to
-      case Some(from) =>
-        mergeFreq(Seq(to, from.withColumn(freqCol, -col(freqCol))))
+    val between = (fromVersion + 1) to toVersion
+    if (between.forall(isDelta(path, _)))
+      mergeFreq(Seq(StoredParquet.read(spark, between.map(versionDir(path, _)): _*)))
+    else {
+      val to = state(spark, path, toVersion).getOrElse(
+        throw new IllegalStateException(s"no multiset version <= $toVersion at $path"))
+      state(spark, path, fromVersion) match {
+        case None => to
+        case Some(from) =>
+          mergeFreq(Seq(to, from.withColumn(freqCol, -col(freqCol))))
+      }
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ivm.IncrementalAggView
+import graft.sources.MultisetStore
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -189,8 +190,15 @@ class IvmSpec extends AnyFunSuite {
 
   test("randomized delta histories: maintained join view equals from-scratch recompute") {
     import spark.implicits._
-    // seeded RNG → deterministic test; three independent histories
-    for (seed <- Seq(7, 23, 99)) {
+    def tuples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    // seeded RNG → deterministic test; four independent histories. The
+    // last runs more than 2 × autoCompactDeltas batches, so every store
+    // compacts twice mid-sequence; it is vacuumed partway through and at
+    // the end, where each store must be cut back to its latest snapshot
+    // and pending deltas.
+    val longRun = 2 * MultisetStore.autoCompactDeltas + 1
+    for ((seed, batches) <- Seq(7 -> 3, 23 -> 3, 99 -> 3, 2026 -> longRun)) {
       val rnd = new scala.util.Random(seed)
       def randRel(vals: Seq[String]): Seq[(Int, String, Long)] =
         Seq.fill(rnd.nextInt(12) + 4)(
@@ -207,26 +215,46 @@ class IvmSpec extends AnyFunSuite {
       // accumulate the ground-truth multisets as plain maps
       var aTruth = a0.groupBy(identity).view.mapValues(_.size.toLong).toMap
       var bTruth = b0.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      for (_ <- 0 until 3) {
+      def recompute() = (for {
+        ((ka, av), fa) <- aTruth.toSeq if fa != 0
+        ((kb, bv), fb) <- bTruth.toSeq if ka == kb && fb != 0
+      } yield ((ka, av, bv), fa * fb))
+        .groupBy(_._1).view.mapValues(_.map(_._2).sum).filter(_._2 != 0)
+        .map { case ((k, av, bv), f) => (k, av, bv, f) }.toSet
+      for (i <- 1 to batches) {
         val da = randRel((0 to 3).map(i => s"a$i"))
         val db = randRel((0 to 3).map(i => s"b$i"))
-        view.applyDelta(
+        val prev = view.currentVersion
+        val dv = view.applyDelta(
           Some(da.toDF("k", "av", view.freqCol)),
           Some(db.toDF("k", "bv", view.freqCol)))
         da.foreach { case (k, v, f) =>
           aTruth = aTruth.updated((k, v), aTruth.getOrElse((k, v), 0L) + f) }
         db.foreach { case (k, v, f) =>
           bTruth = bTruth.updated((k, v), bTruth.getOrElse((k, v), 0L) + f) }
+        // V(prev) ⊎ ΔV = V(now), and V(now) is the recompute
+        val reconciled = (tuples(view.at(prev)) ++ tuples(dv))
+          .groupBy(t => (t._1, t._2, t._3)).view.mapValues(_.map(_._4).sum)
+          .filter(_._2 != 0).map { case ((k, av, bv), f) => (k, av, bv, f) }.toSet
+        val now = tuples(view.at(view.currentVersion)).toSet
+        assert(reconciled == now, s"seed $seed batch $i: V($prev) ⊎ ΔV != V(${view.currentVersion})")
+        assert(now == recompute(), s"seed $seed batch $i diverged from the recompute")
+        if (i == 10) view.vacuum()
       }
-      aTruth = aTruth.filter(_._2 != 0); bTruth = bTruth.filter(_._2 != 0)
-      val expected = (for {
-        ((ka, av), fa) <- aTruth.toSeq
-        ((kb, bv), fb) <- bTruth.toSeq if ka == kb
-      } yield ((ka, av, bv), fa * fb))
-        .groupBy(_._1).view.mapValues(_.map(_._2).sum).filter(_._2 != 0)
-        .map { case ((k, av, bv), f) => (k, av, bv, f) }.toSet
-      val got = view.current().collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+      if (batches == longRun) {
+        // each compaction is a version of its own: more versions than batches
+        assert(view.currentVersion > batches, s"seed $seed: no compaction landed")
+        view.vacuum()
+        assert(new java.io.File(statePath).list().sorted.toSeq == Seq("a", "b", "view"),
+          "a state directory besides the three stores")
+        for (store <- Seq("a", "b", "view")) {
+          val kept = MultisetStore.versions(s"$statePath/$store")
+          assert(kept.nonEmpty && kept.size <= MultisetStore.autoCompactDeltas,
+            s"$store/ kept versions $kept after vacuum")
+        }
+      }
+      val expected = recompute()
+      val got = tuples(view.current()).toSet
       assert(got == expected, s"seed $seed diverged")
     }
   }

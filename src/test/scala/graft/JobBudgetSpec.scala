@@ -58,6 +58,19 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(jobsDuring(MultisetStore.read(spark, p)) == 0)
   }
 
+  test("MultisetStore.changes between adjacent delta versions plans with 0 jobs and reads only the delta") {
+    val p = tmp("graft_budget_feed_") + "/t"
+    MultisetStore.append(spark, p, Seq((1, "a"), (2, "b")).toDF("k", "v"))
+    MultisetStore.appendDelta(spark, p, Seq((3, "c")).toDF("k", "v"))
+    val v = MultisetStore.appendDelta(spark, p, Seq((1, "a")).toDF("k", "v"), freq = -1L)
+    assert(v == 2)
+    assert(jobsDuring(MultisetStore.changes(spark, p, 1, 2)) == 0)
+    val feed = MultisetStore.changes(spark, p, 1, 2)
+    assert(feed.inputFiles.nonEmpty && feed.inputFiles.forall(_.contains("/t/v2/")),
+      feed.inputFiles.mkString("\n"))
+    assert(feed.collect().map(_.toString).toSeq == Seq("[1,a,-1]"))
+  }
+
   test("IncrementalAggView.current() and IncrementalJoinView.current() plan with 0 jobs") {
     val agg = new IncrementalAggView(spark, Seq("k"), Seq("v"), tmp("graft_budget_agg_"))
     agg.initialize(Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v"))

@@ -111,6 +111,31 @@ class PqSpec extends AnyFunSuite {
     assert(adc.getLong(0) == adc.getLong(1), "pq_adc diverged from the aggregate() fold")
   }
 
+  test("pq_encode's generated Java compiles: codegen-only equals interpreted") {
+    // CODEGEN_ONLY and no whole-stage fallback make a compile failure of
+    // the kernel's generated code raise, where the defaults would log it
+    // and quietly evaluate the interpreted path instead
+    val q = """SELECT id, pq_encode(
+              |  transform(sequence(0, 15), i -> CAST((id * 7 + i * 13) % 50 AS BIGINT)),
+              |  transform(sequence(0, 31), j -> transform(sequence(0, 7),
+              |    d -> CAST((j * 11 + d * 5) % 50 AS BIGINT)))) AS cw
+              |FROM range(0, 64)""".stripMargin
+    def run(conf: (String, String)*): Seq[String] = {
+      val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try spark.sql(q).collect().map(_.toString).sorted.toSeq
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val compiled = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(compiled.size == 64 && compiled == interpreted)
+  }
+
   test("recall@10 vs exact brute force holds the measured floor") {
     // The quality bar at the default widths (nProbe=4/16 cells,
     // rerank=50, m=8 x ks=16 sampled codebooks) on the gate corpus.
