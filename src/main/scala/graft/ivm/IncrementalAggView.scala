@@ -46,8 +46,7 @@ final class IncrementalAggView(
   private def sumName(c: String) = s"sum_$c"
   private val measures = sumCols.map(sumName)
 
-  /** Build v0 state from a base table (implicit freq = 1 per row) in an
-    * emptied `statePath`. */
+  /** Build v0 state from `base` (implicit freq = 1 per row) in an emptied `statePath`. */
   def initialize(base: DataFrame): Unit = {
     MultisetStore.deleteRecursively(java.nio.file.Paths.get(statePath))
     merge(if (base.columns.contains(freqCol)) base else base.withColumn(freqCol, lit(1L)))
@@ -67,8 +66,7 @@ final class IncrementalAggView(
         sumCols.map(c => (col(c).cast(DecimalType(18, 2)) * col(freqCol))
           .cast(DecimalType(38, 2)).as(sumName(c)))): _*), measures = measures)
 
-  /** Delete every snapshot older than the current one; ends time travel
-    * into them. */
+  /** Drop every snapshot older than the current one; ends time travel into them. */
   def vacuum(): Unit = MultisetStore.vacuum(statePath)
 
   /** Finalized view: count, sums, and derived averages per key. */
@@ -78,7 +76,7 @@ final class IncrementalAggView(
     * reference's MVCC read-at-LogicalTimestamp scans
     * (storage/src/table.rs:128-171). */
   def at(v: Int): DataFrame =
-    ViewStore.at(spark, statePath, v, measures).filter(col(freqCol) =!= 0).select(
+    ViewStore.at(spark, statePath, v).filter(col(freqCol) =!= 0).select(
       keyCols.map(col) ++ Seq(col(freqCol).as("cnt")) ++ measures.map(col) ++
         sumCols.map(c => (col(sumName(c)).cast(DoubleType) / col(freqCol)).as(s"avg_$c")): _*)
 

@@ -35,21 +35,20 @@ final class IncrementalExtremaView(
 
   /** Build v0 state from a base table (implicit freq = 1 per row). */
   def initialize(base: DataFrame): Unit = applyDelta(
-    if (base.columns.contains(freqCol)) base else base.withColumn(freqCol, lit(1L)))
+    if (base.columns.contains(freqCol)) base
+    else base.withColumn(freqCol, lit(1L)))
 
   /** Merge a freq-annotated change set (+n insert, −n retract). */
   def applyDelta(delta: DataFrame): Unit =
     MultisetStore.append(spark, statePath,
       delta.select((stateCols :+ freqCol).map(col): _*))
 
-  // the (key, value) pairs present in the multiset
-  private def live: DataFrame =
-    MultisetStore.snapshot(spark, statePath).filter(col(freqCol) > 0L)
-
   /** Current min/max per key. Keys whose multiset retracted to empty
     * vanish, like the reference's zero-freq groups. */
   def current(): DataFrame =
-    live.groupBy(keyCols.map(col): _*)
+    MultisetStore.snapshot(spark, statePath)
+      .filter(col(freqCol) > 0L)
+      .groupBy(keyCols.map(col): _*)
       .agg(min(col(valCol)).as(s"min_$valCol"), max(col(valCol)).as(s"max_$valCol"))
 
   /** Current COUNT(DISTINCT value) per key — retractable for the same
@@ -59,7 +58,9 @@ final class IncrementalExtremaView(
     * distinct (key, value) (MultisetStore's write contract), so the
     * read is a plain count — no distinct aggregation re-runs. */
   def distinctCounts(): DataFrame =
-    live.groupBy(keyCols.map(col): _*)
+    MultisetStore.snapshot(spark, statePath)
+      .filter(col(freqCol) > 0L)
+      .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as(s"n_distinct_$valCol"))
 
   /** Current top-k DISTINCT values per key, largest first — the natural
@@ -73,7 +74,9 @@ final class IncrementalExtremaView(
   def topK(k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*).orderBy(col(valCol).desc)
-    live.withColumn("rnk", row_number().over(w))
+    MultisetStore.snapshot(spark, statePath)
+      .filter(col(freqCol) > 0L)
+      .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select((keyCols.map(col) :+ col(valCol) :+ col("rnk").cast("int").as("rnk")): _*)
   }

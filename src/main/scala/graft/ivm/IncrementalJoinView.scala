@@ -25,13 +25,14 @@ import org.apache.spark.sql.functions._
   * O(|Δ|); each store folds `autoCompactDeltas` pending deltas into a
   * snapshot, so state is bounded by distinct tuples, and [[vacuum]] drops
   * what precedes each store's latest snapshot. The refresh joins ONLY
-  * the deltas against the other side's state — per-batch cost is
+  * the deltas against the other side's state, which it reads by merging
+  * at most `autoCompactDeltas` pending deltas — per-batch cost is
   * |Δ| × matching-state, independent of history — and the ΔV it returns
   * is the view store's change feed, read from that delta alone. Bucketing
   * both side-stores by the join key on a real cluster co-partitions the
   * delta joins. Plans are built from stored footers, with no job
   * ([[graft.sources.StoredParquet]]). The three stores commit one after
-  * another, not as one step.
+  * another, not as one step. Measured cost: SCALE.md, "Streaming / IVM".
   */
 final class IncrementalJoinView(
     spark: SparkSession,
@@ -58,8 +59,7 @@ final class IncrementalJoinView(
     MultisetStore.changes(spark, path, v - 1, v)
   }
 
-  /** Build v0 of all three stores (implicit freq = 1 per row) in an
-    * emptied `statePath`. */
+  /** Build v0 of all three stores (implicit freq = 1 per row) in an emptied `statePath`. */
   def initialize(a: DataFrame, b: DataFrame): Unit = {
     MultisetStore.deleteRecursively(java.nio.file.Paths.get(statePath))
     MultisetStore.append(spark, aPath, a)
@@ -73,7 +73,9 @@ final class IncrementalJoinView(
     * Returns ΔV, the view's own freq-compacted change set for this batch —
     * downstream freq-delta consumers (an [[IncrementalAggView]] keyed on
     * view columns, another join) compose by feeding on it, so view
-    * maintenance pipelines chain without ever recomputing upstream state. */
+    * maintenance pipelines chain without ever recomputing upstream state.
+    * ΔV is a plan over the view store's newest version; consume it before
+    * the next [[vacuum]], which may delete that version's files. */
   def applyDelta(deltaA: Option[DataFrame], deltaB: Option[DataFrame]): DataFrame = {
     require(currentVersion >= 0, "view not initialized")
     // planned before ΔA lands: a plan keeps the version dirs it listed

@@ -12,17 +12,16 @@ private[ivm] object ViewStore {
   def latest(path: String): Int = MultisetStore.versions(path).lastOption.getOrElse(-1)
 
   /** State as of retained version `v`, between the oldest and latest on disk. */
-  def at(spark: SparkSession, path: String, v: Int, measures: Seq[String] = Nil): DataFrame = {
+  def at(spark: SparkSession, path: String, v: Int): DataFrame = {
     val vs = MultisetStore.versions(path)
     require(vs.nonEmpty, "view not initialized")
     require(v >= vs.head && v <= vs.last,
       s"version $v out of the retained range [${vs.head}, ${vs.last}]")
-    MultisetStore.snapshotAt(spark, path, v, measures)
+    MultisetStore.snapshotAt(spark, path, v)
   }
 
-  /** One `apply` per non-empty micro-batch of a freq-annotated delta
-    * stream — foreachBatch gives the refresh loop the reference's storage
-    * layer was being built for (storage.rs:34-63 log-section design). */
+  /** One `apply` per non-empty micro-batch of a freq-annotated delta stream:
+    * the refresh loop of the reference's storage.rs:34-63 log-section design. */
   def maintain(deltaStream: DataFrame)(apply: DataFrame => Unit): StreamingQuery =
     deltaStream.writeStream
       .outputMode("append")

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
 
 /** Freq-compacting multiset table — the reference's storage model for
@@ -26,7 +27,7 @@ import org.apache.spark.sql.functions._
   *     `autoCompactDeltas` deltas accumulate, like a size-tiered LSM);
   *   - [[append]] is the eager path — merge-on-write, one-version chain —
   *     for callers that read far more often than they write (IVM state);
-  *   - a write may name `measures`: columns summed per tuple like
+  *   - an [[append]] may name `measures`: columns summed per tuple like
   *     `__freq` rather than part of the tuple's identity (an aggregate
   *     view's `sum_*` partials), so one store holds IVM state too;
   *   - `read` expands `__freq` copies per tuple (freq ≤ 0 rows yield
@@ -104,17 +105,17 @@ object MultisetStore {
     * read plan costs the same at every chain length. The scan is planned
     * from the schema stored in the oldest version's footer
     * ([[StoredParquet]]), so building it runs no Spark job. Every version
-    * must carry the table's schema — GraftSession's INSERT and DELETE
-    * align each delta to it — since a multi-path scan does not widen
-    * types the way a union does. */
+    * of a chain carries the same schema — [[appendDelta]] fits each delta
+    * to it — since a multi-path scan does not widen types the way a union
+    * does. */
   private def state(spark: SparkSession, path: String,
-      upTo: Int = Int.MaxValue, measures: Seq[String] = Nil): Option[DataFrame] =
+      upTo: Int = Int.MaxValue): Option[DataFrame] =
     chain(path, upTo) match {
       case Seq() => None
       case Seq(v) if !isDelta(path, v) =>
         Some(StoredParquet.read(spark, versionDir(path, v)))
       case vs =>
-        Some(mergeFreq(Seq(StoredParquet.read(spark, vs.map(versionDir(path, _)): _*)), measures))
+        Some(mergeFreq(Seq(StoredParquet.read(spark, vs.map(versionDir(path, _)): _*))))
     }
 
   private def normalize(df: DataFrame, freq: Long): DataFrame = {
@@ -164,16 +165,20 @@ object MultisetStore {
 
   /** Eager merge-on-write: folds `df` (each row weighted `freq`; +1 =
     * insert, −1 = single-copy delete — NegateFreq) and any pending deltas
-    * into a fresh one-version snapshot. O(|state|) per call; use
-    * [[appendDelta]] on write-heavy paths. `measures` are summed per
-    * tuple like `__freq` (see [[mergeFreq]]). */
+    * into a fresh one-version snapshot, and returns that version.
+    * O(|state|) per call; use [[appendDelta]] on write-heavy paths. The
+    * merge is a union, so it widens the stored types to fit `df`'s.
+    * `measures` are summed per tuple like `__freq` (see [[mergeFreq]]); a
+    * store written with measures must be written only by `append`, which
+    * keeps its chain one snapshot long — no other read or write merges
+    * measures. */
   def append(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L,
-      measures: Seq[String] = Nil): Unit = {
+      measures: Seq[String] = Nil): Int = {
     val delta = normalize(df, freq)
     claimNextVersion(path) { staging =>
       // base re-read inside the claim loop: a lost race re-merges on the
       // winner's state, so no concurrent append is dropped
-      val merged = state(spark, path, measures = measures) match {
+      val merged = state(spark, path) match {
         case None       => mergeFreq(Seq(delta), measures)
         case Some(base) => mergeFreq(Seq(base, delta), measures)
       }
@@ -185,17 +190,41 @@ object MultisetStore {
     * of table size — and return the version it committed. Reads merge
     * pending deltas on the fly; once [[autoCompactDeltas]] deltas
     * accumulate the chain is folded into a new snapshot (the version
-    * after the returned one) so merge-on-read cost stays bounded. */
-  def appendDelta(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L,
-      measures: Seq[String] = Nil): Int = {
+    * after the returned one) so merge-on-read cost stays bounded.
+    *
+    * The delta is cast by name to the stored schema, which every version
+    * of a chain shares. A delta whose types would narrow there (a bigint
+    * against an int column, a wider decimal) is merged on write instead
+    * ([[append]]), which widens the stored schema: that one write costs
+    * O(|state|), and the version it returns is a snapshot. */
+  def appendDelta(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L): Int = {
     val delta = normalize(df, freq)
-    val v = claimNextVersion(path) { staging =>
-      delta.write.mode("overwrite").parquet(staging.toString)
-      java.nio.file.Files.createFile(staging.resolve(deltaMarker))
+    fitted(spark, path, delta) match {
+      case None => append(spark, path, delta)
+      case Some(fit) =>
+        val v = claimNextVersion(path) { staging =>
+          fit.write.mode("overwrite").parquet(staging.toString)
+          java.nio.file.Files.createFile(staging.resolve(deltaMarker))
+        }
+        if (chain(path).count(isDelta(path, _)) >= autoCompactDeltas) compact(spark, path)
+        v
     }
-    if (chain(path).count(isDelta(path, _)) >= autoCompactDeltas) compact(spark, path, measures)
-    v
   }
+
+  /** `delta` cast by name to the schema of the latest version at `path`
+    * (as is, on an empty store), or None if a column would narrow. */
+  private def fitted(spark: SparkSession, path: String, delta: DataFrame): Option[DataFrame] =
+    versionsOf(path).lastOption match {
+      case None => Some(delta)
+      case Some(v) =>
+        val stored = StoredParquet.schema(spark, versionDir(path, v))
+        require(stored.fieldNames.sorted.sameElements(delta.columns.sorted),
+          s"delta columns [${delta.columns.mkString(", ")}] do not match " +
+            s"[${stored.fieldNames.mkString(", ")}] stored at $path")
+        if (stored.forall(f => Cast.canUpCast(delta.schema(f.name).dataType, f.dataType)))
+          Some(delta.select(stored.map(f => col(f.name).cast(f.dataType)): _*))
+        else None
+    }
 
   private def tokenFile(token: String) =
     "_TOKEN_" + token.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -234,8 +263,8 @@ object MultisetStore {
   /** Fold the snapshot-plus-deltas chain into a single fresh snapshot
     * version (the LSM compaction step). Older versions stay on disk for
     * in-flight readers until [[vacuum]]. */
-  def compact(spark: SparkSession, path: String, measures: Seq[String] = Nil): Unit =
-    state(spark, path, measures = measures).foreach { merged =>
+  def compact(spark: SparkSession, path: String): Unit =
+    state(spark, path).foreach { merged =>
       claimNextVersion(path) { staging =>
         merged.write.mode("overwrite").parquet(staging.toString)
       }
@@ -273,8 +302,8 @@ object MultisetStore {
 
   /** The compacted logical state: one row per distinct tuple + freq
     * (pending deltas merged on the fly). */
-  def snapshot(spark: SparkSession, path: String, measures: Seq[String] = Nil): DataFrame =
-    state(spark, path, measures = measures).getOrElse(
+  def snapshot(spark: SparkSession, path: String): DataFrame =
+    state(spark, path).getOrElse(
       throw new IllegalStateException(s"no multiset snapshot at $path"))
 
   /** All version ids currently on disk, oldest first. */
@@ -288,9 +317,8 @@ object MultisetStore {
     * the current-state read does. (The reference's RocksDB storage holds
     * the analogous property internally via sequence numbers; here it is
     * surfaced as a first-class read API.) */
-  def snapshotAt(spark: SparkSession, path: String, version: Int,
-      measures: Seq[String] = Nil): DataFrame =
-    state(spark, path, version, measures).getOrElse(
+  def snapshotAt(spark: SparkSession, path: String, version: Int): DataFrame =
+    state(spark, path, version).getOrElse(
       throw new IllegalStateException(s"no multiset version <= $version at $path"))
 
   /** [[read]] against the state as of `version`: `__freq` copies per

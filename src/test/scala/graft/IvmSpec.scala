@@ -188,6 +188,41 @@ class IvmSpec extends AnyFunSuite {
     assert(tuples(dv).toSet == Set((1, "x", "B1", -1L), (3, "z", "B3", 2L)))
   }
 
+  test("join view deltas of a wider column type widen the stored state") {
+    import spark.implicits._
+    val statePath = java.nio.file.Files
+      .createTempDirectory("ivm_wide_spec_").resolve("s").toString
+    val view = new graft.ivm.IncrementalJoinView(spark, Seq("k"), statePath)
+    view.initialize(
+      Seq((1, "x"), (2, "y")).toDF("k", "av"),
+      Seq((1, "1.50"), (2, "2.25")).toDF("k", "bv")
+        .withColumn("bv", col("bv").cast("decimal(12,2)")))
+    def tuples(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[Number](0).longValue, r.getString(1),
+        r.getDecimal(2).setScale(2).toPlainString, r.getLong(3))).toSet
+    // a bigint key against the int state: a/ cannot narrow it, so it widens
+    val dv1 = view.applyDelta(
+      Some(Seq((1L, "z", 1L), (3L, "w", 1L)).toDF("k", "av", view.freqCol)), None)
+    assert(tuples(dv1) == Set((1L, "z", "1.50", 1L)))
+    assert(tuples(view.current()) ==
+      Set((1L, "x", "1.50", 1L), (2L, "y", "2.25", 1L), (1L, "z", "1.50", 1L)))
+    // a price doubled as ivm_join doubles o_totalprice: decimal(14,2)
+    // against the stored decimal(12,2)
+    val dv2 = view.applyDelta(None, Some(
+      Seq((3, "4.00", 1L), (1, "0.75", -1L)).toDF("k", "bv", view.freqCol)
+        .withColumn("bv", col("bv").cast("decimal(12,2)") * 2)))
+    assert(tuples(dv2) ==
+      Set((3L, "w", "8.00", 1L), (1L, "x", "1.50", -1L), (1L, "z", "1.50", -1L)))
+    // an int key against the widened bigint state is cast on append
+    val dv3 = view.applyDelta(Some(Seq((2, "y", -1L)).toDF("k", "av", view.freqCol)), None)
+    assert(tuples(dv3) == Set((2L, "y", "2.25", -1L)))
+    assert(tuples(view.current()) == Set((3L, "w", "8.00", 1L)))
+    assert(view.current().schema("bv").dataType ==
+      org.apache.spark.sql.types.DecimalType(14, 2))
+    // every version before the widening still reads back
+    assert(tuples(view.at(0)) == Set((1L, "x", "1.50", 1L), (2L, "y", "2.25", 1L)))
+  }
+
   test("randomized delta histories: maintained join view equals from-scratch recompute") {
     import spark.implicits._
     def tuples(df: org.apache.spark.sql.DataFrame) = df.collect()
