@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Timing.sink
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Benchmark main: runs the headline TPC-H set (BASELINE.md) plus the
   * LLM-pipeline set on SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -69,21 +71,27 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val warmDir = "/root/testdata/sf0.001"
 
-  // query@dir → first exception line; insertion-ordered for stable JSON
-  private val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+  // cell@dir → first exception line; insertion-ordered for stable JSON
+  private[graft] val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
-  private def recordError(q: QueryDef, dir: String, e: Throwable): Unit = {
-    System.err.println(s"[bench] ${q.name} failed on $dir: $e")
-    errors.getOrElseUpdate(s"${q.name}@$dir", e.toString.linesIterator.next().take(180))
-  }
+  /** `body`'s result, or None once its failure is recorded under
+    * `name@dir` — the one place a failed cell is caught. */
+  private def attempt[A](name: String, dir: String)(body: => A): Option[A] =
+    try Some(body)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed on $dir: $e")
+      errors.getOrElseUpdate(s"$name@$dir", e.toString.linesIterator.next().take(180))
+      None
+    }
 
-  /** Full JSON string escape (same table as Verify's): backslash, quote,
-    * and every control char. A single quote-replace was not enough —
-    * AnalysisException heads routinely quote regexes/paths whose
-    * backslashes would corrupt the whole bench line back into the
-    * "parsed: null" artifact class the errors key exists to prevent
-    * (ADVICE r9). */
-  private def jstr(s: String): String = "\"" + s.flatMap {
+  /** Full JSON string escape — backslash, quote, and every control char —
+    * for Bench's lines and Verify's oracle_sql.json alike. A single
+    * quote-replace was not enough: AnalysisException heads routinely
+    * quote regexes/paths whose backslashes would corrupt the whole bench
+    * line back into the "parsed: null" artifact class the errors key
+    * exists to prevent (ADVICE r9), and a tab or CR in builder-authored
+    * SQL would make the driver's json.load fail. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -93,13 +101,8 @@ object Bench {
     case c => c.toString
   } + "\""
 
-  private def timeOnce(s: SparkSession, dir: String)(q: QueryDef): Option[Double] = {
-    val t0 = System.nanoTime()
-    try {
-      q.run(s, dir).write.format("noop").mode("overwrite").save()
-      Some((System.nanoTime() - t0) / 1e9)
-    } catch { case e: Throwable => recordError(q, dir, e); None }
-  }
+  private def timeOnce(s: SparkSession, dir: String)(q: QueryDef): Option[Double] =
+    attempt(q.name, dir)(Timing.seconds(sink(q.run(s, dir))))
 
   // best-of-n over SUCCESSFUL runs: later runs reuse warmed file listings/
   // codegen, and the min damps scheduler noise on a shared machine.
@@ -129,167 +132,80 @@ object Bench {
   /** Fixed CPU-bound reduction, identical in every cell: wall time varies
     * only with machine load and core count, never with plan changes — the
     * denominator for normalizing cross-round deltas. */
-  private def calibrate(s: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    s.range(2000000000L).selectExpr("sum(id)").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
+  private def calibrate(s: SparkSession): Double =
+    Timing.seconds(s.range(2000000000L).selectExpr("sum(id)").collect())
 
-  // Probe-only IVF timing: ann_ivf_indexed builds its index inside the
-  // query (write-time + probe-time in one number). A serving path pays
-  // the build once and probes many times, so the probe against a
-  // pre-built index — the partition-pruned scan AnnIndexSpec pins — is
-  // measured separately (best-of-2 over one build).
-  private def ivfProbeTime(s: SparkSession, dir: String): Option[Double] = {
-    try {
-      val idx = Engine.scratchDir("graft_bench_ivf_") + "/index"
-      queries.Similarity.buildIvfIndex(s, dir, idx)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        queries.Similarity.probeIvfIndex(s, dir, idx)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Some(math.min(once(), once()))
-    } catch { case e: Throwable =>
-      recordError(QueryDef.rowsOnly("ann_ivf_probe")((_, _) => null), dir, e); None
-    }
-  }
-
-  // Stored-code SQ8 twin of ivfProbeTime: build the quantized index once,
-  // time the probe that scores from stored int8 codes (code-only column
-  // read) + float re-rank. Compared against ann_ivf_probe this cell
-  // prices the quantized scan's I/O win (VERDICT r11 #5).
-  private def sq8ProbeTime(s: SparkSession, dir: String): Option[Double] = {
-    try {
-      val idx = Engine.scratchDir("graft_bench_sq8_") + "/index"
-      queries.Similarity.writeIvfSq8Index(s, dir, idx)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        queries.Similarity.probeIvfSq8Index(s, dir, idx)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Some(math.min(once(), once()))
-    } catch { case e: Throwable =>
-      recordError(QueryDef.rowsOnly("ann_sq8_probe")((_, _) => null), dir, e); None
-    }
-  }
-
-  // Three-stage twin of sq8ProbeTime (VERDICT r12 #6 "done" bar): same
-  // stored index (pv rides in it), but stage 1 ranks on the 16-d integer
-  // JL projection — the scan reads (cand_id, pv) only, 128 B/candidate
-  // vs the SQ8 probe's codes+scale — and only shortlist survivors fetch
-  // codes, only rerank survivors fetch floats. Against ann_sq8_probe
-  // this cell prices the projected first stage's bandwidth win.
-  private def rprojSq8ProbeTime(s: SparkSession, dir: String): Option[Double] = {
-    try {
-      val idx = Engine.scratchDir("graft_bench_rproj_") + "/index"
-      queries.Similarity.writeIvfSq8Index(s, dir, idx)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        queries.Similarity.probeRprojSq8Index(s, dir, idx)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Some(math.min(once(), once()))
-    } catch { case e: Throwable =>
-      recordError(QueryDef.rowsOnly("ann_rproj_sq8_probe")((_, _) => null), dir, e); None
-    }
-  }
-
-  // Packed-code PQ twin of sq8ProbeTime: build the 8-byte-code index
-  // once, time the probe whose ADC stage reads ONLY (cand_id, cw) in the
-  // probed cells — 16 B/candidate vs the SQ8 probe's ~72 (codes+scale)
-  // and the float path's 256. Against ann_sq8_probe this cell prices
-  // the packed-code scan's bandwidth win.
-  private def pqProbeTime(s: SparkSession, dir: String): Option[Double] = {
-    try {
-      val idx = Engine.scratchDir("graft_bench_pq_") + "/index"
-      queries.Similarity.writeIvfPqIndex(s, dir, idx)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        queries.Similarity.probeIvfPqIndex(s, dir, idx)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Some(math.min(once(), once()))
-    } catch { case e: Throwable =>
-      recordError(QueryDef.rowsOnly("ann_pq_probe")((_, _) => null), dir, e); None
-    }
-  }
-
-  // BM25 split cells (VERDICT r12 #4): ta_bm25_indexed's in-cell number
-  // rebuilds the stored posting index inside every invocation, so it
-  // prices "append ≡ one-shot", never serving. These two cells commit
-  // the serving economics RetrievalDev's numbers only narrated: the
-  // index write is paid ONCE (`ta_bm25_write`), then the steady-state
-  // probe (`ta_bm25_probe`, best-of-2) serves the 8-query batch from
-  // storage with the in-session posting cache dropped — the token-pushed
-  // sorted-parquet read + broadcast probe join and nothing else. The
-  // query batch is materialized as a local 8-row DataFrame OUTSIDE the
-  // timed region (ADVICE r12: probing through the corpus temp view
-  // re-tokenized the query side inside every timed pass).
-  private def bm25SplitTimes(s: SparkSession, dir: String): (Option[Double], Option[Double]) = {
-    try {
-      val idx = Engine.scratchDir("graft_bench_bm25_") + "/index"
-      val t0 = System.nanoTime()
-      queries.TextAnalysis.writeBm25Index(s, dir, idx)
-      val w = (System.nanoTime() - t0) / 1e9
-      val qRows = Engine.table(s, dir, "documents")
-        .filter("doc_id < 8").selectExpr("doc_id AS query_id", "text").collect()
-      val q = s.createDataFrame(
-        s.sparkContext.parallelize(qRows.toIndexedSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-      Engine.clearSwapCaches(s) // cold start: storage is the only index
+  /** One serving cell. A census key that builds its index inside the
+    * query prices write + probe as one number; a serving path pays the
+    * write once and probes many times, so this times them apart: write
+    * the index under a scratch directory (timed), release the swap caches
+    * and collect the heap (untimed — the probe serves from storage
+    * alone), then take the best of two probes into the noop sink.
+    * `probe(idx)` runs once, untimed, before the release: it builds what
+    * both probes share and returns the probe itself. Returns the write
+    * and probe seconds; a failure records the error under `name` and
+    * returns None for both. */
+  private[graft] def servingCell(s: SparkSession, dir: String, name: String)(
+      write: String => Unit)(probe: String => () => DataFrame)
+      : (Option[Double], Option[Double]) =
+    attempt(name, dir) {
+      val idx = Engine.scratchDir(s"graft_bench_${name}_") + "/index"
+      val w = Timing.seconds(write(idx))
+      val run = probe(idx)
+      Engine.clearSwapCaches(s)
       System.gc()
-      def once(): Double = {
-        val p0 = System.nanoTime()
-        queries.TextAnalysis.probeBm25Index(s, idx, q, excludeSelf = true)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - p0) / 1e9
-      }
-      (Some(w), Some(math.min(once(), once())))
-    } catch { case e: Throwable =>
-      recordError(QueryDef.rowsOnly("ta_bm25_probe")((_, _) => null), dir, e)
-      (None, None)
-    }
-  }
+      (w, math.min(Timing.seconds(sink(run())), Timing.seconds(sink(run()))))
+    }.unzip
 
-  // Rare-shingle index split cells (OPTIMIZATION r15 / VERDICT r14 #4):
-  // dedup_ngram_jaccard's in-cell number tokenizes, shingles, and builds
-  // the rare-shingle inverted index inside every invocation — honest
-  // one-shot pricing, but it says nothing about steady-state serving. A
-  // deployment pays the index write ONCE per corpus epoch
-  // (`dedup_ngram_write` — shingle pass + df aggregate + two sorted
-  // parquet writes) and then answers from storage
-  // (`dedup_ngram_probe`, best-of-2 with the session caches dropped:
-  // the candidate self-join + two-phase verify over the stored
-  // sid-sorted postings and doc-keyed arrays, no tokenize pass at all).
-  // NgramIndexSpec pins probe ≡ the census key's pairs.
-  private def ngramSplitTimes(s: SparkSession, dir: String): (Option[Double], Option[Double]) = {
-    try {
-      val idx = Engine.scratchDir("graft_bench_ngram_") + "/index"
-      val t0 = System.nanoTime()
-      queries.Dedup.writeNgramIndex(s, dir, idx)
-      val w = (System.nanoTime() - t0) / 1e9
-      Engine.clearSwapCaches(s) // cold start: storage is the only index
-      System.gc()
-      def once(): Double = {
-        val p0 = System.nanoTime()
-        queries.Dedup.probeNgramIndex(s, idx)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - p0) / 1e9
-      }
-      (Some(w), Some(math.min(once(), once())))
-    } catch { case e: Throwable =>
-      recordError(QueryDef.rowsOnly("dedup_ngram_probe")((_, _) => null), dir, e)
-      (None, None)
-    }
+  /** The serving cells a probe-carrying [[cell]] runs after its query
+    * sets, in emission order: the probe's key, the write's key when the
+    * write is reported too, the index write and the probe. */
+  private def servingCells(s: SparkSession, dir: String)
+      : Seq[(String, Option[String], String => Unit, String => () => DataFrame)] = {
+    import queries.{Dedup, Similarity => Sim, TextAnalysis => TA}
+    Seq(
+      // the partition-pruned IVF scan AnnIndexSpec pins
+      ("ann_ivf_probe", None, Sim.buildIvfIndex(s, dir, _),
+        idx => () => Sim.probeIvfIndex(s, dir, idx)),
+      // scores from stored int8 codes (code-only column read) + float
+      // re-rank: against ann_ivf_probe it prices the quantized scan's I/O
+      // win (VERDICT r11 #5)
+      ("ann_sq8_probe", None, Sim.writeIvfSq8Index(s, dir, _),
+        idx => () => Sim.probeIvfSq8Index(s, dir, idx)),
+      // same stored index, but stage 1 ranks on the 16-d integer JL
+      // projection — (cand_id, pv) only, 128 B/candidate — and only
+      // shortlist survivors fetch codes, only rerank survivors floats
+      // (VERDICT r12 #6): the projected first stage's bandwidth win
+      ("ann_rproj_sq8_probe", None, Sim.writeIvfSq8Index(s, dir, _),
+        idx => () => Sim.probeRprojSq8Index(s, dir, idx)),
+      // the ADC stage reads ONLY (cand_id, cw) in the probed cells — 16
+      // B/candidate vs SQ8's ~72 and the float path's 256: the packed-code
+      // scan's bandwidth win
+      ("ann_pq_probe", None, Sim.writeIvfPqIndex(s, dir, _),
+        idx => () => Sim.probeIvfPqIndex(s, dir, idx)),
+      // ta_bm25_indexed rebuilds the stored posting index in every
+      // invocation (VERDICT r12 #4); here the 8-query batch is served
+      // from storage — the token-pushed sorted-parquet read + broadcast
+      // probe join and nothing else. The batch is a local 8-row DataFrame
+      // built outside the timed region (ADVICE r12: probing through the
+      // corpus temp view re-tokenized the query side in every pass).
+      ("ta_bm25_probe", Some("ta_bm25_write"), TA.writeBm25Index(s, dir, _),
+        idx => {
+          val rows = Engine.table(s, dir, "documents")
+            .filter("doc_id < 8").selectExpr("doc_id AS query_id", "text").collect()
+          val q = s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1),
+            StructType(Seq(StructField("query_id", LongType), StructField("text", StringType))))
+          () => TA.probeBm25Index(s, idx, q, excludeSelf = true)
+        }),
+      // dedup_ngram_jaccard tokenizes, shingles and builds the rare-shingle
+      // inverted index in every invocation (OPTIMIZATION r15 / VERDICT
+      // r14 #4). A deployment writes it once per corpus epoch (shingle
+      // pass + df aggregate + two sorted parquet writes), then answers
+      // from storage: the candidate self-join + two-phase verify over the
+      // stored postings, no tokenize pass. NgramIndexSpec pins probe ≡
+      // the census key's pairs.
+      ("dedup_ngram_probe", Some("dedup_ngram_write"), Dedup.writeNgramIndex(s, dir, _),
+        idx => () => Dedup.probeNgramIndex(s, idx)))
   }
 
   /** One (tier × core-count) measurement cell in its own session: warm
@@ -312,7 +228,7 @@ object Bench {
     val cellcal = Seq.newBuilder[(String, Option[Double])]
     try {
       sets.flatMap(_._1).distinct.foreach { q =>
-        try q.run(s, warmDir).write.format("noop").mode("overwrite").save()
+        try sink(q.run(s, warmDir))
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] warm-up ${q.name} failed: $e")
         }
@@ -352,40 +268,32 @@ object Bench {
           q.name -> best
         }
       }
-      val withP =
-        if (withProbe && timed.nonEmpty) {
-          val probe = "ann_ivf_probe" -> ivfProbeTime(s, dir)
-          cellcal += ("ann_ivf_probe" -> Some(calibrate(s)))
-          val sq8p = "ann_sq8_probe" -> sq8ProbeTime(s, dir)
-          cellcal += ("ann_sq8_probe" -> Some(calibrate(s)))
-          val rpp = "ann_rproj_sq8_probe" -> rprojSq8ProbeTime(s, dir)
-          cellcal += ("ann_rproj_sq8_probe" -> Some(calibrate(s)))
-          val pqp = "ann_pq_probe" -> pqProbeTime(s, dir)
-          cellcal += ("ann_pq_probe" -> Some(calibrate(s)))
-          val (bmW, bmP) = bm25SplitTimes(s, dir)
-          val bmCal = Some(calibrate(s))
-          cellcal += ("ta_bm25_write" -> bmCal)
-          cellcal += ("ta_bm25_probe" -> bmCal)
-          val (ngW, ngP) = ngramSplitTimes(s, dir)
-          val ngCal = Some(calibrate(s))
-          cellcal += ("dedup_ngram_write" -> ngCal)
-          cellcal += ("dedup_ngram_probe" -> ngCal)
-          Engine.clearSwapCaches(s)
-          System.gc()
-          timed.init :+ (timed.last :+ probe :+ sq8p :+ rpp :+ pqp :+
-            ("ta_bm25_write" -> bmW) :+ ("ta_bm25_probe" -> bmP) :+
-            ("dedup_ngram_write" -> ngW) :+ ("dedup_ngram_probe" -> ngP))
-        } else timed
+      // the serving cells ride the last query set, each followed by one
+      // cal stamp shared by the keys it reports
+      val serving =
+        if (!withProbe) Nil
+        else servingCells(s, dir).flatMap { case (probeKey, writeKey, write, probe) =>
+          val (w, p) = servingCell(s, dir, probeKey)(write)(probe)
+          val kvs = writeKey.map(_ -> w).toSeq :+ (probeKey -> p)
+          val c = Some(calibrate(s))
+          kvs.foreach { case (k, _) => cellcal += (k -> c) }
+          kvs
+        }
+      val withP = if (serving.isEmpty) timed else timed.init :+ (timed.last ++ serving)
       (withP, cal, cellcal.result())
     } finally s.stop()
   }
 
   private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+  private def r4(x: Double): Double = math.rint(x * 10000) / 10000
+
+  // a JSON object of already-rendered values, in the given key order
+  private def jobj(kvs: Seq[(String, Any)]): String =
+    kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
 
   // successful entries only — a failed query must never print as a number
   private def toJson(kvs: Seq[(String, Option[Double])]): String =
-    kvs.collect { case (k, Some(v)) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
+    jobj(kvs.collect { case (k, Some(v)) => k -> r3(v) })
 
   /** Cells whose wall time sits under ~10× the cell's calibration
     * constant are scheduler-overhead floors, not plan measurements —
@@ -469,6 +377,29 @@ object Bench {
       System.out.flush()
       writeArtifact()
     }
+    // One evidence section in a fresh session: `body` returns the
+    // section's fields (values already JSON), the section's cal stamp goes
+    // last, and the object is kept in the artifact and printed as a tier
+    // line. A failure is logged and leaves the section out.
+    def section(name: String)(body: SparkSession => Seq[(String, Any)]): Unit = {
+      val s = Engine.build()
+      try {
+        extras(name) = jobj(body(s) :+ ("cal" -> r3(calibrate(s))))
+        emitTier(name, extras(name))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+      } finally s.stop()
+    }
+    // A section whose fields are the phase seconds `run` reports to its
+    // timer, in the order it reports them.
+    def phaseSection(name: String)(run: (SparkSession, (String, Double) => Unit) => Unit): Unit =
+      section(name) { s =>
+        val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+        run(s, (k, v) => phases(k) = v)
+        System.err.println(s"[bench] $name: " +
+          phases.map { case (k, v) => f"$k $v%.3fs" }.mkString(", "))
+        phases.toSeq.map { case (k, v) => k -> r3(v) }
+      }
     def has(dir: String, t: String) = new java.io.File(s"$dir/$t.parquet").exists
     val haveSf1 = ensureTier(sf1Dir, 10)
     val haveSf10 = ensureTier(sf10Dir, 100)
@@ -624,223 +555,127 @@ object Bench {
       emitTier("sf1", extras("sf1"))
     }
 
-    // Containment verification-funnel evidence at sf1 (VERDICT r6 #8):
-    // candidate → hashed-prefilter → exact-verified counts, in the JSON
-    // so SCALE.md can quote a committed artifact.
+    // The sf1 evidence sections below each run in a fresh session.
     if (haveSf1) {
-      val s = Engine.build()
-      try {
-        val f = queries.Dedup.containmentFunnel(s, sf1Dir)
+      import queries.{Ivm, Similarity => Sim, TextAnalysis => TA}
+
+      // Containment verification-funnel evidence (VERDICT r6 #8):
+      // candidate → hashed-prefilter → exact-verified counts, in the JSON
+      // so SCALE.md can quote a committed artifact.
+      section("containment_funnel_sf1") { s =>
+        val (cand, prelim, rpairs) = queries.Dedup.containmentFunnel(s, sf1Dir)
         System.err.println(
-          s"[bench] containment funnel @sf1: cand=${f._1} prelim=${f._2} rpairs=${f._3}")
-        extras("containment_funnel_sf1") =
-          s"""{"cand":${f._1},"prelim":${f._2},"rpairs":${f._3},"cal":${r3(calibrate(s))}}"""
-        emitTier("containment_funnel_sf1", extras("containment_funnel_sf1"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] containment funnel failed: $e")
-      } finally s.stop()
-    }
+          s"[bench] containment funnel @sf1: cand=$cand prelim=$prelim rpairs=$rpairs")
+        Seq("cand" -> cand, "prelim" -> prelim, "rpairs" -> rpairs)
+      }
 
-    // Recall-vs-nProbe trade-off at sf1 (VERDICT r9 #4): recall@10 plus
-    // probe latency per probe width — the table an ANN user reads when
-    // choosing nProbe; SCALE.md quotes this committed artifact. First
-    // point double-timed so cache/codegen warmup isn't billed to nProbe=1.
-    if (haveSf1) {
-      val s = Engine.build()
-      try {
-        queries.Similarity.ivfTopK(s, sf1Dir)
-          .write.format("noop").mode("overwrite").save()
-        val sweep = Seq(1, 2, 4, 8, 16).map { np =>
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            queries.Similarity.ivfTopK(s, sf1Dir, nProbe = np)
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
+      // Recall-vs-nProbe trade-off (VERDICT r9 #4): recall@10 plus probe
+      // latency per probe width — the table an ANN user reads when
+      // choosing nProbe; SCALE.md quotes this committed artifact. The
+      // first point is warmed by one untimed run so cache/codegen warmup
+      // isn't billed to nProbe=1. The section's cal stamp (VERDICT r13
+      // #2) records the machine the merge's min-kept sec leaves ran on.
+      section("ann_nprobe_sweep_sf1") { s =>
+        sink(Sim.ivfTopK(s, sf1Dir))
+        Seq(1, 2, 4, 8, 16).map { np =>
+          def once() = Timing.seconds(sink(Sim.ivfTopK(s, sf1Dir, nProbe = np)))
           val sec = math.min(once(), once())
-          val rec = queries.Similarity.meanRecallAtNProbe(s, sf1Dir, np)
+          val rec = Sim.meanRecallAtNProbe(s, sf1Dir, np)
           System.err.println(f"[bench] ann sweep nProbe=$np: recall@10=$rec%.4f ${sec}%.3fs")
-          (np, rec, sec)
+          s"p$np" -> jobj(Seq("recall" -> r4(rec), "sec" -> r3(sec)))
         }
-        // per-section cal stamp (VERDICT r13 #2): the merge min-keeps the
-        // sec leaves, the stamp records the machine the winner ran on
-        extras("ann_nprobe_sweep_sf1") = (sweep.map { case (np, rec, sec) =>
-          s""""p$np":{"recall":${math.rint(rec * 10000) / 10000},"sec":${r3(sec)}}"""
-        } :+ s""""cal":${r3(calibrate(s))}""").mkString("{", ",", "}")
-        emitTier("ann_nprobe_sweep_sf1", extras("ann_nprobe_sweep_sf1"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ann nProbe sweep failed: $e")
-      } finally s.stop()
-    }
+      }
 
-    // Trained-vs-hash recall at equal probe budget — the PAYOFF
-    // measurement for ann_kmeans_train: same C, same nProbe, only the
-    // centroid model differs; recall@10 against the exact ground truth.
-    if (haveSf1) {
-      val s = Engine.build()
-      try {
-        val (fit, _) = queries.Similarity.trainCentroids(s, sf1Dir, c = 16, iters = 2)
-        val pts = Seq(1, 2, 4, 8).map { np =>
-          val h = queries.Similarity.meanRecallAtNProbe(s, sf1Dir, np)
-          val t = queries.Similarity.meanRecallWith(s, sf1Dir, fit, np)
+      // Trained-vs-hash recall at equal probe budget — the PAYOFF
+      // measurement for ann_kmeans_train: same C, same nProbe, only the
+      // centroid model differs; recall@10 against the exact ground truth.
+      section("kmeans_recall_sf1") { s =>
+        val (fit, _) = Sim.trainCentroids(s, sf1Dir, c = 16, iters = 2)
+        Seq(1, 2, 4, 8).map { np =>
+          val h = Sim.meanRecallAtNProbe(s, sf1Dir, np)
+          val t = Sim.meanRecallWith(s, sf1Dir, fit, np)
           System.err.println(f"[bench] kmeans recall np=$np hash=$h%.4f trained=$t%.4f")
-          s""""p$np":{"hash":${math.rint(h * 10000) / 10000},"trained":${math.rint(t * 10000) / 10000}}"""
+          s"p$np" -> jobj(Seq("hash" -> r4(h), "trained" -> r4(t)))
         }
-        extras("kmeans_recall_sf1") =
-          (pts :+ s""""cal":${r3(calibrate(s))}""").mkString("{", ",", "}")
-        emitTier("kmeans_recall_sf1", extras("kmeans_recall_sf1"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] kmeans recall failed: $e")
-      } finally s.stop()
-    }
+      }
 
-    // IVM refresh-cost independence (VERDICT r9 #5): the SAME 10k-row
-    // delta applied to views whose bases differ 10× (sf0.1 vs sf1
-    // lineitem) must refresh in ~equal time — applyDelta's inputs are the
-    // state partials and the delta, never the base. A ratio near 1 is the
-    // committed evidence behind SCALE.md's O(|state|+|delta|) claim.
-    if (haveSf1) {
-      val s = Engine.build()
-      try {
-        def refreshTime(baseDir: String): Double = {
-          val tmp = Engine.scratchDir("graft_bench_ivm_")
+      // IVM refresh-cost independence (VERDICT r9 #5): the SAME 10k-row
+      // delta applied to views whose bases differ 10× (sf0.1 vs sf1
+      // lineitem) must refresh in ~equal time — applyDelta's inputs are
+      // the state partials and the delta, never the base. A ratio near 1
+      // is the committed evidence behind SCALE.md's O(|state|+|delta|)
+      // claim.
+      phaseSection("ivm_delta_refresh") { (s, time) =>
+        Seq("base_sf01" -> sfDir, "base_sf1" -> sf1Dir).foreach { case (label, baseDir) =>
           val view = new ivm.IncrementalAggView(s,
             Seq("l_returnflag", "l_linestatus"),
-            Seq("l_quantity", "l_extendedprice"), tmp)
+            Seq("l_quantity", "l_extendedprice"), Engine.scratchDir("graft_bench_ivm_"))
           view.initialize(Engine.table(s, baseDir, "lineitem"))
           val delta = Engine.table(s, sfDir, "lineitem")
             .filter("l_orderkey % 97 = 0").limit(10000)
             .withColumn("__freq", org.apache.spark.sql.functions.lit(1L))
-          val t0 = System.nanoTime()
-          view.applyDelta(delta)
-          (System.nanoTime() - t0) / 1e9
+          Timing.timed(time, label)(view.applyDelta(delta))
         }
-        val r = (refreshTime(sfDir), refreshTime(sf1Dir))
-        System.err.println(
-          f"[bench] ivm delta refresh: sf0.1 base ${r._1}%.3fs, sf1 base ${r._2}%.3fs")
-        extras("ivm_delta_refresh") =
-          s"""{"base_sf01":${r3(r._1)},"base_sf1":${r3(r._2)},"cal":${r3(calibrate(s))}}"""
-        emitTier("ivm_delta_refresh", extras("ivm_delta_refresh"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ivm delta refresh failed: $e")
-      } finally s.stop()
-    }
+      }
 
-    // Retract→retrieve economics (VERDICT r12 #3): the ivm_bm25 loop's
-    // phase costs at sf1 next to the one-shot recompute it replaces.
-    // `recompute` = full bigram BM25 from raw text (tokenize + aggregate
-    // + score — what a deletion forces without the maintained state);
-    // `init` = posting state built once; `refresh` = the retract delta
-    // merged into state (|state ∪ delta| rows, NO corpus re-tokenization);
-    // `probe` = BM25 served from the maintained state. refresh+probe ≪
-    // recompute is the committed claim. Same code path as the hash-green
-    // census key — the timer hook instruments it, nothing is re-spelled.
-    if (haveSf1) {
-      val s = Engine.build()
-      try {
-        var t0 = System.nanoTime()
-        queries.TextAnalysis.bm25Bigram(s, sf1Dir)
-          .write.format("noop").mode("overwrite").save()
-        val recompute = (System.nanoTime() - t0) / 1e9
+      // Retract→retrieve economics (VERDICT r12 #3): the ivm_bm25 loop's
+      // phase costs next to the one-shot recompute it replaces.
+      // `recompute` = full bigram BM25 from raw text (tokenize + aggregate
+      // + score — what a deletion forces without the maintained state);
+      // `init` = posting state built once; `refresh` = the retract delta
+      // merged into state (|state ∪ delta| rows, NO corpus
+      // re-tokenization); `probe` = BM25 served from the maintained
+      // state. refresh+probe ≪ recompute is the committed claim. Same
+      // code path as the hash-green census key — the timer hook
+      // instruments it, nothing is re-spelled.
+      phaseSection("ivm_bm25_refresh_sf1") { (s, time) =>
+        Timing.timed(time, "recompute")(sink(TA.bm25Bigram(s, sf1Dir)))
         Engine.clearSwapCaches(s) // the loop must not ride recompute's cache
         System.gc()
-        val phases = scala.collection.mutable.Map.empty[String, Double]
-        val probe = queries.Ivm.bm25RetractRun(s, sf1Dir, (k, v) => phases(k) = v)
-        t0 = System.nanoTime()
-        probe.write.format("noop").mode("overwrite").save()
-        val probeSec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] ivm_bm25 sf1: recompute $recompute%.3fs, " +
-          f"init ${phases("init")}%.3fs, refresh ${phases("refresh")}%.3fs, probe $probeSec%.3fs")
-        extras("ivm_bm25_refresh_sf1") =
-          s"""{"recompute":${r3(recompute)},"init":${r3(phases("init"))},"refresh":${r3(phases("refresh"))},"probe":${r3(probeSec)},"cal":${r3(calibrate(s))}}"""
-        emitTier("ivm_bm25_refresh_sf1", extras("ivm_bm25_refresh_sf1"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ivm bm25 refresh failed: $e")
-      } finally s.stop()
-    }
+        val probe = Ivm.bm25RetractRun(s, sf1Dir, time)
+        Timing.timed(time, "probe")(sink(probe))
+      }
 
-    // Text-axis LSM economics (VERDICT r13 #1): the ivm_bm25_lsm loop's
-    // phase costs at sf1 next to the agg-view numbers above. `init` =
-    // the stored token-sorted posting index written once (the corpus
-    // pass); `retract` = the tombstone doc-id write; `append` = ONLY the
-    // re-ingested slice tokenized into a delta segment. retract+append ≪
-    // init is the committed claim — the refresh rides |delta| where the
-    // agg-view's rode |posting state| (its cell shows refresh ≈ init).
-    // `compact` = the fold of (base ∖ tombstones ∖ delta-ids) ∪ delta
-    // into a new base, priced against init (the rebuild it amortizes).
-    if (haveSf1) {
-      val s = Engine.build()
-      try {
-        val phases = scala.collection.mutable.Map.empty[String, Double]
-        val st = queries.Ivm.bm25LsmBuild(s, sf1Dir, (k, v) => phases(k) = v)
-        var t0 = System.nanoTime()
-        queries.Ivm.bm25LsmProbe(s, sf1Dir, st)
-          .write.format("noop").mode("overwrite").save()
-        val probeSec = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val cst = queries.Ivm.bm25LsmCompact(s, st)
-        val compactSec = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        queries.Ivm.bm25LsmProbe(s, sf1Dir, cst)
-          .write.format("noop").mode("overwrite").save()
-        val probeC = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] ivm_bm25_lsm sf1: init ${phases("init")}%.3fs, " +
-          f"retract ${phases("retract")}%.3fs, append ${phases("append")}%.3fs, " +
-          f"probe $probeSec%.3fs, compact $compactSec%.3fs, probe_compacted $probeC%.3fs")
-        extras("ivm_bm25_lsm_refresh_sf1") =
-          s"""{"init":${r3(phases("init"))},"retract":${r3(phases("retract"))},"append":${r3(phases("append"))},"probe":${r3(probeSec)},"compact":${r3(compactSec)},"probe_compacted":${r3(probeC)},"cal":${r3(calibrate(s))}}"""
-        emitTier("ivm_bm25_lsm_refresh_sf1", extras("ivm_bm25_lsm_refresh_sf1"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ivm bm25 lsm refresh failed: $e")
-      } finally s.stop()
-    }
+      // Text-axis LSM economics (VERDICT r13 #1): the ivm_bm25_lsm loop's
+      // phase costs next to the agg-view numbers above. `init` = the
+      // stored token-sorted posting index written once (the corpus
+      // pass); `retract` = the tombstone doc-id write; `append` = ONLY
+      // the re-ingested slice tokenized into a delta segment.
+      // retract+append ≪ init is the committed claim — the refresh rides
+      // |delta| where the agg-view's rode |posting state| (its cell shows
+      // refresh ≈ init). `compact` = the fold of
+      // (base ∖ tombstones ∖ delta-ids) ∪ delta into a new base, priced
+      // against init (the rebuild it amortizes).
+      phaseSection("ivm_bm25_lsm_refresh_sf1") { (s, time) =>
+        val st = Ivm.bm25LsmBuild(s, sf1Dir, time)
+        Timing.timed(time, "probe")(sink(Ivm.bm25LsmProbe(s, sf1Dir, st)))
+        val cst = Timing.timed(time, "compact")(Ivm.bm25LsmCompact(s, st))
+        Timing.timed(time, "probe_compacted")(sink(Ivm.bm25LsmProbe(s, sf1Dir, cst)))
+      }
 
-    // Vector-axis retraction economics (r13, the ivm_ann loop): at sf1,
-    // the LSM-shaped edit next to the full index rebuild a deletion
-    // forces without segments. `rebuild` = one-shot writeIvfSq8Index
-    // over the edited corpus; build/retract/append come from
-    // annRetractBuild's timer hook (the same code path as the
-    // hash-green census key); `probe` = the composed
-    // (base ∖ tombstones) ∪ delta probe. retract+append ≪ rebuild is
-    // the committed claim (ADVICE r13: probe is priced separately —
-    // serving pays it against ANY index, composed or rebuilt; at sf1 it
-    // dominates both sides) — the base segment is never rewritten.
-    if (haveSf1) {
-      val s = Engine.build()
-      try {
+      // Vector-axis retraction economics (r13, the ivm_ann loop): the
+      // LSM-shaped edit next to the full index rebuild a deletion forces
+      // without segments. `rebuild` = one-shot writeIvfSq8Index over the
+      // edited corpus; build/retract/append come from annRetractBuild's
+      // timer hook (the same code path as the hash-green census key);
+      // `probe` = the composed (base ∖ tombstones) ∪ delta probe.
+      // retract+append ≪ rebuild is the committed claim (ADVICE r13:
+      // probe is priced separately — serving pays it against ANY index,
+      // composed or rebuilt; at sf1 it dominates both sides) — the base
+      // segment is never rewritten. `compact` (VERDICT r13 #2) folds the
+      // edit history into a new base, priced against the one-shot
+      // rebuild it amortizes; probe_compacted shows what the fold buys
+      // the probe (the anti-join + dead-delta overhead removed).
+      phaseSection("ivm_ann_refresh_sf1") { (s, time) =>
         val rb = Engine.scratchDir("graft_bench_ivmann_") + "/rebuilt"
-        var t0 = System.nanoTime()
-        queries.Similarity.writeIvfSq8Index(s, sf1Dir, rb,
-          slice = "vec_id % 13 <> 0 OR vec_id % 26 = 0")
-        val rebuild = (System.nanoTime() - t0) / 1e9
+        Timing.timed(time, "rebuild")(Sim.writeIvfSq8Index(s, sf1Dir, rb,
+          slice = "vec_id % 13 <> 0 OR vec_id % 26 = 0"))
         Engine.clearSwapCaches(s); System.gc()
-        val phases = scala.collection.mutable.Map.empty[String, Double]
-        val st = queries.Ivm.annRetractBuild(s, sf1Dir, (k, v) => phases(k) = v)
-        t0 = System.nanoTime()
-        queries.Ivm.annRetractProbe(s, sf1Dir, st)
-          .write.format("noop").mode("overwrite").save()
-        val probeSec = (System.nanoTime() - t0) / 1e9
-        // compaction (VERDICT r13 #2): fold the edit history into a new
-        // base and price it against the one-shot rebuild it amortizes;
-        // probe_compacted shows what the fold buys the probe (the
-        // anti-join + dead-delta overhead removed)
-        t0 = System.nanoTime()
-        val cst = queries.Ivm.annCompact(s, st)
-        val compactSec = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        queries.Ivm.annRetractProbe(s, sf1Dir, cst)
-          .write.format("noop").mode("overwrite").save()
-        val probeC = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] ivm_ann sf1: rebuild $rebuild%.3fs, " +
-          f"build ${phases("build")}%.3fs, retract ${phases("retract")}%.3fs, " +
-          f"append ${phases("append")}%.3fs, probe $probeSec%.3fs, " +
-          f"compact $compactSec%.3fs, probe_compacted $probeC%.3fs")
-        extras("ivm_ann_refresh_sf1") =
-          s"""{"rebuild":${r3(rebuild)},"build":${r3(phases("build"))},"retract":${r3(phases("retract"))},"append":${r3(phases("append"))},"probe":${r3(probeSec)},"compact":${r3(compactSec)},"probe_compacted":${r3(probeC)},"cal":${r3(calibrate(s))}}"""
-        emitTier("ivm_ann_refresh_sf1", extras("ivm_ann_refresh_sf1"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ivm ann refresh failed: $e")
-      } finally s.stop()
+        val st = Ivm.annRetractBuild(s, sf1Dir, time)
+        Timing.timed(time, "probe")(sink(Ivm.annRetractProbe(s, sf1Dir, st)))
+        val cst = Timing.timed(time, "compact")(Ivm.annCompact(s, st))
+        Timing.timed(time, "probe_compacted")(sink(Ivm.annRetractProbe(s, sf1Dir, cst)))
+      }
     }
 
     // sf10 tier: best-of-3 TPC-H — the 1.5 GB tier is page-cache

@@ -14,20 +14,20 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        val (rows, sec) = Timing.measure {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          spark.read.parquet(s"$outDir/$name").count()
+        }
         // Vacuous-key guard (VERDICT r12 #1): a 0-row result that is not
         // a documented emptiness contract proves only that both engines
         // agree nothing happened — flag it loudly in the driver log.
-        val rows = spark.read.parquet(s"$outDir/$name").count()
         val warn =
           if (rows == 0 && !SparkEntry.emptinessContracts.contains(name))
             " — WARN: 0 rows, NOT an allowlisted emptiness contract (vacuous oracle row)"
           else ""
-        System.err.println(
-          f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs ($rows rows)$warn")
+        System.err.println(f"[verify] $name ok in $sec%.1fs ($rows rows)$warn")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -35,20 +35,8 @@ object Verify {
       // intermediates must not tax the next 130+ queries in this session
       Engine.clearSwapCaches(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -261,7 +261,7 @@ object Dedup {
   // new crawl batch (default 10 — the census key and its oracle bind to
   // that slice; deltaMod is the dev knob that shrinks the batch relative
   // to the index so the fixed-size-delta asymptote is measurable, see
-  // IncrDev + SCALE.md). Scale shape: delta bands are batch-sized
+  // SCALE.md). Scale shape: delta bands are batch-sized
   // (broadcast hint), the index band table streams through the probe
   // join, the exact-Jaccard verification touches candidates only — so
   // admitting a 1 GB batch against a 100 TB index costs one index scan,
@@ -349,7 +349,7 @@ object Dedup {
   // production admission loop doesn't — the index side's bands are
   // written ONCE at ingest and every batch probes storage (the shape the
   // reference's freq-compacting write path makes cheap for tables, done
-  // here for signatures; IncrDev's sf100 measurement shows signature
+  // here for signatures; SCALE.md's sf100 measurement shows signature
   // re-derivation dominates the in-flight probe once the delta is
   // fixed-size). The persisted index is two relations, neither carrying
   // text or shingles:

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Engine, QueryDef}
+import graft.{Engine, QueryDef, Timing}
 import graft.ivm.IncrementalAggView
 import graft.sources.SegmentedIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -439,10 +439,10 @@ object Ivm {
     val dt = spark.table("btok_tf")
     val statePath = Engine.scratchDir("graft_ivm_bm25_")
     val view = new IncrementalAggView(spark, Seq("doc_id", "token"), Seq("tf"), statePath)
-    SegmentedIndex.timed(timer, "init") {
+    Timing.timed(timer, "init") {
       view.initialize(dt.select(col("doc_id"), col("token"), col("tf")))
     }
-    SegmentedIndex.timed(timer, "refresh") {
+    Timing.timed(timer, "refresh") {
       view.applyDelta(dt.filter(col("doc_id") % 13 === 0)
         .select(col("doc_id"), col("token"), col("tf"), lit(-1L).as(view.freqCol)))
     }

@@ -135,9 +135,12 @@ object MultisetStore {
     * paths): on a distributed filesystem or object store, run
     * single-writer per path or port the claim to that store's
     * rename/conditional-put — the same discipline every file-commit
-    * protocol needs there.
+    * protocol needs there. Each of `markers` is created as an empty file
+    * in the staged version before the rename, so it lands with the
+    * version that commits.
     */
-  private def claimNextVersion(path: String)(build: java.nio.file.Path => Unit): Int = {
+  private def claimNextVersion(path: String, markers: Seq[String] = Nil)(
+      build: java.nio.file.Path => Unit): Int = {
     var committed = -1
     var attempts = 0
     while (committed < 0) {
@@ -147,6 +150,7 @@ object MultisetStore {
       val staging = java.nio.file.Paths.get(
         path, s"_staging_v${next}_${java.util.UUID.randomUUID().toString.take(8)}")
       build(staging)
+      markers.foreach(m => java.nio.file.Files.createFile(staging.resolve(m)))
       val target = java.nio.file.Paths.get(versionDir(path, next))
       try {
         java.nio.file.Files.move(staging, target,
@@ -173,9 +177,12 @@ object MultisetStore {
     * keeps its chain one snapshot long — no other read or write merges
     * measures. */
   def append(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L,
-      measures: Seq[String] = Nil): Int = {
-    val delta = normalize(df, freq)
-    claimNextVersion(path) { staging =>
+      measures: Seq[String] = Nil): Int =
+    merge(spark, path, normalize(df, freq), measures)
+
+  private def merge(spark: SparkSession, path: String, delta: DataFrame,
+      measures: Seq[String] = Nil, markers: Seq[String] = Nil): Int =
+    claimNextVersion(path, markers) { staging =>
       // base re-read inside the claim loop: a lost race re-merges on the
       // winner's state, so no concurrent append is dropped
       val merged = state(spark, path) match {
@@ -184,7 +191,6 @@ object MultisetStore {
       }
       merged.write.mode("overwrite").parquet(staging.toString)
     }
-  }
 
   /** LSM write path: persist ONLY the delta — O(|delta|) I/O regardless
     * of table size — and return the version it committed. Reads merge
@@ -197,19 +203,23 @@ object MultisetStore {
     * against an int column, a wider decimal) is merged on write instead
     * ([[append]]), which widens the stored schema: that one write costs
     * O(|state|), and the version it returns is a snapshot. */
-  def appendDelta(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L): Int = {
-    val delta = normalize(df, freq)
+  def appendDelta(spark: SparkSession, path: String, df: DataFrame, freq: Long = 1L): Int =
+    commitDelta(spark, path, normalize(df, freq), markers = Nil)
+
+  /** The one delta commit: fit `delta` to the stored schema, or merge it
+    * on write when that would narrow; `markers` land in whichever version
+    * commits. Then auto-compact once enough deltas are pending. */
+  private def commitDelta(spark: SparkSession, path: String, delta: DataFrame,
+      markers: Seq[String]): Int =
     fitted(spark, path, delta) match {
-      case None => append(spark, path, delta)
+      case None => merge(spark, path, delta, markers = markers)
       case Some(fit) =>
-        val v = claimNextVersion(path) { staging =>
+        val v = claimNextVersion(path, deltaMarker +: markers) { staging =>
           fit.write.mode("overwrite").parquet(staging.toString)
-          java.nio.file.Files.createFile(staging.resolve(deltaMarker))
         }
         if (chain(path).count(isDelta(path, _)) >= autoCompactDeltas) compact(spark, path)
         v
     }
-  }
 
   /** `delta` cast by name to the schema of the latest version at `path`
     * (as is, on an empty store), or None if a column would narrow. */
@@ -235,7 +245,8 @@ object MultisetStore {
     versionsOf(path).exists(v => java.nio.file.Files.exists(
       java.nio.file.Paths.get(versionDir(path, v), tokenFile(token))))
 
-  /** [[appendDelta]] guarded by an idempotence token: a delta already
+  /** [[appendDelta]] — the same schema fitting, merge-on-write fallback
+    * and auto-compaction — guarded by an idempotence token: a delta already
     * committed under `token` is not applied again (returns false). This
     * is the streaming-sink contract — Structured Streaming's foreachBatch
     * re-executes a micro-batch after failure, and the batchId token makes
@@ -249,13 +260,7 @@ object MultisetStore {
       token: String, freq: Long = 1L): Boolean = {
     if (hasToken(path, token)) false
     else {
-      val delta = normalize(df, freq)
-      claimNextVersion(path) { staging =>
-        delta.write.mode("overwrite").parquet(staging.toString)
-        java.nio.file.Files.createFile(staging.resolve(deltaMarker))
-        java.nio.file.Files.createFile(staging.resolve(tokenFile(token)))
-      }
-      if (chain(path).count(isDelta(path, _)) >= autoCompactDeltas) compact(spark, path)
+      commitDelta(spark, path, normalize(df, freq), Seq(tokenFile(token)))
       true
     }
   }
@@ -334,9 +339,12 @@ object MultisetStore {
     * two endpoints contributes nothing, because compaction changes layout,
     * not state (MultisetStoreSpec pins that, plus the reconciliation law
     * state(from) ⊎ changes = state(to)). `fromVersion = -1` reads the
-    * feed from the beginning of history. When every version in
-    * (from, to] is a delta, the feed is just those deltas merged: no
-    * state is read, so the feed of one delta append costs O(|delta|). */
+    * feed from the beginning of history; a `fromVersion` that
+    * [[vacuum]] has dropped raises IllegalArgumentException naming the
+    * retained range, since its state can no longer be read. When every
+    * version in (from, to] is a delta, the feed is just those deltas
+    * merged: no state is read, so the feed of one delta append costs
+    * O(|delta|). */
   def changes(spark: SparkSession, path: String,
       fromVersion: Int, toVersion: Int): DataFrame = {
     require(fromVersion < toVersion,
@@ -348,6 +356,10 @@ object MultisetStore {
       val to = state(spark, path, toVersion).getOrElse(
         throw new IllegalStateException(s"no multiset version <= $toVersion at $path"))
       state(spark, path, fromVersion) match {
+        case None if fromVersion >= 0 =>
+          val vs = versionsOf(path)
+          throw new IllegalArgumentException(s"changes from version $fromVersion " +
+            s"out of the retained range [${vs.head}, ${vs.last}] at $path")
         case None => to
         case Some(from) =>
           mergeFreq(Seq(to, from.withColumn(freqCol, -col(freqCol))))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Timing
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -87,16 +88,6 @@ object SegmentedIndex {
     base.unionByName(segment(spark, st.delta + table, base))
   }
 
-  /** Run `body`, reporting its wall-clock seconds to `timer` under
-    * `label` — the per-phase hook through which the bench cells time the
-    * same code the census keys run. */
-  def timed[A](timer: (String, Double) => Unit, label: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    timer(label, (System.nanoTime() - t0) / 1e9)
-    r
-  }
-
   /** Build an index under `root` and apply one batch edit, timing each
     * phase: `baseLabel` writes the base segment, `retract` writes
     * `tombstoneSql`'s ids as the tombstone relation, `append` writes the
@@ -106,11 +97,11 @@ object SegmentedIndex {
       baseLabel: String)(writeBase: String => Unit, tombstoneSql: String,
       writeDelta: String => Unit): State = {
     val st = State.under(root)
-    timed(timer, baseLabel)(writeBase(st.base))
-    timed(timer, "retract") {
+    Timing.timed(timer, baseLabel)(writeBase(st.base))
+    Timing.timed(timer, "retract") {
       spark.sql(tombstoneSql).write.mode("overwrite").parquet(st.tombstones)
     }
-    timed(timer, "append")(writeDelta(st.delta))
+    Timing.timed(timer, "append")(writeDelta(st.delta))
     st
   }
 

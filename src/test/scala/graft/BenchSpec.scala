@@ -44,4 +44,23 @@ class BenchSpec extends AnyFunSuite {
     assert(t.isDefined && t.get >= 0.0)
     assert(i == 3) // all attempts ran; the failed one contributed nothing
   }
+
+  test("servingCell: a failed write records one error; a good cell reports its faster probe") {
+    val failed = Bench.servingCell(spark, "unused", "bench_spec_serving_fail")(
+      _ => sys.error("index write failed"))(_ => () => spark.range(1).toDF("v"))
+    assert(failed == ((None, None)))
+    assert(Bench.errors.keys.filter(_.startsWith("bench_spec_serving_")).toSeq ==
+      Seq("bench_spec_serving_fail@unused"))
+
+    var probes = 0
+    val (w, p) = Bench.servingCell(spark, "unused", "bench_spec_serving_ok")(_ => ())(_ => () => {
+      probes += 1
+      Thread.sleep(if (probes == 1) 600 else 100)
+      spark.range(1).toDF("v")
+    })
+    assert(probes == 2)
+    assert(w.isDefined)
+    assert(p.exists(t => t >= 0.1 && t < 0.6), s"probe $p is not the faster of 0.6 s and 0.1 s")
+    assert(!Bench.errors.contains("bench_spec_serving_ok@unused"))
+  }
 }

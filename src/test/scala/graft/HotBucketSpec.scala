@@ -134,7 +134,7 @@ class HotBucketSpec extends AnyFunSuite {
   test("incremental probe: deltaMod reslices the boundary, output complete at the new split") {
     // Same 40-copy corpus under deltaMod=4: ids 0,4,...,36 form a
     // 10-doc delta, the other 30 the index — 10×30 cross-boundary pairs
-    // at Jaccard exactly 1.0. Pins that the dev knob (IncrDev's
+    // at Jaccard exactly 1.0. Pins that the deltaMod knob (SCALE.md's
     // fixed-size-delta measurements) moves BOTH the is_delta flag and
     // the per-side representative window together; a drifted window
     // partition would under-produce through the rep-expansion arm.

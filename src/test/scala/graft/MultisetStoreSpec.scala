@@ -155,6 +155,13 @@ class MultisetStoreSpec extends AnyFunSuite {
     val target = MultisetStore.snapshotAt(spark, p, 3)
       .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(reconstructed == target)
+    // once vacuum drops `from`, its state is gone: the feed raises an
+    // error naming the retained range instead of returning all of state(to)
+    MultisetStore.vacuum(p) // keeps v2 (the compaction snapshot) and v3
+    val gone = intercept[IllegalArgumentException](feed(0, 3))
+    assert(gone.getMessage.contains("[2, 3]"), gone.getMessage)
+    assert(feed(2, 3) == Map((2, "b") -> -1L))
+    assert(feed(-1, 3) == target, "fromVersion = -1 still reads from the start")
   }
 
   test("auto-compaction folds the chain once the delta trigger is reached") {

@@ -403,5 +403,15 @@ class StreamingSpec extends AnyFunSuite {
       .agg(sum(col(MultisetStore.freqCol))).head.getLong(0) == 2L) // 2 keys × freq 1
     assert(after.filter(col("r_regionkey") >= 2)
       .agg(sum(col(MultisetStore.freqCol))).head.getLong(0) == 6L) // 3 keys × freq 2
+
+    // a batch of a wider type (bigint into the int r_regionkey) is fitted
+    // like appendDelta's: merged on write, so the table still reads back,
+    // and its token still makes the replay a no-op
+    val wide = region.withColumn("r_regionkey", col("r_regionkey").cast("bigint"))
+    val rows = MultisetStore.read(spark, path).count()
+    assert(MultisetStore.appendDeltaIdempotent(spark, path, wide, "ingest_wide"))
+    assert(MultisetStore.read(spark, path).count() == rows + region.count())
+    assert(!MultisetStore.appendDeltaIdempotent(spark, path, wide, "ingest_wide"))
+    assert(MultisetStore.read(spark, path).count() == rows + region.count())
   }
 }
