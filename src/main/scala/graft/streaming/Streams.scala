@@ -78,11 +78,6 @@ object Streams {
       start_ts: java.sql.Timestamp, end_ts: java.sql.Timestamp)
   final case class SessionState(lastTs: Long, sessionId: Long, n: Int, startTs: Long)
 
-  /** Gap-based sessionization with explicit keyed state
-    * (flatMapGroupsWithState) — the Spark analog of the custom stateful
-    * operator a streaming engine would hand-roll. Batch-callable for
-    * testing: in batch mode each group sees all its events at once.
-    */
   /** Streaming admission control: each incoming document is probed
     * against a STATIC near-dup index (the signature side of
     * `dedup_incremental`) and emitted once per near-duplicate it has
@@ -324,6 +319,11 @@ object Streams {
       .select(col("user_id"), col("n_events"), col("start_ts"), col("end_ts"))
   }
 
+  /** Gap-based sessionization with explicit keyed state
+    * (flatMapGroupsWithState) — the Spark analog of the custom stateful
+    * operator a streaming engine would hand-roll. Batch-callable for
+    * testing: in batch mode each group sees all its events at once.
+    */
   def sessionize(events: Dataset[Evt], gapMinutes: Int): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     val gapMs = gapMinutes * 60000L

@@ -273,6 +273,46 @@ class GoldenSpec extends AnyFunSuite {
     }
   }
 
+  // name resolution on the parsed plan: shapes NameResolutionSpec
+  // generates, and the case it found (a correlated scalar subquery over
+  // a view whose body is a UNION), pinned as goldens
+  test("graft names resolve in every relation position") {
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val g = new GraftSession(spark, tmp("golden_res_views_"), tmp("golden_res_ms_"))
+    def qg(sql: String, expected: String): Unit = Golden.check(g, sql, expected)
+    g.sql("CREATE MULTISET TABLE gr_ms (k INT, s TEXT)")
+    try {
+      g.sql("INSERT INTO gr_ms VALUES (1, 'a'), (1, 'a'), (2, 'b')")
+      g.sql("CREATE VIEW gr_v AS SELECT k, s FROM gr_ms UNION ALL SELECT 3, 'c'")
+      // comma join of a view and a multiset table; db.view.col qualifiers
+      qg("""SELECT default.gr_v.k, gr_ms.s FROM gr_v, default.gr_ms
+           |WHERE gr_v.k = gr_ms.k ORDER BY 1, 2""".stripMargin,
+        "|1|a|\n|1|a|\n|1|a|\n|1|a|\n|2|b|")
+      // correlated scalar subquery over a view whose body is a UNION
+      qg("SELECT s, (SELECT count(*) FROM gr_ms WHERE gr_ms.s = v.s) AS n FROM gr_v v ORDER BY s",
+        "|a|2|\n|a|2|\n|b|1|\n|c|0|")
+      // a CTE shadows the view's name; IN subquery over a multiset table
+      qg("WITH gr_v AS (SELECT 9 AS k) SELECT k FROM gr_v WHERE k NOT IN (SELECT k FROM gr_ms)",
+        "|9|")
+      // time travel under a user alias; the change feed under the default one
+      g.sql("DELETE FROM gr_ms WHERE k = 2")
+      qg("SELECT count(*), count(h.k) FROM gr_ms AS OF VERSION 1 h", "|3|3|")
+      qg("SELECT gr_ms.k, gr_ms.__freq FROM gr_ms CHANGES BETWEEN 1 AND 2", "|2|-1|")
+      // Spark would re-parse a temp view's text where graft names don't resolve
+      val tv = intercept[IllegalArgumentException](
+        g.sql("CREATE TEMP VIEW gr_tv AS SELECT * FROM gr_ms"))
+      assert(tv.getMessage.contains("CREATE VIEW"))
+      // a definition that closes a view cycle is refused, naming the cycle
+      g.sql("CREATE VIEW gr_a AS SELECT 1 AS k")
+      g.sql("CREATE VIEW gr_b AS SELECT k FROM gr_a")
+      val cyc = intercept[IllegalArgumentException](
+        g.sql("CREATE OR REPLACE VIEW gr_a AS SELECT k FROM gr_b"))
+      assert(cyc.getMessage.contains("default.gr_a -> default.gr_b -> default.gr_a"))
+      qg("SELECT k FROM gr_b", "|1|") // the old definition stands
+      Seq("gr_b", "gr_a", "gr_v").foreach(v => g.sql(s"DROP VIEW $v"))
+    } finally g.sql("DROP TABLE IF EXISTS gr_ms")
+  }
+
   // the reference's benchmark load path: DIRECTORY csv → ->> + CAST →
   // INSERT (benchmarking/_tpch/incresql_runner.rs:182-350)
   test("csv load path: directory scan, json extraction, typed insert") {

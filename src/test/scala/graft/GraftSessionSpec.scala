@@ -49,6 +49,8 @@ class GraftSessionSpec extends AnyFunSuite {
     val r = gs.sql("""select 'a->b' as s, '{"k":9}' ->> "$.k" as k""").collect()(0)
     assert(r.getString(0) == "a->b")
     assert(r.getString(1) == "9")
+    // a backtick identifier is as opaque as a literal
+    assert(gs.sql("SELECT 1 AS `a->b`").columns.toSeq == Seq("a->b"))
   }
 
   test("dialect rewrites never fire inside string literals") {
@@ -62,6 +64,9 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(r.getString(2) == "@@max_allowed_packet")
     assert(r.getString(3) == "limit 1, 2")
     assert(r.getString(4) == spark.catalog.currentDatabase) // real one still rewrites
+    // a quote inside a backtick identifier opens no literal
+    val ticked = gs.sql("SELECT 1 AS `it's`, name FROM incresql.databases")
+    assert(ticked.columns.toSeq == Seq("it's", "name") && ticked.count() >= 3)
   }
 
   test("join/sample keywords after a system table are not eaten as its alias") {
@@ -216,7 +221,36 @@ class GraftSessionSpec extends AnyFunSuite {
            |SELECT k, v FROM $tbl ORDER BY k;""".stripMargin)
         .collect().map(r => (r.getInt(0), r.getString(1)))
       assert(out.toSeq == Seq((1, "A;B"), (2, "c")))
+      // nor does a backtick identifier split the script
+      assert(gs.script("SELECT 1 AS `a;b`").columns.toSeq == Seq("a;b"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("no statement leaves a temp view behind") {
+    val s = spark.newSession()
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val g = new GraftSession(s, tmp("graft_tv_views_"), tmp("graft_tv_ms_"))
+    val d = java.nio.file.Files.createTempDirectory("graft_tv_csv_")
+    java.nio.file.Files.writeString(d.resolve("a.csv"), "1,x\n")
+    def tempViews = s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    Seq("CREATE MULTISET TABLE tv_t (k INT, v TEXT)",
+      "INSERT INTO tv_t VALUES (1, 'a'), (2, 'b')",
+      "DELETE FROM tv_t WHERE k = 2",
+      "SELECT * FROM tv_t",
+      "SELECT * FROM tv_t AS OF VERSION 1",
+      "SELECT * FROM tv_t CHANGES BETWEEN 0 AND 2",
+      s"""SELECT * FROM DIRECTORY "$d"""",
+      "CREATE VIEW tv_v AS SELECT k FROM tv_t",
+      "CREATE VIEW tv_vv AS SELECT k FROM tv_v",
+      "SELECT * FROM tv_vv",
+      "USE incresql",
+      "SELECT name FROM tables",
+      "USE default",
+      "DROP VIEW tv_vv",
+      "DROP VIEW tv_v",
+      "DROP TABLE tv_t").foreach(stmt => g.sql(stmt).collect())
+    assert(tempViews == before)
   }
 
   test("MERGE: upsert updates matches, inserts the rest, errors on multi-match") {
