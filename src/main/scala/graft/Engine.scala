@@ -1,15 +1,18 @@
 package graft
 
+import graft.sources.StoredParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Session + table access layer.
   *
   * Mirrors the reference's catalog/table surface
-  * (/root/reference/src/catalog/src/lib.rs:15-27 — name → table resolution)
-  * re-expressed as Spark temp views over the driver-generated parquet
-  * tables. All reads go through [[table]] so schema quirks (ns timestamps
-  * in `events`) are normalized in exactly one place.
+  * (catalog/src/lib.rs:15-27 — name → table resolution, with a table's
+  * columns declared once and kept) over the driver-generated parquet
+  * tables. Every read goes through [[table]], which plans from the
+  * input's footer read in the driver ([[graft.sources.StoredParquet.input]]),
+  * so building a table's plan launches no Spark job, and normalizes
+  * schema quirks (ns timestamps in `events`) in exactly one place.
   */
 object Engine {
 
@@ -81,7 +84,7 @@ object Engine {
     catch { case _: org.apache.spark.sql.AnalysisException => () }
 
   // (session, dir, name) → DataFrame. Plans are immutable; caching skips
-  // re-listing parquet footers on every query invocation.
+  // the footer read and the SchemaGuard check on every later invocation.
   private val tableCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
@@ -113,8 +116,9 @@ object Engine {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     evictStopped()
     tableCache.computeIfAbsent((spark, sfDir, name), { case (s, dir, n) =>
+      // before the footer conversion, which reads nanosAsLong
       ensureNanosConf(s)
-      val df = s.read.parquet(s"$dir/$n.parquet")
+      val df = StoredParquet.input(s, s"$dir/$n.parquet")
       val normalized = n match {
         case "events" =>
           import org.apache.spark.sql.types._

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.StoredParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic sf1 bench-data generator: scales the driver-provided
@@ -55,7 +56,7 @@ object GenData {
   def generate(spark: SparkSession, inDir: String, outDir: String, factor: Int,
       tables: Option[Set[String]] = None): Unit = {
     def wanted(t: String): Boolean = tables.forall(_.contains(t))
-    def in(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")
+    def in(t: String): DataFrame = StoredParquet.input(spark, s"$inDir/$t.parquet")
 
     /** Union of `factor` replicas of `df`, each transformed by per-replica
       * select expressions (replica id substituted for `{r}`). */

@@ -53,18 +53,28 @@ final class IncrementalAggView(
   }
 
   /** Apply one freq-annotated delta batch → next snapshot version. */
-  def applyDelta(delta: DataFrame): Unit = {
+  def applyDelta(delta: DataFrame): Unit = merge(checked(delta))
+
+  /** [[applyDelta]] once per `batchId`: the id commits in the refresh's
+    * version, and a batch whose id the store already holds is skipped
+    * (returns false) — a replayed micro-batch is not counted twice. */
+  def applyBatch(delta: DataFrame, batchId: String): Boolean =
+    MultisetStore.appendIdempotent(spark, statePath, partials(checked(delta)), batchId, measures)
+
+  private def checked(delta: DataFrame): DataFrame = {
     require(currentVersion >= 0, "view not initialized")
     require(delta.columns.contains(freqCol), s"delta needs $freqCol")
-    merge(delta)
+    delta
   }
 
-  // each delta row is its own partial: cnt = freq, sum = value × freq
   private def merge(delta: DataFrame): Unit =
-    MultisetStore.append(spark, statePath, delta.select(
-      keyCols.map(col) ++ (col(freqCol).cast(LongType).as(freqCol) +:
-        sumCols.map(c => (col(c).cast(DecimalType(18, 2)) * col(freqCol))
-          .cast(DecimalType(38, 2)).as(sumName(c)))): _*), measures = measures)
+    MultisetStore.append(spark, statePath, partials(delta), measures = measures)
+
+  // each delta row is its own partial: cnt = freq, sum = value × freq
+  private def partials(delta: DataFrame): DataFrame = delta.select(
+    keyCols.map(col) ++ (col(freqCol).cast(LongType).as(freqCol) +:
+      sumCols.map(c => (col(c).cast(DecimalType(18, 2)) * col(freqCol))
+        .cast(DecimalType(38, 2)).as(sumName(c)))): _*)
 
   /** Drop every snapshot older than the current one; ends time travel into them. */
   def vacuum(): Unit = MultisetStore.vacuum(statePath)
@@ -82,7 +92,7 @@ final class IncrementalAggView(
 
   def currentVersion: Int = ViewStore.latest(statePath)
 
-  /** Continuous maintenance: one applyDelta per micro-batch. */
+  /** Continuous maintenance: one applyBatch per micro-batch. */
   def maintainFrom(deltaStream: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    ViewStore.maintain(deltaStream)(applyDelta)
+    ViewStore.maintain(deltaStream) { (batch, id) => applyBatch(batch, id); () }
 }

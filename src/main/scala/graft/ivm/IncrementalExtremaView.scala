@@ -40,8 +40,16 @@ final class IncrementalExtremaView(
 
   /** Merge a freq-annotated change set (+n insert, −n retract). */
   def applyDelta(delta: DataFrame): Unit =
-    MultisetStore.append(spark, statePath,
-      delta.select((stateCols :+ freqCol).map(col): _*))
+    MultisetStore.append(spark, statePath, stateRows(delta))
+
+  /** [[applyDelta]] once per `batchId`: the id commits in the merge's
+    * version, and a batch whose id the store already holds is skipped
+    * (returns false). */
+  def applyBatch(delta: DataFrame, batchId: String): Boolean =
+    MultisetStore.appendIdempotent(spark, statePath, stateRows(delta), batchId)
+
+  private def stateRows(delta: DataFrame): DataFrame =
+    delta.select((stateCols :+ freqCol).map(col): _*)
 
   /** Current min/max per key. Keys whose multiset retracted to empty
     * vanish, like the reference's zero-freq groups. */
@@ -81,7 +89,7 @@ final class IncrementalExtremaView(
       .select((keyCols.map(col) :+ col(valCol) :+ col("rnk").cast("int").as("rnk")): _*)
   }
 
-  /** Continuous maintenance: one applyDelta per micro-batch. */
+  /** Continuous maintenance: one applyBatch per micro-batch. */
   def maintainFrom(deltaStream: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    ViewStore.maintain(deltaStream)(applyDelta)
+    ViewStore.maintain(deltaStream) { (batch, id) => applyBatch(batch, id); () }
 }

@@ -101,7 +101,9 @@ final class IncrementalJoinView(
 
   /** Continuous maintenance from a stream of A-side deltas (a fact stream
     * joining a slowly-changing dimension whose own updates arrive via
-    * explicit applyDelta calls): one refresh per micro-batch. */
+    * explicit applyDelta calls): one refresh per micro-batch. No replay
+    * guard yet: the three stores commit one after another, and a token
+    * needs them to commit as one step. */
   def maintainFrom(deltaAStream: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    ViewStore.maintain(deltaAStream) { batch => applyDelta(Some(batch), None); () }
+    ViewStore.maintain(deltaAStream) { (batch, _) => applyDelta(Some(batch), None); () }
 }

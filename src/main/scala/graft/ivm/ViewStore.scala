@@ -20,11 +20,20 @@ private[ivm] object ViewStore {
     MultisetStore.snapshotAt(spark, path, v)
   }
 
-  /** One `apply` per non-empty micro-batch of a freq-annotated delta stream:
-    * the refresh loop of the reference's storage.rs:34-63 log-section design. */
-  def maintain(deltaStream: DataFrame)(apply: DataFrame => Unit): StreamingQuery =
+  /** One `apply(batch, batchId)` per non-empty micro-batch of a
+    * freq-annotated delta stream: the refresh loop of the reference's
+    * storage.rs:34-63 log-section design. `batchId` is the streaming
+    * query's id and the micro-batch number, so a micro-batch that
+    * Structured Streaming re-executes after a restart from its checkpoint
+    * carries the same id, while a new query over the same view starts
+    * afresh at batch 0 under an id of its own. */
+  def maintain(deltaStream: DataFrame)(apply: (DataFrame, String) => Unit): StreamingQuery =
     deltaStream.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => if (!batch.isEmpty) apply(batch) }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // StreamExecution sets the query id on the thread that runs the batch
+        val query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if (!batch.isEmpty) apply(batch, s"${query}_$batchId")
+      }
       .start()
 }

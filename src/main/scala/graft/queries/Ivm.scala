@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Engine, QueryDef, Timing}
 import graft.ivm.IncrementalAggView
-import graft.sources.SegmentedIndex
+import graft.sources.{SegmentedIndex, StoredParquet}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -870,7 +870,7 @@ object Ivm {
       start: DataFrame => StreamingQuery): Unit = {
     val dir = Engine.scratchDir("graft_ivm_edits_")
     batches.zipWithIndex.foreach { case (b, i) => b.write.parquet(s"$dir/b$i") }
-    val q = start(spark.readStream.schema(spark.read.parquet(s"$dir/b0").schema)
+    val q = start(spark.readStream.schema(StoredParquet.schema(spark, s"$dir/b0"))
       .option("recursiveFileLookup", "true").parquet(dir))
     try q.processAllAvailable() finally q.stop()
   }

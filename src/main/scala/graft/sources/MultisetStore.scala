@@ -257,13 +257,19 @@ object MultisetStore {
     * cover the stream's replay horizon. Auto-compaction is safe: tokens
     * survive until vacuum, not until compact. */
   def appendDeltaIdempotent(spark: SparkSession, path: String, df: DataFrame,
-      token: String, freq: Long = 1L): Boolean = {
-    if (hasToken(path, token)) false
-    else {
-      commitDelta(spark, path, normalize(df, freq), Seq(tokenFile(token)))
-      true
-    }
-  }
+      token: String, freq: Long = 1L): Boolean =
+    once(path, token)(marker => commitDelta(spark, path, normalize(df, freq), marker))
+
+  /** [[append]] under the same idempotence token as
+    * [[appendDeltaIdempotent]]: the token commits in the merged snapshot's
+    * version, and a delta already committed under it is not applied again
+    * (returns false). */
+  def appendIdempotent(spark: SparkSession, path: String, df: DataFrame,
+      token: String, measures: Seq[String] = Nil): Boolean =
+    once(path, token)(marker => merge(spark, path, normalize(df, 1L), measures, marker))
+
+  private def once(path: String, token: String)(commit: Seq[String] => Int): Boolean =
+    !hasToken(path, token) && { commit(Seq(tokenFile(token))); true }
 
   /** Fold the snapshot-plus-deltas chain into a single fresh snapshot
     * version (the LSM compaction step). Older versions stay on disk for

@@ -120,6 +120,47 @@ class IvmSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("replay guard: a batchId applied twice changes neither version nor view") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("ivm_replay_").toString
+    val agg = new IncrementalAggView(spark, Seq("k"), Seq("v"), s"$tmp/agg")
+    agg.initialize(Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v"))
+    val delta = Seq(("a", 3.0, 1L), ("b", 2.0, -1L)).toDF("k", "v", agg.freqCol)
+    assert(agg.applyBatch(delta, "q_0"))
+    val (version, view) = (agg.currentVersion, norm(agg.current()))
+    assert(!agg.applyBatch(delta, "q_0"))
+    assert(agg.currentVersion == version && norm(agg.current()) == view)
+    assert(view == Seq("[a,2,4.00,2.0]"))
+
+    val ext = new graft.ivm.IncrementalExtremaView(spark, Seq("k"), "v", s"$tmp/ext")
+    ext.initialize(Seq(("a", 1), ("a", 5)).toDF("k", "v"))
+    val retract = Seq(("a", 5, -1L)).toDF("k", "v", MultisetStore.freqCol)
+    assert(ext.applyBatch(retract, "q_0"))
+    val (versions, extrema) = (MultisetStore.versions(s"$tmp/ext"), norm(ext.current()))
+    assert(!ext.applyBatch(retract, "q_0"))
+    assert(MultisetStore.versions(s"$tmp/ext") == versions && norm(ext.current()) == extrema)
+    assert(extrema == Seq("[a,1,1]"))
+  }
+
+  test("replay guard: a second stream over the same view is not taken for a replay") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("ivm_replay_streams_").toString
+    val view = new IncrementalAggView(spark, Seq("k"), Seq("v"), path)
+    view.initialize(Seq(("a", 1.0)).toDF("k", "v"))
+    val delta = Seq(("a", 1.0, 1L)).toDF("k", "v", view.freqCol)
+    for (_ <- 1 to 2) { // each stream's only micro-batch is batch 0
+      val dir = java.nio.file.Files.createTempDirectory("ivm_replay_in_").toString
+      delta.write.mode("overwrite").parquet(s"$dir/d")
+      val q = view.maintainFrom(spark.readStream.schema(delta.schema)
+        .option("recursiveFileLookup", "true").parquet(dir))
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(norm(view.current().select("k", "cnt")) == Seq("[a,3]"))
+    val tokens = MultisetStore.versions(path).flatMap(v =>
+      Option(new java.io.File(s"$path/v$v").list()).toSeq.flatten.filter(_.startsWith("_TOKEN_")))
+    assert(tokens.size == 2 && tokens.distinct.size == 2, tokens)
+  }
+
   test("freq > 1 counts as that many rows") {
     import spark.implicits._
     val statePath = java.nio.file.Files.createTempDirectory("ivm_spec3_").toString

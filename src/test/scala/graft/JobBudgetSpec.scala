@@ -7,10 +7,12 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Building a plan over engine-written state launches no Spark job: the
-  * scan schema comes from the stored footer, never from inference. A
-  * schema-inference regression on any of these paths shows up here as a
-  * job started while only a DataFrame was being built. */
+/** Building a plan over the input tables or engine-written state launches
+  * no Spark job: the scan schema comes from a footer read in the driver,
+  * never from inference. So does building every census key's DataFrame,
+  * except the pinned builders that write, build an index or maintain a
+  * view on the way. A schema-inference regression on any of these paths
+  * shows up here as a job started while only a DataFrame was being built. */
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -81,6 +83,47 @@ class JobBudgetSpec extends AnyFunSuite {
     join.initialize(Seq((1, "a")).toDF("k", "av"), Seq((1, "b")).toDF("k", "bv"))
     join.applyDelta(Some(Seq((1, "a2", 1L)).toDF("k", "av", join.freqCol)), None)
     assert(jobsDuring(join.current()) == 0)
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  test("Engine.registerAll plans all ten input tables with 0 jobs") {
+    // a new session: Engine.table caches plans per session, and this one
+    // has read no table yet
+    val fresh = spark.newSession()
+    assert(jobsDuring(Engine.registerAll(fresh, sf)) == 0)
+    assert(Engine.allTables.forall(fresh.catalog.tableExists))
+  }
+
+  /** Builders that run Spark jobs while they build, by design; none of
+    * them is built here. */
+  private val buildsWithJobs: Set[String] = Set(
+    // the statement writes a table, a file or multiset versions
+    "op_update", "op_merge", "op_insert", "op_roundtrip_json", "op_roundtrip_orc",
+    "op_multiset_freq", "op_multiset_compact", "op_multiset_changes",
+    "op_multiset_sql", "op_multiset_asof",
+    // it builds or appends to an index, trains a model, or collects to the driver
+    "dedup_indexed", "dedup_ngram_jaccard", "dedup_containment",
+    "dedup_embedding_cosine_wp", "dedup_clusters", "dedup_keep_best",
+    "dedup_span_indexed", "dedup_semantic", "ta_bpe_merges", "ta_bpe_encode",
+    "ta_bm25_indexed", "ta_bm25_append", "ann_ivf_indexed", "ann_ivf_append",
+    "ann_ivf_trained", "ann_ivf_sq8_idx", "ann_ivf_pq_idx", "ann_kmeans_train",
+    "ann_rproj_sq8", "layout_bucketed_join",
+    // it maintains a view or index through its deltas before the final read
+    "ivm_refresh", "ivm_extrema", "ivm_distinct", "ivm_topk", "ivm_join",
+    "ivm_pipeline", "ivm_postings", "ivm_bm25", "ivm_nb", "ivm_lm", "ivm_ann",
+    "ivm_dedup", "ivm_bm25_lsm", "ivm_ann_stream", "ivm_bm25_stream",
+    "ivm_dedup_stream", "ivm_nb_stream", "ivm_lm_stream")
+
+  test("every census builder off the pinned list plans with 0 jobs") {
+    val names = SparkEntry.allDefs.map(_.name).toSet
+    assert(buildsWithJobs.subsetOf(names),
+      s"stale entries: ${(buildsWithJobs -- names).toSeq.sorted.mkString(", ")}")
+    val offenders = SparkEntry.allDefs.filterNot(d => buildsWithJobs.contains(d.name)).flatMap { d =>
+      val jobs = try jobsDuring(d.run(spark, sf)) finally Engine.clearSwapCaches(spark)
+      if (jobs == 0) None else Some(s"${d.name}: $jobs")
+    }
+    assert(offenders.isEmpty, offenders.mkString("jobs while building:\n", "\n", ""))
   }
 
   test("GraftSession.sql(\"SELECT 1\") with a multiset table registered launches 0 jobs") {

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The stored-schema reader and the single-aggregation view refresh:
   *   - the footer schema plans the same relation inference would, for
   *     every type the dialect maps, the empty v0 of a new multiset table
-  *     included;
+  *     included, and for every input table;
   *   - a directory it cannot vouch for raises, naming the path;
   *   - an IncrementalAggView refresh has exactly one shuffle;
   *   - random signed-delta histories keep the view equal to a GROUP BY
@@ -89,6 +89,45 @@ class StoredParquetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(spark.read.parquet(foreign).count() == 1, "the file itself is readable")
     val e4 = intercept[IllegalStateException](StoredParquet.read(spark, foreign))
     assert(e4.getMessage.contains(foreign) && e4.getMessage.contains(StoredParquet.rowMetadataKey))
+  }
+
+  test("input: the footer schema equals the inferred one for every input table, file or directory") {
+    val tiers = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+    for (sf <- tiers; t <- Engine.allTables) {
+      val f = s"$sf/$t.parquet"
+      assert(StoredParquet.input(spark, f).schema == spark.read.parquet(f).schema, f)
+    }
+    val parts = s"${tmp("graft_sp_parts_")}/orders.parquet"
+    Engine.table(spark, tiers.head, "orders").repartition(3).write.parquet(parts)
+    assert(StoredParquet.input(spark, parts).schema == spark.read.parquet(parts).schema)
+    assert(StoredParquet.input(spark, parts).count() == spark.read.parquet(parts).count())
+  }
+
+  test("input: a footer without Spark's row metadata converts as inference does; a missing input raises") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val file = s"${tmp("graft_sp_input_")}/t.parquet"
+    val conf = spark.sessionState.newHadoopConf()
+    val msg = MessageTypeParser.parseMessageType(
+      "message m { required int32 x; optional int64 t (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter.builder(
+      HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
+      .withType(msg).withConf(conf).build()
+    try w.write(new SimpleGroupFactory(msg).newGroup().append("x", 7).append("t", 1234567L))
+    finally w.close()
+    val df = StoredParquet.input(spark, file)
+    assert(df.schema == spark.read.parquet(file).schema)
+    // required x plans nullable, as every file scan does; t is raw nanos
+    // under nanosAsLong, which Engine.build sets
+    assert(df.schema == StructType(Seq(
+      StructField("x", IntegerType, nullable = true), StructField("t", LongType))))
+    assert(rows(df) == Seq("[7,1234567]"))
+
+    val missing = s"${tmp("graft_sp_noinput_")}/lineitem.parquet"
+    val e = intercept[IllegalStateException](StoredParquet.input(spark, missing))
+    assert(e.getMessage.contains(missing))
   }
 
   test("applyDelta's executed plan holds exactly one shuffle Exchange") {
