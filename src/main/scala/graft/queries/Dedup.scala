@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Engine, QueryDef}
+import graft.sources.StoredParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -400,8 +401,8 @@ object Dedup {
   /** Batch-side half: signature the delta, probe the STORED bands. */
   def probeBandIndex(spark: SparkSession, dir: String, indexPath: String,
       threshold: Double = 0.5, deltaMod: Int = 10): DataFrame = {
-    spark.read.parquet(s"$indexPath/groups").createOrReplaceTempView("bidx_groups")
-    spark.read.parquet(s"$indexPath/bands").createOrReplaceTempView("bidx_bands")
+    StoredParquet.read(spark, s"$indexPath/groups").createOrReplaceTempView("bidx_groups")
+    StoredParquet.read(spark, s"$indexPath/bands").createOrReplaceTempView("bidx_bands")
     probeBandViews(spark, dir, threshold, deltaMod)
   }
 
@@ -731,8 +732,8 @@ object Dedup {
     * row for row). */
   def probeNgramIndex(spark: SparkSession, path: String,
       threshold: Double = 0.4): DataFrame = {
-    spark.read.parquet(s"$path/rinv").createOrReplaceTempView("ngram_idx_rinv")
-    spark.read.parquet(s"$path/sh").createOrReplaceTempView("ngram_idx_sh")
+    StoredParquet.read(spark, s"$path/rinv").createOrReplaceTempView("ngram_idx_rinv")
+    StoredParquet.read(spark, s"$path/sh").createOrReplaceTempView("ngram_idx_sh")
     spark.sql(ngramJaccardSql("ngram_idx_rinv", "ngram_idx_sh", threshold))
   }
 
@@ -1893,7 +1894,7 @@ object Dedup {
   def probeAnchorIndex(spark: SparkSession, dir: String, indexPath: String,
       deltaMod: Int = 10): DataFrame = {
     docs(spark, dir)
-    val index = spark.read.parquet(s"$indexPath/anchors")
+    val index = StoredParquet.read(spark, s"$indexPath/anchors")
       .select(col("doc_id").as("index_id"), col("fp"))
     val delta = spark.sql(
       s"""SELECT doc_id AS delta_id, fp FROM (

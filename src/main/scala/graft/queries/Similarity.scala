@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Engine, QueryDef}
+import graft.sources.StoredParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -625,7 +626,7 @@ object Similarity {
   def probeIvfIndex(spark: SparkSession, dir: String, indexPath: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame = {
     emb(spark, dir)
-    spark.read.parquet(indexPath).createOrReplaceTempView("ivf_index")
+    StoredParquet.read(spark, indexPath).createOrReplaceTempView("ivf_index")
     spark.sql(
       s"""WITH cent AS ($centroidSql),
          |queries AS (
@@ -698,7 +699,7 @@ object Similarity {
       cents: Array[Array[Double]], nQueries: Int = 8, k: Int = 10,
       nProbe: Int = 4): DataFrame = {
     emb(spark, dir)
-    spark.read.parquet(indexPath).createOrReplaceTempView("ivfw_index")
+    StoredParquet.read(spark, indexPath).createOrReplaceTempView("ivfw_index")
     import spark.implicits._
     cents.zipWithIndex.toSeq.map { case (cv, i) => (i, cv.toSeq) }
       .toDF("cid", "cv").createOrReplaceTempView("ivfw_cent")
@@ -1431,7 +1432,7 @@ object Similarity {
   def probeIvfSq8Index(spark: SparkSession, dir: String, indexPath: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
       rerank: Int = 50): DataFrame = {
-    spark.read.parquet(indexPath).createOrReplaceTempView("sq8_index")
+    StoredParquet.read(spark, indexPath).createOrReplaceTempView("sq8_index")
     probeSq8View(spark, dir, nQueries, k, nProbe, rerank)
   }
 
@@ -1522,7 +1523,7 @@ object Similarity {
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
       shortlist: Int = 200, rerank: Int = 50): DataFrame = {
     emb(spark, dir)
-    spark.read.parquet(indexPath).createOrReplaceTempView("sq8_index")
+    StoredParquet.read(spark, indexPath).createOrReplaceTempView("sq8_index")
     spark.sql(
       s"""WITH cent AS ($centroidSql),
          |qz AS (
@@ -2161,7 +2162,7 @@ object Similarity {
   def probeIvfPqIndex(spark: SparkSession, dir: String, indexPath: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
       rerank: Int = 50): DataFrame = {
-    spark.read.parquet(indexPath).createOrReplaceTempView("pq_index")
+    StoredParquet.read(spark, indexPath).createOrReplaceTempView("pq_index")
     probePqView(spark, dir, nQueries, k, nProbe, rerank)
   }
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Engine, QueryDef}
+import graft.sources.StoredParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Text-analysis operators for training-data pipelines over `documents`:
@@ -1245,7 +1246,7 @@ object TextAnalysis {
       return spark.sql(
         """SELECT CAST(NULL AS BIGINT) AS query_id, CAST(NULL AS BIGINT) AS cand_id,
           |  CAST(NULL AS BIGINT) AS score, CAST(NULL AS INT) AS rnk WHERE false""".stripMargin)
-    val post = spark.read.parquet(s"$path/postings")
+    val post = StoredParquet.read(spark, s"$path/postings")
     val pruned =
       if (toks.length <= isinPushCap) post.filter(col("token").isin(toks.toIndexedSeq: _*))
       else post.join(
@@ -1255,7 +1256,7 @@ object TextAnalysis {
             .add("token", org.apache.spark.sql.types.StringType, nullable = false))),
         Seq("token"), "left_semi")
     pruned.createOrReplaceTempView("bm25_idx_post")
-    spark.read.parquet(s"$path/doclen").createOrReplaceTempView("bm25_idx_dl")
+    StoredParquet.read(spark, s"$path/doclen").createOrReplaceTempView("bm25_idx_dl")
     spark.sql(bm25Sql(qtRel, k, postRel = "bm25_idx_post",
       dlRel = "SELECT doc_id, dl FROM bm25_idx_dl", excludeSelf = excludeSelf))
   }

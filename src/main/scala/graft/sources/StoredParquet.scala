@@ -28,6 +28,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     `ParquetFileFormat.readSchemaFromFooter` — [[rowMetadataKey]] when
   *     the footer has it, else the parquet schema converted under the
   *     session's parquet conf.
+  * A directory may be partitioned into `k=v` subdirectories: the footer
+  * is read from the first part file below them, and Spark's partition
+  * discovery adds the partition columns, as it does without a schema.
   * There is no fallback to inference: a path with no part file raises an
   * error naming it. */
 object StoredParquet {
@@ -57,17 +60,24 @@ object StoredParquet {
   }
 
   /** The footer metadata of `path` itself when it is a file, else of its
-    * first part file by name. */
+    * first part file by name, looking into `k=v` partition directories
+    * when `path` holds no part file itself. */
   private def footer(spark: SparkSession, path: String): (Path, FileMetaData) = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val parts =
-      try fs.listStatus(root).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      } catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-    val first = parts.map(_.getPath).sortBy(_.getName).headOption.getOrElse(
+    def firstPart(dir: Path): Option[Path] = {
+      val entries =
+        try fs.listStatus(dir).filterNot { s =>
+          val n = s.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }.sortBy(_.getPath.getName)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      val (files, dirs) = entries.partition(_.isFile)
+      files.headOption.map(_.getPath).orElse(dirs.iterator
+        .filter(_.getPath.getName.contains('=')).flatMap(d => firstPart(d.getPath)).nextOption())
+    }
+    val first = firstPart(root).getOrElse(
       throw new IllegalStateException(s"no parquet part file in $path"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
     try (first, reader.getFooter.getFileMetaData)

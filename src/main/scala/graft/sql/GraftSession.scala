@@ -3,9 +3,16 @@ package graft.sql
 import graft.functions.GraftFunctions
 import graft.sources.{MultisetStore, StoredParquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation, UnresolvedTableValuedFunction}
-import org.apache.spark.sql.catalyst.expressions.{Alias, SubqueryExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{CreateTempView, CreateView, LogicalPlan, Project, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, RelationTimeTravel,
+  UnresolvedAttribute, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedRelation,
+  UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, CreateTempView, CreateView,
+  DeleteAction, DeleteFromTable, DropNamespace, DropTable, DropView, InsertAction,
+  InsertIntoStatement, LogicalPlan, MergeIntoTable, Project, ShowFunctions, ShowTables,
+  SubqueryAlias, UnresolvedWith, UpdateAction, UpdateTable}
+import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.execution.command.{ExplainCommand, ShowNamespacesCommand}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
 
@@ -17,13 +24,23 @@ import scala.util.matching.Regex
   * mirrors the reference's runtime/src/connection.rs:35-136:
   *
   *   SHOW FUNCTIONS / DATABASES / TABLES, USE db, CREATE/DROP DATABASE,
-  *   CREATE TABLE (incresql types), CREATE/DROP VIEW, DROP TABLE,
-  *   COMPACT TABLE, and queries/DML in the MySQL-ish dialect:
+  *   CREATE [MULTISET] TABLE (incresql types), CREATE/DROP VIEW, DROP
+  *   TABLE, INSERT, DELETE [LIMIT n], UPDATE, MERGE, EXPLAIN [FORMATTED],
+  *   COMPACT/VACUUM TABLE, and queries in the MySQL-ish dialect:
   *     - `FROM DIRECTORY "path" [WITH(delimiter="c")]` recursive CSV
   *       scan emitting one `data` JSON-array column (file_scan.rs:15-52)
   *     - `LIMIT offset, n` (select.rs:232-254)
   *     - `->` / `->>` json operators (expression.rs:176-196)
   *     - backtick identifiers and double-quoted strings (Spark-native).
+  *
+  * Each statement is parsed once. Standard statements go through Spark's
+  * own parser after the dialect rewrite, and `sql` dispatches on the
+  * parsed plan: DML conditions and assignments are Spark's parsed
+  * expressions, never re-parsed substrings. Text matching is kept only
+  * for the forms Spark cannot parse: CREATE [MULTISET] TABLE (incresql
+  * types, DECIMAL caps), CREATE VIEW (its raw dialect body is what is
+  * stored and listed), COMPACT/VACUUM TABLE, and a trailing `LIMIT n` on
+  * DELETE, which is stripped before Spark parses the rest.
   *
   * Table names resolve on Spark's parsed plan, not in the text: one
   * resolver maps each name of a scoped view, a multiset table or a
@@ -198,8 +215,8 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     scala.collection.immutable.ListMap.empty[(String, String), ViewMeta]
 
   /** (owning db, bare name) for a possibly-qualified identifier. */
-  private def viewKeyOf(rawName: String, db: String = currentDb): (String, String) =
-    keyOf(stripTicks(rawName).split('.').toSeq.takeRight(2), db).get
+  private def viewKeyOf(rawName: String): (String, String) =
+    keyOf(parser.parseMultipartIdentifier(rawName).takeRight(2), currentDb).get
 
   private val viewDir = java.nio.file.Paths.get(
     Option(viewCatalogDir).getOrElse(GraftSession.defaultViewCatalog(spark)))
@@ -254,8 +271,6 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     catch { case e: Exception => viewRegistry = before; throw e }
   }
 
-  private def stripTicks(name: String): String = name.replace("`", "")
-
   // --- multiset tables: the reference's ACTUAL storage semantics over SQL --
   // The reference routes every user-table INSERT/DELETE through the
   // freq-merging store (storage/src/table.rs:309-347; DELETE =
@@ -288,9 +303,6 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
       val Array(db, name) = stem.split("\\.", 2)
       ((db, name), msDir.resolve(stem).toString)
     }.toMap
-
-  private def isMultiset(raw: String): Boolean = multisets.contains(viewKeyOf(raw))
-  private def msPath(raw: String): String = multisets(viewKeyOf(raw))
 
   private def persistView(m: ViewMeta): Unit = {
     java.nio.file.Files.createDirectories(viewDir)
@@ -337,42 +349,17 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
       s"${parts(0)} ${mapType(parts.lift(1).getOrElse("STRING"))}"
     }.mkString(", ")
 
-  private val showFunctionsRe = """(?is)^\s*show\s+functions\s*;?\s*$""".r
-  private val showDatabasesRe = """(?is)^\s*show\s+databases\s*;?\s*$""".r
-  private val showTablesRe = """(?is)^\s*show\s+tables\s*;?\s*$""".r
-  private val useRe = """(?is)^\s*use\s+([\w`]+)\s*;?\s*$""".r
-  private val createDbRe = """(?is)^\s*create\s+database\s+([\w`]+)\s*;?\s*$""".r
-  private val dropDbRe =
-    """(?is)^\s*drop\s+database\s+(if\s+exists\s+)?([\w`]+)(\s+cascade)?\s*;?\s*$""".r
-  private val createTableRe = """(?is)^\s*create\s+table\s+([\w.`]+)\s*\((.*)\)\s*;?\s*$""".r
-  private val createMultisetRe =
-    """(?is)^\s*create\s+multiset\s+table\s+([\w.`]+)\s*\((.*)\)\s*;?\s*$""".r
-  private val insertRe =
-    """(?is)^\s*insert\s+into\s+([\w.`]+)\s*(?:\(([^)]*)\))?\s+((?:values|select)\s+.*)$""".r
-  private val dropTableRe =
-    """(?is)^\s*drop\s+table\s+(if\s+exists\s+)?([\w.`]+)\s*;?\s*$""".r
-  // OR REPLACE / IF EXISTS variants are intercepted too: letting them
-  // fall through to raw Spark would create a metastore view beside the
-  // scoped catalog / leave the scoped view in place
+  // The dialect-only statements, which Spark's parser cannot parse, are
+  // matched on their text; every other statement is parsed by Spark, once.
+  private val createTableRe =
+    """(?is)^\s*create\s+(multiset\s+)?table\s+([\w.`]+)\s*\((.*)\)\s*;?\s*$""".r
+  // OR REPLACE is intercepted too: letting it fall through to raw Spark
+  // would create a metastore view beside the scoped catalog
   private val createViewRe =
     """(?is)^\s*create\s+(?:or\s+replace\s+)?view\s+([\w.`]+)\s+as\s+(.*)$""".r
-  private val dropViewRe =
-    """(?is)^\s*drop\s+view\s+(if\s+exists\s+)?([\w.`]+)\s*;?\s*$""".r
-  private val compactRe = """(?is)^\s*compact\s+table\s+([\w.`]+)\s*;?\s*$""".r
-  private val vacuumRe = """(?is)^\s*vacuum\s+table\s+([\w.`]+)\s*;?\s*$""".r
-  private val explainRe = """(?is)^\s*explain\s+(.*)$""".r
-  private val deleteRe =
-    """(?is)^\s*delete\s+from\s+([\w.`]+)(?:\s+where\s+(.+?))?(?:\s+limit\s+(\d+))?\s*;?\s*$""".r
-  private val updateRe =
-    """(?is)^\s*update\s+([\w.`]+)\s+set\s+(.+?)(?:\s+where\s+(.+?))?\s*;?\s*$""".r
-  private val mergeRe =
-    """(?is)^\s*merge\s+into\s+([\w.`]+)(?:\s+(?:as\s+)?([A-Za-z_]\w*))?\s+using\s+([\w.`]+|\(.+?\))(?:\s+(?:as\s+)?([A-Za-z_]\w*))?\s+on\s+(.+?)\s+(when\s+(?:not\s+)?matched\s+.+?)\s*;?\s*$""".r
-  private val mergeMatchedRe =
-    """(?is)when\s+matched\s+then\s+update\s+set\s+(.+?)(?=\s+when\s+not\s+matched|$)""".r
-  private val mergeDeleteRe =
-    """(?is)when\s+matched\s+then\s+delete\b""".r
-  private val mergeNotMatchedRe =
-    """(?is)when\s+not\s+matched\s+then\s+insert\s+(\*|\(([^)]*)\)\s*values\s*\((.*)\))\s*$""".r
+  private val maintainRe = """(?is)^\s*(compact|vacuum)\s+table\s+([\w.`]+)\s*;?\s*$""".r
+  // a trailing LIMIT n on DELETE is stripped; Spark parses the rest
+  private val deleteLimitRe = """(?is)^\s*(delete\s+from\s+.+?)\s+limit\s+(\d+)\s*;?\s*$""".r
 
   /** Apply `f` to the stretches of `q` OUTSIDE quoted string literals,
     * leaving literal content byte-identical — so the regex rewrites below
@@ -424,39 +411,7 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
   }
 
   def sql(text: String): DataFrame = text match {
-    case showFunctionsRe() =>
-      import spark.implicits._
-      val names = spark.sessionState.functionRegistry.listFunction()
-        .map(_.funcName).distinct.sorted
-      names.toDF("function_name")
-    case showDatabasesRe() =>
-      spark.sql("SHOW DATABASES").select(col("namespace").as("database"))
-    case showTablesRe() =>
-      // the reference lists the CURRENT database's catalog entries only
-      // (tests/show/tables.rs: empty under default, the three system
-      // tables under incresql) — the same rows as incresql.tables
-      import spark.implicits._
-      tableRows.filter(_.database_name == currentDb).map(_.name).sorted.toDF("table")
-    case useRe(db) => spark.sql(s"USE $db")
-    case createDbRe(db) => spark.sql(s"CREATE DATABASE $db")
-    case dropDbRe(ifExists, db, cascade) =>
-      // the reference refuses to drop a non-empty database
-      // (catalog/src/lib.rs:146-148 check_db_empty); Spark enforces that
-      // for tables, and scoped views count as contents too. CASCADE (a
-      // Spark extension) instead drops the database's views with it —
-      // registry and catalog files included, so no ghost view replays
-      // into a later session.
-      val d = stripTicks(db).toLowerCase
-      val owned = viewRegistry.keys.filter(_._1 == d).toSeq
-      if (cascade == null)
-        require(owned.isEmpty, s"database $d is not empty: it still contains views")
-      else owned.foreach { case key @ (vdb, vname) =>
-        removeViewFiles(vdb, vname)
-        viewRegistry -= key
-      }
-      spark.sql(s"DROP DATABASE ${Option(ifExists).getOrElse("")} $db " +
-        Option(cascade).getOrElse(""))
-    case createMultisetRe(name, cols) =>
+    case createTableRe(multiset, name, cols) if multiset != null =>
       val key @ (db, bare) = viewKeyOf(name)
       require(!multisets.contains(key), s"multiset table $db.$bare already exists")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(columnsDdl(cols))
@@ -467,17 +422,8 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
       multisets += (key -> path)
       spark.emptyDataFrame
-    case createTableRe(name, cols) =>
+    case createTableRe(_, name, cols) =>
       spark.sql(s"CREATE TABLE $name (${columnsDdl(cols)}) USING PARQUET")
-    case dropTableRe(_, name) if isMultiset(name) =>
-      val key = viewKeyOf(name)
-      MultisetStore.deleteRecursively(java.nio.file.Paths.get(multisets(key))) // the chain
-      multisets -= key
-      spark.emptyDataFrame
-    case dropTableRe(ifExists, name) =>
-      spark.sql(s"DROP TABLE ${Option(ifExists).getOrElse("")}$name")
-    case insertRe(name, colList, source) if isMultiset(name) =>
-      multisetInsert(name, Option(colList), source)
     case createViewRe(name, body) =>
       // `create view db.name` owns the view to db; bare names own to the
       // current database (tests/views/mod.rs creates default.test_view
@@ -488,64 +434,123 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
       define(meta)
       persistView(meta)
       spark.emptyDataFrame
-    case dropViewRe(ifExists, name) =>
-      val key @ (db, bare) = viewKeyOf(name)
-      if (viewRegistry.contains(key)) {
+    case maintainRe(op, name) =>
+      (op.toLowerCase, multisets.get(viewKeyOf(name))) match {
+        case ("compact", Some(path)) =>
+          // the real thing for multiset tables: fold the snapshot+delta
+          // chain into one fresh snapshot (older versions stay for AS OF
+          // readers)
+          MultisetStore.compact(spark, path)
+          spark.emptyDataFrame
+        case ("compact", None) =>
+          // Parquet/Spark analog of RocksDB compaction (connection.rs:113-126):
+          // refresh + recompute stats so subsequent plans see the table fresh.
+          spark.catalog.refreshTable(name)
+          spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS")
+        case (_, Some(path)) =>
+          // drop versions older than the latest snapshot — ends time travel
+          // into them, reclaims the chain (compact keeps history; vacuum is
+          // the explicit retention cut)
+          MultisetStore.vacuum(path)
+          spark.emptyDataFrame
+        case _ =>
+          throw new IllegalArgumentException(
+            s"VACUUM TABLE is only valid on multiset tables, got: $name")
+      }
+    case deleteLimitRe(stmt, n) => statement(stmt, Some(n.toInt))
+    case _ => statement(text, None)
+  }
+
+  /** A statement Spark's parser accepts, dispatched on its parsed plan;
+    * `deleteLimit` is the LIMIT stripped from a DELETE. */
+  private def statement(text: String, deleteLimit: Option[Int]): DataFrame = {
+    import spark.implicits._
+    parser.parsePlan(rewriteQuery(text)) match {
+      case ShowFunctions(CurrentNamespace, true, true, None, _) =>
+        spark.sessionState.functionRegistry.listFunction()
+          .map(_.funcName).distinct.sorted.toDF("function_name")
+      case s: ShowNamespacesCommand => run(s).select(col("namespace").as("database"))
+      case ShowTables(CurrentNamespace, None, _) =>
+        // the reference lists the CURRENT database's catalog entries only
+        // (tests/show/tables.rs: empty under default, the three system
+        // tables under incresql) — the same rows as incresql.tables
+        tableRows.filter(_.database_name == currentDb).map(_.name).sorted.toDF("table")
+      case d @ DropNamespace(UnresolvedNamespace(Seq(db), _), _, cascade) =>
+        // the reference refuses to drop a non-empty database
+        // (catalog/src/lib.rs:146-148 check_db_empty); Spark enforces that
+        // for tables, and scoped views count as contents too. CASCADE (a
+        // Spark extension) instead drops the database's views with it —
+        // registry and catalog files included, so no ghost view replays
+        // into a later session.
+        val owned = viewRegistry.keys.filter(_._1 == db.toLowerCase).toSeq
+        if (!cascade)
+          require(owned.isEmpty, s"database ${db.toLowerCase} is not empty: it still contains views")
+        else owned.foreach { case key @ (vdb, vname) =>
+          removeViewFiles(vdb, vname)
+          viewRegistry -= key
+        }
+        run(d)
+      case DropTable(UnresolvedIdentifier(Multiset(key), _), _, _) =>
+        MultisetStore.deleteRecursively(java.nio.file.Paths.get(multisets(key))) // the chain
+        multisets -= key
+        spark.emptyDataFrame
+      case DropView(UnresolvedIdentifier(ScopedView(key @ (db, bare)), _), _) =>
         removeViewFiles(db, bare)
         viewRegistry -= key
         spark.emptyDataFrame
-      } else {
-        // not one of ours: fall through to a plain Spark temp view
-        // (honoring IF EXISTS as a silent no-op on an unknown name)
-        val ie = if (ifExists == null) "" else "IF EXISTS "
-        spark.sql(s"DROP VIEW $ie${stripTicks(name).split('.').last}")
-      }
-    case vacuumRe(name) if isMultiset(name) =>
-      // drop versions older than the latest snapshot — ends time travel
-      // into them, reclaims the chain (compact keeps history; vacuum is
-      // the explicit retention cut)
-      MultisetStore.vacuum(msPath(name))
-      spark.emptyDataFrame
-    case compactRe(name) if isMultiset(name) =>
-      // the real thing for multiset tables: fold the snapshot+delta chain
-      // into one fresh snapshot (older versions stay for AS OF readers)
-      MultisetStore.compact(spark, msPath(name))
-      spark.emptyDataFrame
-    case compactRe(name) =>
-      // Parquet/Spark analog of RocksDB compaction (connection.rs:113-126):
-      // refresh + recompute stats so subsequent plans see the table fresh.
-      spark.catalog.refreshTable(name)
-      spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS")
-    case deleteRe(table, whereOpt, limitOpt) if isMultiset(table) =>
-      multisetDelete(table, Option(whereOpt), Option(limitOpt).map(_.toInt))
-    case deleteRe(table, whereOpt, limitOpt) =>
-      delete(table, Option(whereOpt), Option(limitOpt).map(_.toInt))
-    case updateRe(table, setList, whereOpt) =>
-      update(table, setList, Option(whereOpt))
-    case mergeRe(table, tAlias, source, sAlias, onCond, whenClauses) =>
-      merge(table, Option(tAlias), source, Option(sAlias), onCond, whenClauses)
-    case explainRe(body) if body.matches("(?is)^formatted\\s+.*") =>
-      // EXPLAIN FORMATTED: Spark's physical plan, for auditing pushdown /
-      // broadcast / codegen — the Catalyst-native view.
-      import spark.implicits._
-      val q = body.replaceFirst("(?is)^formatted\\s+", "")
-      val plan = query(q).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      plan.split("\n").toSeq.toDF("plan")
-    case explainRe(body) =>
-      // Reference-format EXPLAIN: the 4-column tree/col_idx/datatype/
-      // expression values table (explain/mod.rs:38-80), golden-tested in
-      // ExplainGoldenSpec against the reference's own expected output.
-      RefExplain.explain(spark, query(body))
-    case other => query(other)
+      case InsertIntoStatement(UnresolvedRelation(Multiset(key), _, _), _, cols, source, overwrite, _, _) =>
+        require(!overwrite, "INSERT OVERWRITE is not supported on multiset tables")
+        multisetInsert(key, cols, source)
+      case d: DeleteFromTable =>
+        dmlTarget(d.table) match {
+          case (UnresolvedRelation(Multiset(key), _, _), alias) =>
+            multisetDelete(multisets(key), alias.getOrElse(key._2), column(d.condition), deleteLimit)
+          case (rel, alias) => delete(rel, alias, column(d.condition), deleteLimit)
+        }
+      case u: UpdateTable =>
+        val (rel, alias) = dmlTarget(u.table)
+        update(rel, alias, u.assignments, u.condition.map(column).getOrElse(lit(true)))
+      case m: MergeIntoTable => merge(m)
+      case ExplainCommand(plan, mode) =>
+        // Plain EXPLAIN is reference-format: the 4-column tree/col_idx/
+        // datatype/expression values table (explain/mod.rs:38-80),
+        // golden-tested in ExplainGoldenSpec against the reference's own
+        // expected output. EXPLAIN FORMATTED (or EXTENDED, CODEGEN, COST)
+        // is Spark's own plan text, for auditing pushdown / broadcast /
+        // codegen.
+        val df = analyzed(plan)
+        if (mode == SimpleMode) RefExplain.explain(spark, df)
+        else df.queryExecution.explainString(mode).split("\n").toSeq.toDF("plan")
+      case plan => run(plan)
+    }
+  }
+
+  /** Name parts that denote a registered graft object, as its catalog key. */
+  private final class Registered(has: ((String, String)) => Boolean) {
+    def unapply(parts: Seq[String]): Option[(String, String)] = keyOf(parts, currentDb).filter(has)
+  }
+  private val Multiset = new Registered(multisets.contains(_))
+  private val ScopedView = new Registered(viewRegistry.contains(_))
+
+  /** A DML target as a plain relation (without the parser's write-privilege
+    * options) and the alias the statement gives it, if any. */
+  private def dmlTarget(plan: LogicalPlan): (UnresolvedRelation, Option[String]) = plan match {
+    case SubqueryAlias(alias, u: UnresolvedRelation) => (dmlTarget(u)._1, Some(alias.name))
+    case u: UnresolvedRelation => (UnresolvedRelation(u.multipartIdentifier), None)
+  }
+
+  /** The rows of a physical DML target, under the statement's alias. */
+  private def rows(rel: UnresolvedRelation, alias: Option[String]): DataFrame = {
+    val df = analyzed(rel)
+    alias.fold(df)(df.alias)
   }
 
   /** Stage `df` through a temp path, then overwrite physical `table` with
     * it — the write never reads its own target. */
-  private def overwrite(table: String, df: DataFrame): DataFrame = {
+  private def overwrite(table: UnresolvedRelation, df: DataFrame): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_dml_").toString
     df.write.mode("overwrite").parquet(tmp)
-    StoredParquet.read(spark, tmp).write.mode("overwrite").insertInto(table)
+    StoredParquet.read(spark, tmp).write.mode("overwrite").insertInto(table.tableName)
     spark.emptyDataFrame
   }
 
@@ -566,9 +571,9 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     * set should DELETE WHERE over a unique key instead.
     * DeleteLimitSpec pins the fixed-layout behavior.
     */
-  private def delete(table: String, where: Option[String], limit: Option[Int]): DataFrame = {
-    val df = relation(table)
-    val pred = where.map(sqlExpr).getOrElse(lit(true))
+  private def delete(table: UnresolvedRelation, alias: Option[String], pred: Column,
+      limit: Option[Int]): DataFrame = {
+    val df = rows(table, alias)
     overwrite(table, limit match {
       case None =>
         df.filter(!coalesce(pred, lit(false)))
@@ -584,29 +589,23 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
   /** INSERT INTO a multiset table: the reference's TableInsert — +1 freq
     * per source row, persisted as an O(|delta|) LSM delta append
     * (table_insert.rs:22-55 over storage/src/table.rs:309-347). Source is
-    * either `VALUES (...)...` or any SELECT (both through the dialect
-    * rewriter); an optional column list maps source columns positionally,
-    * unlisted columns are NULL. Values cast to the declared column types
-    * (non-ANSI: unparseable → NULL, the reference's cast semantics). */
-  private def multisetInsert(table: String, colList: Option[String],
-      source: String): DataFrame = {
-    val path = msPath(table)
+    * the statement's parsed `VALUES (...)...` or SELECT plan; an optional
+    * column list maps source columns positionally, unlisted columns are
+    * NULL. Values cast to the declared column types (non-ANSI:
+    * unparseable → NULL, the reference's cast semantics). */
+  private def multisetInsert(key: (String, String), colList: Seq[String],
+      source: LogicalPlan): DataFrame = {
+    val path = multisets(key)
     // the declared columns, from the footer of the latest version — no
     // read plan over the chain
     val stored = StoredParquet.schema(spark, s"$path/v${MultisetStore.versions(path).last}")
     val dataCols = stored.fields.toIndexedSeq.filter(_.name != MultisetStore.freqCol)
-    val srcSql =
-      if (source.trim.toLowerCase.startsWith("values")) s"SELECT * FROM ($source)"
-      else source
-    val src = query(srcSql)
-    val listed = colList match {
-      case Some(cs) => cs.split(',').map(c => stripTicks(c.trim).toLowerCase).toIndexedSeq
-      case None => dataCols.map(_.name.toLowerCase)
-    }
+    val src = analyzed(source)
+    val listed = (if (colList.nonEmpty) colList else dataCols.map(_.name)).map(_.toLowerCase)
     require(src.columns.length == listed.length,
       s"INSERT column count ${listed.length} != source arity ${src.columns.length}")
     listed.foreach(c => require(dataCols.exists(_.name.toLowerCase == c),
-      s"INSERT target column $c not in $table"))
+      s"INSERT target column $c not in ${key._1}.${key._2}"))
     val byName = src.columns.zip(listed).map { case (s, t) => (t, col(s)) }.toMap
     val aligned = src.select(dataCols.map { f =>
       byName.getOrElse(f.name.toLowerCase, lit(null)).cast(f.dataType).as(f.name)
@@ -627,29 +626,29 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     *     for a fixed chain layout, same storage-order contract as the
     *     physical-table path's [[delete]].
     *
-    * Rows where the predicate is NULL stay, per 3VL filter semantics. */
-  private def multisetDelete(table: String, where: Option[String],
+    * Rows where the predicate is NULL stay, per 3VL filter semantics.
+    * `alias` qualifies the columns (`t1.b`, as in the reference test). */
+  private def multisetDelete(path: String, alias: String, pred: Column,
       limit: Option[Int]): DataFrame = {
-    val path = msPath(table)
-    val bare = viewKeyOf(table)._2
-    val pred = where.map(sqlExpr).getOrElse(lit(true))
     val freqCol = MultisetStore.freqCol
+    def doomed(df: DataFrame) = df.alias(alias).filter(coalesce(pred, lit(false)))
     limit match {
-      case None =>
-        val doomed = MultisetStore.snapshot(spark, path)
-          .alias(bare) // so qualified refs like `t1.b` resolve, as in the reference test
-          .filter(coalesce(pred, lit(false)))
-          .withColumn(freqCol, -col(freqCol))
-        MultisetStore.appendDelta(spark, path, doomed)
-      case Some(n) =>
-        val doomed = MultisetStore.read(spark, path)
-          .alias(bare)
-          .filter(coalesce(pred, lit(false)))
-          .limit(n)
-        MultisetStore.appendDelta(spark, path, doomed, freq = -1L)
+      case None => MultisetStore.appendDelta(spark, path,
+        doomed(MultisetStore.snapshot(spark, path)).withColumn(freqCol, -col(freqCol)))
+      case Some(n) => MultisetStore.appendDelta(spark, path,
+        doomed(MultisetStore.read(spark, path)).limit(n), freq = -1L)
     }
     spark.emptyDataFrame
   }
+
+  /** SET assignments as (lower-cased target column → value), each target
+    * checked against `cols`; a qualified target (`t.c`) names column c. */
+  private def assigned(as: Seq[Assignment], cols: Seq[String], what: String): Map[String, Column] =
+    as.map { a =>
+      val c = a.key.asInstanceOf[UnresolvedAttribute].nameParts.last.toLowerCase
+      require(cols.exists(_.toLowerCase == c), s"$what target column $c not in the table")
+      c -> column(a.value)
+    }.toMap
 
   /** UPDATE t SET c = e[, ...] [WHERE p] — a Spark-native DML extension
     * (the reference's statement surface stops at INSERT/DELETE,
@@ -657,24 +656,16 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     * as [[delete]]: one projection where each assigned column becomes
     * `CASE WHEN coalesce(p, false) THEN expr ELSE col END` — rows where
     * the predicate is NULL keep their values, per ANSI — staged through a
-    * temp path so the overwrite never reads its target. Assignment
-    * expressions go through the dialect rewriter, so `->`/`->>` etc. work
-    * on the right-hand side.
+    * temp path so the overwrite never reads its target. The assignments
+    * are Spark's parsed expressions over the dialect-rewritten text, so
+    * `->`/`->>` etc. work on the right-hand side.
     */
-  private def update(table: String, setList: String, where: Option[String]): DataFrame = {
-    val df = relation(table)
-    val pred = where.map(sqlExpr).getOrElse(lit(true))
-    val assignments = splitTopLevel(setList).map { a =>
-      val eq = a.indexOf('=')
-      require(eq > 0, s"malformed SET assignment: $a")
-      val target = stripTicks(a.substring(0, eq).trim).toLowerCase
-      (target, sqlExpr(a.substring(eq + 1).trim))
-    }.toMap
-    val resolved = df.columns.map(_.toLowerCase).toSet
-    assignments.keys.foreach(k =>
-      require(resolved.contains(k), s"UPDATE target column $k not in $table"))
+  private def update(table: UnresolvedRelation, alias: Option[String], as: Seq[Assignment],
+      pred: Column): DataFrame = {
+    val df = rows(table, alias)
+    val set = assigned(as, df.columns.toIndexedSeq, "UPDATE")
     overwrite(table, df.select(df.columns.toIndexedSeq.map { c =>
-      assignments.get(c.toLowerCase) match {
+      set.get(c.toLowerCase) match {
         case Some(e) => when(coalesce(pred, lit(false)), e).otherwise(col(c)).as(c)
         case None => col(c)
       }
@@ -696,48 +687,43 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     * ANSI cardinality rule enforced: a target row matching MORE THAN ONE
     * source row is an error (checked with one count — a multi-match would
     * otherwise silently duplicate target rows through the join).
-    * Supported source forms: a table/view name, or a parenthesized
-    * subquery without nested parens (register a view for anything deeper).
-    * Update/insert expressions may reference both aliases; they pass
-    * through the dialect rewriter, so `->`/`->>` work here too.
+    * The source is any relation or subquery Spark parses. Conditions and
+    * expressions may reference both aliases; they are Spark's parsed
+    * expressions over the dialect-rewritten text, so `->`/`->>` work too.
+    * Rejected with an error naming the clause, never dropped: a clause
+    * condition (`WHEN [NOT] MATCHED AND <cond>`), `UPDATE SET *` and any
+    * `WHEN NOT MATCHED BY SOURCE` action.
     */
-  private def merge(table: String, tAliasOpt: Option[String], source: String,
-      sAliasOpt: Option[String], onCond: String, whenClauses: String): DataFrame = {
-    // ANSI lets unaliased relations be referenced by their bare name
-    val tA = tAliasOpt.getOrElse(stripTicks(table).split('.').last)
-    require(sAliasOpt.nonEmpty || !source.startsWith("("),
-      "a MERGE subquery source needs an alias")
-    val sA = sAliasOpt.getOrElse(stripTicks(source).split('.').last)
-    val target = relation(table)
+  private def merge(m: MergeIntoTable): DataFrame = {
+    def unsupported(clause: String) =
+      throw new IllegalArgumentException(s"MERGE does not support $clause")
+    if (m.notMatchedBySourceActions.nonEmpty) unsupported("WHEN NOT MATCHED BY SOURCE")
+    if (m.matchedActions.exists(_.condition.nonEmpty))
+      unsupported("WHEN MATCHED AND <condition>")
+    if (m.notMatchedActions.exists(_.condition.nonEmpty))
+      unsupported("WHEN NOT MATCHED AND <condition>")
+    val (table, tAliasOpt) = dmlTarget(m.targetTable)
+    // ANSI lets an unaliased target be referenced by its bare name
+    val tA = tAliasOpt.getOrElse(table.multipartIdentifier.last)
+    val target = analyzed(table)
     val tgt = target.alias(tA)
-    val srcDf = (if (source.startsWith("(")) query(source.stripPrefix("(").stripSuffix(")"))
-      else relation(source)).alias(sA)
-    val cond = sqlExpr(onCond)
-
-    val updateSet: Map[String, Column] =
-      mergeMatchedRe.findFirstMatchIn(whenClauses).map { m =>
-        splitTopLevel(m.group(1)).map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"malformed MERGE SET assignment: $a")
-          val target = stripTicks(a.substring(0, eq).trim).split('.').last.toLowerCase
-          (target, sqlExpr(a.substring(eq + 1).trim))
-        }.toMap
-      }.getOrElse(Map.empty)
-    val deleteMatched = mergeDeleteRe.findFirstIn(whenClauses).nonEmpty
-    require(!(deleteMatched && updateSet.nonEmpty),
-      "MERGE supports WHEN MATCHED THEN UPDATE or THEN DELETE, not both")
-    val insertSpec = mergeNotMatchedRe.findFirstMatchIn(whenClauses)
-    require(updateSet.nonEmpty || deleteMatched || insertSpec.nonEmpty,
-      "MERGE needs at least one WHEN MATCHED / WHEN NOT MATCHED clause")
+    val srcDf = analyzed(m.sourceTable)
+    val cond = column(m.mergeCondition)
     val targetCols = target.columns.toIndexedSeq
-    def typeOf(c: String) = target.schema(c).dataType
-    updateSet.keys.foreach(k => require(targetCols.exists(_.toLowerCase == k),
-      s"MERGE update target column $k not in $table"))
+
+    // with clause conditions rejected, Spark's parser leaves at most one
+    // action of each kind
+    val (deleteMatched, updateSet) = m.matchedActions.headOption match {
+      case Some(_: DeleteAction) => (true, Map.empty[String, Column])
+      case Some(u: UpdateAction) => (false, assigned(u.assignments, targetCols, "MERGE update"))
+      case Some(_) => unsupported("UPDATE SET *")
+      case None => (false, Map.empty[String, Column])
+    }
 
     // ANSI: each target row may match at most one source row
     val joined = tgt.join(srcDf, cond, "left_outer")
     require(joined.count() == target.count(),
-      s"MERGE source matches multiple rows of $table for some target row")
+      s"MERGE source matches multiple rows of ${table.tableName} for some target row")
 
     // matched ⟺ the join found a source row; probe via the join condition
     // itself being satisfiable — a NULL-extended source side leaves cond
@@ -754,30 +740,23 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
         }
       }: _*)
 
-    val inserted = insertSpec.map { m =>
+    val inserted = m.notMatchedActions.headOption.map { action =>
       val anti = srcDf.join(tgt, cond, "left_anti")
-      if (m.group(1).trim == "*") {
-        val srcCols = anti.columns.map(_.toLowerCase).toSet
-        anti.select(targetCols.map { c =>
-          if (srcCols.contains(c.toLowerCase)) col(c).as(c)
-          else lit(null).cast(typeOf(c)).as(c)
-        }: _*)
-      } else {
-        val cols = m.group(2).split(',').map(c => stripTicks(c.trim).toLowerCase)
-        val exprs = splitTopLevel(m.group(3)).map(e => sqlExpr(e.trim))
-        require(cols.length == exprs.length,
-          "MERGE INSERT column list and VALUES arity differ")
-        val byCol = cols.zip(exprs).toMap
-        anti.select(targetCols.map { c =>
-          byCol.getOrElse(c.toLowerCase, lit(null)).cast(typeOf(c)).as(c)
-        }: _*)
+      val byCol = action match {
+        case i: InsertAction => assigned(i.assignments, targetCols, "MERGE insert")
+        case _ => // INSERT *: source columns by name
+          val srcCols = anti.columns.map(_.toLowerCase).toSet
+          targetCols.map(_.toLowerCase).filter(srcCols).map(c => c -> col(c)).toMap
       }
+      anti.select(targetCols.map { c =>
+        byCol.getOrElse(c.toLowerCase, lit(null)).cast(target.schema(c).dataType).as(c)
+      }: _*)
     }
     overwrite(table, inserted.map(keptUpdated.unionByName(_)).getOrElse(keptUpdated))
   }
 
-  /** Split "a INT, b DECIMAL(10,2)" (or an UPDATE SET list) on top-level
-    * commas only — parens, quoted literals (`SET x = 'a,b'`) and backtick
+  /** Split a CREATE TABLE column list "a INT, b DECIMAL(10,2)" on
+    * top-level commas only — parens, quoted literals and backtick
     * identifiers are opaque. */
   private def splitTopLevel(s: String): Seq[String] = {
     val out = Seq.newBuilder[String]
@@ -903,9 +882,8 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
   private def analyzed(plan: LogicalPlan): DataFrame =
     DatasetBridge.ofRows(spark, resolve(plan, currentDb))
 
-  /** A statement or query in the dialect, as a DataFrame. */
-  private def query(text: String): DataFrame = {
-    val parsed = parser.parsePlan(rewriteQuery(text))
+  /** A parsed statement or query as a DataFrame, its graft names resolved. */
+  private def run(parsed: LogicalPlan): DataFrame = {
     val resolved = resolve(parsed, currentDb)
     // Spark keeps a view's TEXT and re-parses it at each use, where a
     // graft name no longer resolves
@@ -915,16 +893,11 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     DatasetBridge.ofRows(spark, resolved)
   }
 
-  /** A table, view or multiset table by name (a DML target or source). */
-  private def relation(name: String): DataFrame =
-    analyzed(UnresolvedRelation(parser.parseMultipartIdentifier(name)))
-
-  /** A dialect expression as a Column; a subquery in it may name graft
+  /** A parsed expression as a Column; a subquery in it may name graft
     * relations. */
-  private def sqlExpr(text: String): Column = ColumnBridge.column(
-    parser.parseExpression(rewriteQuery(text)).transform {
-      case s: SubqueryExpression => s.withNewPlan(resolve(s.plan, currentDb))
-    })
+  private def column(e: Expression): Column = ColumnBridge.column(e.transform {
+    case s: SubqueryExpression => s.withNewPlan(resolve(s.plan, currentDb))
+  })
 
   // --- system catalog tables ---------------------------------------------
   // The reference bootstraps queryable catalog tables (catalog/src/

@@ -13,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - CREATE TABLE enforces the reference's decimal caps
   *     DECIMAL(p<=28, s<=14) (data/src/datatype.rs:22-23) and defaults
   *     bare DECIMAL to DECIMAL(28,0) (parser/src/literals.rs:48).
+  *   - DELETE's target alias qualifies its columns, with or without
+  *     LIMIT, on physical and multiset tables alike.
   */
 class DeleteLimitSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -64,5 +66,27 @@ class DeleteLimitSpec extends AnyFunSuite {
     assert(fields("b") == "DECIMAL(28,0)")
     assert(fields("c") == "DECIMAL(10,0)")
     gs.sql("drop table dec_ok_t")
+  }
+
+  test("DELETE with a target alias, on a physical and a multiset table") {
+    dropHard("del_alias_t")
+    gs.sql("create table del_alias_t (k INTEGER, v TEXT)")
+    spark.sql("INSERT INTO del_alias_t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    gs.sql("DELETE FROM del_alias_t AS x WHERE x.k = 1")
+    assert(spark.sql("SELECT k FROM del_alias_t ORDER BY k").collect().map(_.getInt(0)).toSeq ==
+      Seq(2, 3))
+    gs.sql("drop table del_alias_t")
+
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val ms = new GraftSession(spark.newSession(), tmp("graft_del_alias_views_"),
+      tmp("graft_del_alias_ms_"))
+    ms.sql("CREATE MULTISET TABLE del_alias_m (k INTEGER, v TEXT)")
+    ms.sql("INSERT INTO del_alias_m VALUES (1, 'a'), (1, 'a'), (2, 'b'), (3, 'c')")
+    def left = ms.sql("SELECT k FROM del_alias_m ORDER BY k").collect().map(_.getInt(0)).toSeq
+    ms.sql("DELETE FROM del_alias_m AS x WHERE x.k = 1")
+    assert(left == Seq(2, 3))
+    ms.sql("DELETE FROM del_alias_m x WHERE x.k > 1 LIMIT 1")
+    assert(left.length == 1)
+    ms.sql("DROP TABLE del_alias_m")
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import graft.sql.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.util.Try
 
 /** Ports the reference's SQL-dialect integration shapes through the
   * front-door shim: DIRECTORY scans (tests/file_sources/mod.rs), SHOW
@@ -275,6 +278,21 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(spark.table(t).filter("k = 2").collect()(0).getInt(2) == 0)
       assert(spark.table(t).count() == 4)
 
+      // a clause graft does not implement is an error naming it, never
+      // silently dropped; the table stays as it was
+      val kept = spark.table(t).collect().map(_.toSeq).toSet
+      val cnd = intercept[IllegalArgumentException](gs.sql(
+        s"""MERGE INTO $t USING $s src ON $t.k = src.k
+           |WHEN MATCHED AND src.v = 'B' THEN UPDATE SET n = 7
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+      assert(cnd.getMessage.contains("WHEN MATCHED AND"), cnd.getMessage)
+      val bySource = intercept[IllegalArgumentException](gs.sql(
+        s"""MERGE INTO $t USING $s src ON $t.k = src.k
+           |WHEN MATCHED THEN UPDATE SET n = 7
+           |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin))
+      assert(bySource.getMessage.contains("WHEN NOT MATCHED BY SOURCE"), bySource.getMessage)
+      assert(spark.table(t).collect().map(_.toSeq).toSet == kept)
+
       // a second source row for k=2 must be rejected, table unchanged
       spark.sql(s"INSERT INTO $s VALUES (2,'dup')")
       val before = spark.table(t).collect().map(_.toSeq).toSet
@@ -316,6 +334,14 @@ class GraftSessionSpec extends AnyFunSuite {
       val rows = spark.table(t).orderBy("k").collect()
         .map(r => (r.getInt(0), r.getString(1)))
       assert(rows.toSeq == Seq((1, "a"), (2, "z")))
+      // a subquery source with a nested subquery of its own
+      gs.sql(
+        s"""MERGE INTO $t USING (SELECT k, concat(v, '!') AS v FROM $t
+           |  WHERE k IN (SELECT max(k) FROM $t)) src ON $t.k = src.k
+           |WHEN MATCHED THEN UPDATE SET v = src.v""".stripMargin)
+      val after = spark.table(t).orderBy("k").collect()
+        .map(r => (r.getInt(0), r.getString(1)))
+      assert(after.toSeq == Seq((1, "a"), (2, "z!")))
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
@@ -332,6 +358,97 @@ class GraftSessionSpec extends AnyFunSuite {
       // no WHERE: every row updates
       gs.sql(s"UPDATE $tbl SET b = 0")
       assert(spark.table(tbl).collect().forall(r => r.getInt(2) == 0))
+      // a WHERE inside a string literal is not the statement's WHERE
+      gs.sql(s"UPDATE $tbl SET a = concat(a, ' where ') WHERE k = 1")
+      def as = spark.table(tbl).orderBy("k").collect().map(_.getString(1)).toSeq
+      assert(as == Seq("p,q where ", "y", "z"))
+      // a target alias qualifies the columns
+      gs.sql(s"UPDATE $tbl AS x SET a = 'w', b = x.b + 5 WHERE x.k = 1")
+      val r1 = spark.table(tbl).filter("k = 1").collect()(0)
+      assert(r1.getString(1) == "w" && r1.getInt(2) == 5)
+      assert(as == Seq("w", "y", "z"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("statement surface: every form, lower-cased, with backtick names, with a trailing ;") {
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val s = spark.newSession()
+    val g = new GraftSession(s, tmp("graft_surface_views_"), tmp("graft_surface_ms_"))
+    def rows(q: String): Seq[String] = g.sql(q).collect().map(_.mkString("|")).toSeq.sorted
+    def ok(check: DataFrame => Unit): Try[DataFrame] => Unit = r => check(r.get)
+    def fails(msg: String): Try[DataFrame] => Unit = r =>
+      assert(r.failed.get.getMessage.contains(msg), r.failed.get.getMessage)
+    // one spelling per run, each in its own database
+    val spellings = Seq[String => String](_.toLowerCase, identity, _ + ";")
+    spellings.zipWithIndex.foreach { case (spell, run) =>
+      val d = s"graft_surface_$run"
+      s.sql(s"DROP DATABASE IF EXISTS $d CASCADE")
+      val q = if (run == 1) "`" else ""
+      def named(stmt: String) = Seq("{d}" -> d, "{pt}" -> "pt", "{mt}" -> "mt", "{v}" -> "v")
+        .foldLeft(stmt) { case (t, (k, n)) => t.replace(k, q + n + q) }
+      val forms: Seq[(String, Try[DataFrame] => Unit)] = Seq(
+        "SHOW FUNCTIONS" -> ok(df => assert(df.collect().map(_.getString(0)).contains("to_int"))),
+        "CREATE DATABASE {d}" -> ok(_ => assert(s.catalog.databaseExists(d))),
+        "SHOW DATABASES" -> ok(df => assert(df.columns.toSeq == Seq("database") &&
+          df.collect().map(_.getString(0)).contains(d))),
+        "USE {d}" -> ok(_ => assert(s.catalog.currentDatabase == d)),
+        "SHOW TABLES" -> ok(df => assert(df.columns.toSeq == Seq("table") && df.isEmpty)),
+        "CREATE TABLE {pt} (k INTEGER, note TEXT, amt DECIMAL)" -> ok(_ =>
+          assert(s.table(s"$d.pt").schema("amt").dataType.sql == "DECIMAL(28,0)")),
+        "CREATE MULTISET TABLE {mt} (k INTEGER, note TEXT)" -> ok(_ =>
+          assert(rows("SELECT * FROM mt").isEmpty)),
+        "INSERT INTO {pt} VALUES (1, 'a', 10), (2, 'b', 20)" -> ok(_ =>
+          assert(rows("SELECT k, note, amt FROM pt") == Seq("1|a|10", "2|b|20"))),
+        "INSERT INTO {pt} (k, note) SELECT 3, 'c'" -> ok(_ =>
+          assert(rows("SELECT k, amt FROM pt WHERE k = 3") == Seq("3|null"))),
+        "INSERT INTO {mt} VALUES (1, 'a'), (1, 'a'), (2, 'b')" -> ok(_ =>
+          assert(rows("SELECT k, note FROM mt") == Seq("1|a", "1|a", "2|b"))),
+        "INSERT INTO {mt} (note, k) SELECT 'c', 3" -> ok(_ =>
+          assert(rows("SELECT k, note FROM mt WHERE k = 3") == Seq("3|c"))),
+        "INSERT INTO {mt} SELECT k, note FROM {pt} WHERE k = 2" -> ok(_ =>
+          assert(rows("SELECT k FROM mt WHERE k = 2") == Seq("2", "2"))),
+        "SHOW TABLES" -> ok(df => assert(df.collect().map(_.getString(0)).toSeq == Seq("mt", "pt"))),
+        "CREATE VIEW {v} AS SELECT k, count(*) AS n FROM {mt} GROUP BY k" -> ok(_ =>
+          assert(rows("SELECT k, n FROM v") == Seq("1|2", "2|2", "3|1"))),
+        "CREATE OR REPLACE VIEW {v} AS SELECT k FROM {pt} WHERE k < 3" -> ok(_ =>
+          assert(rows("SELECT * FROM v") == Seq("1", "2"))),
+        "EXPLAIN SELECT k FROM {v}" -> ok(df =>
+          assert(df.columns.toSeq == Seq("tree", "col_idx", "datatype", "expression") && !df.isEmpty)),
+        "EXPLAIN FORMATTED SELECT k FROM {pt}" -> ok(df => assert(df.columns.toSeq == Seq("plan") &&
+          df.collect().exists(_.getString(0).contains("Scan parquet")))),
+        "UPDATE {pt} SET note = upper(note) WHERE k = 1" -> ok(_ =>
+          assert(rows("SELECT k, note FROM pt") == Seq("1|A", "2|b", "3|c"))),
+        """MERGE INTO {pt} AS t USING (SELECT DISTINCT k, note FROM {mt} WHERE k <> 2) src
+          |ON t.k = src.k WHEN MATCHED THEN UPDATE SET note = concat(src.note, '!')
+          |WHEN NOT MATCHED THEN INSERT (k, note) VALUES (src.k, src.note)""".stripMargin -> ok(_ =>
+          assert(rows("SELECT k, note FROM pt") == Seq("1|a!", "2|b", "3|c!"))),
+        "DELETE FROM {pt} WHERE k = 3" -> ok(_ => assert(rows("SELECT k FROM pt") == Seq("1", "2"))),
+        "DELETE FROM {pt} LIMIT 1" -> ok(_ => assert(rows("SELECT k FROM pt").length == 1)),
+        "DELETE FROM {mt} WHERE k = 1 LIMIT 1" -> ok(_ =>
+          assert(rows("SELECT k FROM mt") == Seq("1", "2", "2", "3"))),
+        "DELETE FROM {mt} WHERE k = 2" -> ok(_ => assert(rows("SELECT k FROM mt") == Seq("1", "3"))),
+        "DELETE FROM {mt}" -> ok(_ => assert(rows("SELECT k FROM mt").isEmpty)),
+        "INSERT INTO {mt} VALUES (4, 'd')" -> ok(_ => assert(rows("SELECT k FROM mt") == Seq("4"))),
+        "COMPACT TABLE {mt}" -> ok(_ => assert(rows("SELECT k FROM mt") == Seq("4"))),
+        "VACUUM TABLE {mt}" -> ok(_ => assert(rows("SELECT k FROM mt") == Seq("4") &&
+          Try(rows("SELECT k FROM mt AS OF VERSION 1")).isFailure)),
+        "COMPACT TABLE {pt}" -> ok(_ => assert(rows("SELECT k FROM pt").length == 1)),
+        "DROP VIEW {v}" -> ok(_ => assert(Try(rows("SELECT * FROM v")).isFailure)),
+        "DROP VIEW IF EXISTS {v}" -> ok(_ => ()),
+        "DROP TABLE {mt}" -> ok(_ => assert(rows("SHOW TABLES") == Seq("pt"))),
+        "DROP TABLE IF EXISTS {mt}" -> ok(_ => assert(rows("SHOW TABLES") == Seq("pt"))),
+        "DROP TABLE IF EXISTS {pt}" -> ok(_ => assert(rows("SHOW TABLES").isEmpty)),
+        "DROP TABLE IF EXISTS {pt}" -> ok(_ => ()),
+        "CREATE VIEW {v} AS SELECT 1 AS one" -> ok(_ => assert(rows("SELECT * FROM v") == Seq("1"))),
+        "USE default" -> ok(_ => assert(s.catalog.currentDatabase == "default")),
+        "DROP DATABASE {d}" -> fails("not empty"),
+        "DROP DATABASE IF EXISTS {d} CASCADE" -> ok(_ => assert(!s.catalog.databaseExists(d) &&
+          Try(rows(s"SELECT * FROM $d.v")).isFailure)),
+        "DROP DATABASE IF EXISTS {d}" -> ok(_ => ()))
+      forms.foreach { case (form, check) =>
+        val stmt = spell(named(form))
+        withClue(s"$stmt: ")(check(Try(g.sql(stmt))))
+      }
+    }
   }
 }

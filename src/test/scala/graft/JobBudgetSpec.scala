@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * never from inference. So does building every census key's DataFrame,
   * except the pinned builders that write, build an index or maintain a
   * view on the way. A schema-inference regression on any of these paths
-  * shows up here as a job started while only a DataFrame was being built. */
+  * shows up here as a job started while only a DataFrame was being built.
+  * The multiset DML statements do run jobs; each is pinned at its measured
+  * count, so an extra analysis or count on that path fails here too. */
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -134,5 +136,33 @@ class JobBudgetSpec extends AnyFunSuite {
     gs.sql("INSERT INTO budget_t VALUES (1, 'a')")
     assert(jobsDuring(gs.sql("SELECT 1")) == 0)
     gs.sql("DROP TABLE budget_t")
+  }
+
+  test("the multiset_dml statements through GraftSession.sql stay within their pinned job counts") {
+    val s = spark.newSession()
+    Engine.registerAll(s, sf)
+    val gs = new GraftSession(s, tmp("graft_budget_dml_views_"), tmp("graft_budget_dml_ms_"))
+    val cols = "l_orderkey, l_partkey, l_suppkey, l_quantity, l_extendedprice, l_discount, " +
+      "l_returnflag, l_linestatus"
+    // the counts measured at sf0.001; one more analysis, count or schema
+    // inference on the DML path exceeds them
+    val pinned = Seq(
+      "CREATE MULTISET TABLE budget_dml (l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_returnflag TEXT, " +
+        "l_linestatus TEXT)" -> 1,
+      s"INSERT INTO budget_dml SELECT $cols FROM lineitem WHERE l_orderkey % 100 IN (3, 7)" -> 1,
+      "DELETE FROM budget_dml WHERE l_orderkey % 100 = 3 AND l_quantity < 25" -> 2,
+      "DROP TABLE IF EXISTS budget_dml" -> 0)
+    val over = pinned.flatMap { case (stmt, budget) =>
+      val jobs = jobsDuring(gs.sql(stmt))
+      if (jobs <= budget) None else Some(s"$jobs jobs > $budget: $stmt")
+    }
+    assert(over.isEmpty, over.mkString("\n"))
+  }
+
+  test("an IVF probe over an index already built plans with 0 jobs") {
+    val idx = tmp("graft_budget_ivf_") + "/index"
+    queries.Similarity.buildIvfIndex(spark, sf, idx)
+    assert(jobsDuring(queries.Similarity.probeIvfIndex(spark, sf, idx)) == 0)
   }
 }
