@@ -65,11 +65,11 @@ object Curate {
        |      / len(regexp_extract_all(lower(text), '[a-z]+')) AS distinct_ratio
        |  FROM documents
        |),
-       |sh AS (${Dedup.shingleDuckSql}),
+       |sh AS (${Dedup.shingleDuck}),
        |dup_losers AS (
        |  SELECT DISTINCT b.doc_id AS doc_id
        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-       |  WHERE ${Dedup.jaccardDuckSql("a.shingles", "b.shingles")} >= 0.8
+       |  WHERE ${Dedup.jaccardDuck("a.shingles", "b.shingles")} >= 0.8
        |)
        |SELECT doc_id, lang, n_tokens, stopword_ratio, distinct_ratio
        |FROM scored
@@ -97,7 +97,7 @@ object Curate {
          |    CASE WHEN length(text) < 200 THEN 'short'
          |         WHEN length(text) < 1000 THEN 'medium'
          |         ELSE 'long' END AS bucket,
-         |    ${Dedup.hash60SparkSql("CAST(doc_id AS STRING)")} % 1000 AS h
+         |    ${Dedup.portableHash60Spark("CAST(doc_id AS STRING)")} % 1000 AS h
          |  FROM documents) t
          |WHERE (bucket = 'short' AND h < 100)
          |   OR (bucket = 'medium' AND h < 500)
@@ -111,7 +111,7 @@ object Curate {
        |    CASE WHEN length(text) < 200 THEN 'short'
        |         WHEN length(text) < 1000 THEN 'medium'
        |         ELSE 'long' END AS bucket,
-       |    ${Dedup.hash60DuckSql("CAST(doc_id AS VARCHAR)")} % 1000 AS h
+       |    ${Dedup.portableHash60Duck("CAST(doc_id AS VARCHAR)")} % 1000 AS h
        |  FROM documents) t
        |WHERE (bucket = 'short' AND h < 100)
        |   OR (bucket = 'medium' AND h < 500)
@@ -142,7 +142,7 @@ object Curate {
          |      CASE WHEN length(text) < 200 THEN 'short'
          |           WHEN length(text) < 1000 THEN 'medium'
          |           ELSE 'long' END AS bucket,
-         |      ${Dedup.hash60SparkSql("CAST(doc_id AS STRING)")} AS h
+         |      ${Dedup.portableHash60Spark("CAST(doc_id AS STRING)")} AS h
          |    FROM documents) t) w
          |WHERE rn <= $sampleK
          |ORDER BY bucket, rn""".stripMargin)
@@ -157,7 +157,7 @@ object Curate {
        |      CASE WHEN length(text) < 200 THEN 'short'
        |           WHEN length(text) < 1000 THEN 'medium'
        |           ELSE 'long' END AS bucket,
-       |      ${Dedup.hash60DuckSql("CAST(doc_id AS VARCHAR)")} AS h
+       |      ${Dedup.portableHash60Duck("CAST(doc_id AS VARCHAR)")} AS h
        |    FROM documents) t) w
        |WHERE rn <= $sampleK
        |ORDER BY bucket, rn""".stripMargin
@@ -260,7 +260,7 @@ object Curate {
   }
 
   private lazy val decontamSpanOracle =
-    s"""WITH ${Dedup.spanAnchorsDuckSql},
+    s"""WITH ${Dedup.spanAnchorsDuck},
        |eval_a AS (SELECT DISTINCT fp FROM anchors WHERE doc_id % 23 = 0),
        |hits AS (
        |  SELECT a.doc_id, count(DISTINCT a.fp) AS n_overlap
@@ -301,7 +301,7 @@ object Curate {
       .selectExpr("doc_id", "source", "rate",
         "explode(sequence(0, CAST(ceil(rate) AS INT) - 1)) AS copy")
       .selectExpr("doc_id", "source", "rate", "copy",
-        s"${Dedup.hash60SparkSql("concat(CAST(doc_id AS STRING), ':', CAST(copy AS STRING))")} % 1000 AS h")
+        s"${Dedup.portableHash60Spark("concat(CAST(doc_id AS STRING), ':', CAST(copy AS STRING))")} % 1000 AS h")
       .where("copy + 1 <= rate OR h < CAST((rate - floor(rate)) * 1000 AS BIGINT)")
       .selectExpr("doc_id", "source", "CAST(copy AS INT) AS copy")
 
@@ -317,7 +317,7 @@ object Curate {
        |    unnest(range(0, CAST(ceil(rate) AS BIGINT))) AS copy
        |  FROM (SELECT doc_id, source, $mixRate AS rate FROM documents)) t
        |WHERE copy + 1 <= rate
-       |   OR ${Dedup.hash60DuckSql("concat(CAST(doc_id AS VARCHAR), ':', CAST(copy AS VARCHAR))")} % 1000
+       |   OR ${Dedup.portableHash60Duck("concat(CAST(doc_id AS VARCHAR), ':', CAST(copy AS VARCHAR))")} % 1000
        |      < CAST((rate - floor(rate)) * 1000 AS BIGINT)
        |ORDER BY doc_id, copy""".stripMargin
 
@@ -349,7 +349,7 @@ object Curate {
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
          |  FROM (
          |    SELECT doc_id,
-         |      ${Dedup.hash60SparkSql("CAST(doc_id AS STRING)")} % 8 AS bucket,
+         |      ${Dedup.portableHash60Spark("CAST(doc_id AS STRING)")} % 8 AS bucket,
          |      CAST(size(word_ngrams(text, 1)) AS BIGINT) AS n_tokens
          |    FROM documents))
          |ORDER BY bucket, doc_id""".stripMargin)
@@ -365,7 +365,7 @@ object Curate {
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
        |  FROM (
        |    SELECT doc_id,
-       |      ${Dedup.hash60DuckSql("CAST(doc_id AS VARCHAR)")} % 8 AS bucket,
+       |      ${Dedup.portableHash60Duck("CAST(doc_id AS VARCHAR)")} % 8 AS bucket,
        |      CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens
        |    FROM documents) t) t2
        |ORDER BY bucket, doc_id""".stripMargin
@@ -505,7 +505,7 @@ object Curate {
          |),
          |emb AS (
          |  SELECT doc_id, chunk_id,
-         |    transform(sequence(0, 63), d -> ${Dedup.planeSparkSql("fp", "d")}) AS v
+         |    transform(sequence(0, 63), d -> ${Dedup.planeSpark("fp", "d")}) AS v
          |  FROM uniq
          |)
          |SELECT doc_id, chunk_id,
@@ -542,14 +542,14 @@ object Curate {
        |),
        |emb AS (
        |  SELECT doc_id, chunk_id,
-       |    list_transform(range(0, 64), d -> ${Dedup.planeDuckSql("fp", "d")}) AS v
+       |    list_transform(range(0, 64), d -> ${Dedup.planeDuck("fp", "d")}) AS v
        |  FROM uniq
        |),
        |assigned AS (
        |  SELECT doc_id, chunk_id, v, cid AS cell FROM (
        |    SELECT e.doc_id, e.chunk_id, e.v, cent.cid,
        |      row_number() OVER (PARTITION BY e.doc_id, e.chunk_id ORDER BY
-       |        ${Dedup.dotDuckSql("e.v", "cent.cv")} DESC, cent.cid) AS rn
+       |        ${Dedup.dotDuck("e.v", "cent.cv")} DESC, cent.cid) AS rn
        |    FROM emb e CROSS JOIN cent) t
        |  WHERE rn = 1
        |)
@@ -575,13 +575,13 @@ object Curate {
     Engine.table(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(
       s"""SELECT doc_id,
-         |  ${splitCase(Dedup.hash60SparkSql("CAST(doc_id AS STRING)"))} AS split
+         |  ${splitCase(Dedup.portableHash60Spark("CAST(doc_id AS STRING)"))} AS split
          |FROM documents ORDER BY doc_id""".stripMargin)
   }
 
   private val splitOracle =
     s"""SELECT doc_id,
-       |  ${splitCase(Dedup.hash60DuckSql("CAST(doc_id AS VARCHAR)"))} AS split
+       |  ${splitCase(Dedup.portableHash60Duck("CAST(doc_id AS VARCHAR)"))} AS split
        |FROM documents ORDER BY doc_id""".stripMargin
 
   val split: QueryDef =
@@ -600,8 +600,8 @@ object Curate {
   // (shard, pos) — the seed in the hash input gives a fresh permutation
   // per epoch without any RNG state.
   private def shardHash(idExpr: String, seed: Int, spark: Boolean): String =
-    if (spark) Dedup.hash60SparkSql(s"concat('s${seed}_', CAST($idExpr AS STRING))")
-    else Dedup.hash60DuckSql(s"concat('s${seed}_', CAST($idExpr AS VARCHAR))")
+    if (spark) Dedup.portableHash60Spark(s"concat('s${seed}_', CAST($idExpr AS STRING))")
+    else Dedup.portableHash60Duck(s"concat('s${seed}_', CAST($idExpr AS VARCHAR))")
 
   def shuffleShards(spark: SparkSession, dir: String,
       seed: Int = 42, nShards: Int = 128): DataFrame = {
@@ -653,8 +653,8 @@ object Curate {
     spark.sql(
       s"""WITH pri AS (
          |  SELECT doc_id, source,
-         |    ${Dedup.hash60SparkSql("concat('p_', CAST(doc_id AS STRING))")} AS pri,
-         |    ${Dedup.hash60SparkSql("concat('b_', CAST(doc_id AS STRING))")}
+         |    ${Dedup.portableHash60Spark("concat('p_', CAST(doc_id AS STRING))")} AS pri,
+         |    ${Dedup.portableHash60Spark("concat('b_', CAST(doc_id AS STRING))")}
          |      % $srcSalts AS salt
          |  FROM documents),
          |local AS (
@@ -677,7 +677,7 @@ object Curate {
     s"""SELECT doc_id, source, CAST(rn AS INT) AS rn FROM (
        |  SELECT doc_id, source,
        |    row_number() OVER (PARTITION BY source
-       |      ORDER BY ${Dedup.hash60DuckSql("concat('p_', CAST(doc_id AS VARCHAR))")},
+       |      ORDER BY ${Dedup.portableHash60Duck("concat('p_', CAST(doc_id AS VARCHAR))")},
        |               doc_id) AS rn
        |  FROM documents) t
        |WHERE rn <= $srcCap

@@ -36,6 +36,12 @@ object Dedup {
     s"CAST(conv(substr(md5($x), 1, 15), 16, 10) AS BIGINT)"
   private[queries] def portableHash60Duck(x: String): String =
     s"CAST(concat('0x', substr(md5($x), 1, 15)) AS BIGINT)"
+  /** The same hash of a string, computed on the driver. */
+  private[queries] def portableHash60(x: String): Long = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(x.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.lang.Long.parseLong(md5.map(b => f"$b%02x").mkString.take(15), 16)
+  }
 
   /** Shared tokenization: whitespace split, empties dropped. The Spark
     * side also carries `fp = md5(text)` — the exact-duplicate group key
@@ -51,14 +57,14 @@ object Dedup {
     * kernel's single-space join, WordNgramsSpec — and
     * size(word_ngrams(text, 3)) > 0 ⟺ len(tokens) >= 3, the oracle's row
     * predicate); the build itself lives in [[cachedShingles]]. */
-  private val shingleDuck =
+  private[queries] val shingleDuck =
     s"""SELECT doc_id, list_distinct(list_transform(range(1, len(tokens)-1),
        |  i -> concat_ws(' ', tokens[i], tokens[i+1], tokens[i+2]))) AS shingles
        |FROM ($tokDuck) WHERE len(tokens) >= 3""".stripMargin
 
   /** Exact Jaccard between two distinct-element shingle lists, DuckDB
     * spelling (|a∩b| / (|a|+|b|−|a∩b|) ≡ Spark's intersect/union). */
-  private def jaccardDuck(a: String, b: String): String =
+  private[queries] def jaccardDuck(a: String, b: String): String =
     s"""CAST(len(list_intersect($a, $b)) AS DOUBLE)
        |    / (len($a) + len($b) - len(list_intersect($a, $b)))""".stripMargin
 
@@ -1081,9 +1087,9 @@ object Dedup {
   // Default threshold is calibrated to the synthetic corpus (embeddings
   // are near-orthogonal; top-1 cosines sit around 0.3-0.5), so the
   // operator produces a non-trivial pair set end-to-end.
-  private def planeSpark(p: String, d: String): String =
+  private[queries] def planeSpark(p: String, d: String): String =
     s"CAST(${portableHash60Spark(s"concat(CAST($p AS STRING), '_', CAST($d AS STRING))")} % 1000 AS DOUBLE) / 1000.0"
-  private def planeDuck(p: String, d: String): String =
+  private[queries] def planeDuck(p: String, d: String): String =
     s"CAST(${portableHash60Duck(s"concat(CAST($p AS VARCHAR), '_', CAST($d AS VARCHAR))")} % 1000 AS DOUBLE) / 1000.0"
 
   def embeddingCosinePairs(spark: SparkSession, dir: String,
@@ -1131,7 +1137,7 @@ object Dedup {
   /** DuckDB left-fold dot with init 0 — identical fp-addition order to
     * Spark's aggregate(..., 0.0, +). Lists are 1-based in DuckDB, so the
     * hash input index is i-1 to match Spark's 0-based d. */
-  private def dotDuck(a: String, b: String): String =
+  private[queries] def dotDuck(a: String, b: String): String =
     s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
        |    list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
 
@@ -1819,7 +1825,7 @@ object Dedup {
     * bytes. */
   /** The oracle-side anchor chain (norm → codes → h → sel → a CTE named
     * `anchors` with (doc_id, m, fp)); both span oracles share it. */
-  private val spanAnchorsDuck: String = {
+  private[queries] val spanAnchorsDuck: String = {
     val pw1 = spanPowers(131L).mkString("[", ", ", "]")
     val pw2 = spanPowers(137L).mkString("[", ", ", "]")
     val slice = s"cs[CAST(p AS INT):CAST(p + ${spanK - 1} AS INT)]"
@@ -1928,16 +1934,6 @@ object Dedup {
 
   val spanIndexed: QueryDef =
     QueryDef.sqlBacked("dedup_span_indexed", spanIndexedOracle)(spanIndexedPairs(_, _))
-
-  /** DuckDB spellings shared with other query modules' oracles. */
-  private[queries] def spanAnchorsDuckSql: String = spanAnchorsDuck
-  private[queries] def shingleDuckSql: String = shingleDuck
-  private[queries] def hash60SparkSql(x: String): String = portableHash60Spark(x)
-  private[queries] def hash60DuckSql(x: String): String = portableHash60Duck(x)
-  private[queries] def jaccardDuckSql(a: String, b: String): String = jaccardDuck(a, b)
-  private[queries] def planeDuckSql(p: String, d: String): String = planeDuck(p, d)
-  private[queries] def planeSparkSql(p: String, d: String): String = planeSpark(p, d)
-  private[queries] def dotDuckSql(a: String, b: String): String = dotDuck(a, b)
 
   // embeddingCosineWide is NOT in the census (retired r12, VERDICT r11 #2):
   // on the un-planted corpus its 0.9 threshold matches nothing, so the key

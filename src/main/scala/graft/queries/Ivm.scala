@@ -599,18 +599,18 @@ object Ivm {
     * [[Similarity.ivfSq8OracleOver]]). */
   def annRetractBuild(spark: SparkSession, dir: String,
       timer: (String, Double) => Unit = (_, _) => (),
-      root: String = Engine.scratchDir("graft_ivm_ann_")): SegmentedIndex.State =
+      root: String = Engine.scratchDir("graft_ivm_ann_")): SegmentedIndex.State = {
+    Similarity.emb(spark, dir)
     SegmentedIndex.build(spark, root, timer, "build")(
       Similarity.writeIvfSq8Index(spark, dir, _),
-      // writeIvfSq8Index registered the `embeddings` view
       "SELECT vec_id AS cand_id FROM embeddings WHERE vec_id % 13 = 0",
       Similarity.writeIvfSq8Index(spark, dir, _, slice = "vec_id % 26 = 0"))
+  }
 
   def annRetractProbe(spark: SparkSession, dir: String,
-      st: SegmentedIndex.State): DataFrame = {
-    SegmentedIndex.liveTable(spark, st, "", "cand_id").createOrReplaceTempView("sq8_index")
-    Similarity.probeSq8View(spark, dir)
-  }
+      st: SegmentedIndex.State): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(codec = Ivf.Sq8,
+      index = Some(SegmentedIndex.liveTable(spark, st, "", "cand_id"))))
 
   /** Compaction on the vector axis: the live index becomes a NEW
     * immutable base segment under the index's own cell layout. The
@@ -847,7 +847,8 @@ object Ivm {
       "(SELECT * FROM embeddings WHERE vec_id % 13 <> 0 OR vec_id % 26 = 0)")
   ) { (spark, dir) =>
     val st = SegmentedIndex.State.under(Engine.scratchDir("graft_ivm_annstr_"))
-    Similarity.writeIvfSq8Index(spark, dir, st.base) // registers `embeddings`
+    Similarity.emb(spark, dir)
+    Similarity.writeIvfSq8Index(spark, dir, st.base)
     drain(spark, signedEdits(spark, "vec_id",
       "FROM embeddings WHERE vec_id % 13 = 0",
       "FROM embeddings WHERE vec_id % 26 = 0"), annMaintain(_, dir, st))

@@ -1,99 +1,57 @@
 package graft.queries
 
 import graft.{Engine, QueryDef}
+import graft.queries.Dedup.{dotDuck, planeDuck, planeSpark, portableHash60}
 import graft.sources.StoredParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over the `embeddings` table
-  * (Array[Float], L2-normalized → dot product = cosine).
+/** Vector search over the `embeddings` table (Array[Float], L2-normalized,
+  * so dot product = cosine): exact brute-force top-k, the IVF probes that
+  * [[Ivf]] assembles for the flat, SQ8, JL→SQ8 and PQ codecs, recall@k,
+  * k-means centroid training, SQ8 statistics, semantic dedup, JL random
+  * projection and lexical+vector rank fusion.
   *
-  * Two paths, as the north star requires:
-  *   - brute-force top-k: the exactness baseline. Query set is broadcast;
-  *     the corpus is scanned once and never shuffled — per-query top-k is
-  *     the only exchange, carrying k rows per query per partition thanks
-  *     to partial top-k (window over a per-partition pre-filter would be
-  *     overkill at this k; the shuffle payload is (query, candidate,
-  *     score) triples only, no vectors).
-  *   - IVF (inverted-file) variant: corpus is assigned to the nearest of
-  *     C deterministic centroids at write time; queries probe only the
-  *     nProbe closest cells. At 100 TB the centroid assignment becomes
-  *     the partition key, so a probe touches nProbe/C of the data.
-  *
-  * Dot products run in the codegen'd dot_product kernel, folding in
-  * array-index order from 0.0 — the identical IEEE sequence as the DuckDB
-  * oracles' list_reduce, and centroid components derive from the portable
-  * 60-bit md5 hash (see Dedup.portableHash60), so both oracles replay the
-  * pipelines bit for bit.
+  * Exactness: dot products run in the codegen'd `dot_product` kernel,
+  * folding in array-index order from 0.0 — the IEEE sequence of the DuckDB
+  * oracles' `list_reduce`; centroids and JL signs derive from the portable
+  * 60-bit md5 hash ([[Dedup.portableHash60]]); every approximate score is
+  * BIGINT arithmetic or one IEEE multiply, and every rank breaks ties on
+  * ids. So each oracle replays its pipeline bit for bit.
   */
 object Similarity {
 
-  private def emb(spark: SparkSession, dir: String): Unit =
+  private[queries] def emb(spark: SparkSession, dir: String): Unit =
     Engine.table(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
 
-  private val dotSql = "dot_product(qv, cv)"
-
-  /** Deterministic pseudo-random centroids: centroid c, dim d ∈ [0, 1)
-    * from the portable hash — reproducible across runs and engines with
-    * no RNG. Parameterized by C: the probe side always derives its
-    * centroid relation this way (C rows — negligible at any C); only the
-    * CORPUS assignment outgrows SQL and moves to the broadcast kernel. */
+  /** Deterministic centroids, component (c, d) = hash60("c_d") % 1000 /
+    * 1000, as C rows in SQL: the probe side derives its centroid relation
+    * this way at any C. */
   private[graft] def centroidSqlAt(c: Int) =
     s"""SELECT c AS cid,
        |  transform(sequence(0, 63), d ->
-       |    ${Dedup.planeSparkSql("c", "d")}) AS cv
+       |    ${planeSpark("c", "d")}) AS cv
        |FROM (SELECT explode(sequence(0, ${c - 1})) AS c)""".stripMargin
 
   private[graft] val centroidSql = centroidSqlAt(16)
 
-  /** The same 16×64 centroid matrix as [[centroidSql]], computed on the
-    * driver and rendered as a foldable SQL literal (`D`-suffixed doubles;
-    * `Double.toString` round-trips exactly). md5 is engine-independent, so
-    * these are bit-identical to both the SQL derivation and the DuckDB
-    * oracle's — [[SimilarityKernelSpec]] pins that equality. Being a
-    * plan-time constant is what lets cell assignment run as a projection
-    * instead of a join against a centroid relation. */
-  private[graft] lazy val centroidMatrixSql: String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    def hash60(s: String): Long = {
-      md5.reset()
-      val hex = md5.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }
-    val rows = (0 until 16).map { c =>
-      val comps = (0 until 64).map { d =>
-        val v = (hash60(s"${c}_${d}") % 1000L).toDouble / 1000.0
-        s"${v}D"
-      }
-      s"array(${comps.mkString(", ")})"
-    }
-    s"array(${rows.mkString(",\n  ")})"
-  }
+  /** The same centroids, computed on the driver: any C ships to executors
+    * as a broadcast through [[assignCells]]. */
+  def hashCentroids(c: Int, dims: Int = 64): Array[Array[Double]] =
+    Array.tabulate(c, dims)((ci, d) => (portableHash60(s"${ci}_${d}") % 1000L).toDouble / 1000.0)
 
-  /** The same deterministic portable-hash centroid family as
-    * [[centroidMatrixSql]], for ARBITRARY C — the scale path. Production
-    * IVF sizes C ~ √N, far past what a foldable SQL literal can carry
-    * (text size, parse time); these ship to executors once as a Spark
-    * broadcast via [[assignCells]]. */
-  def hashCentroids(c: Int, dims: Int = 64): Array[Array[Double]] = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    def hash60(s: String): Long = {
-      md5.reset()
-      val hex = md5.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }
-    Array.tabulate(c, dims)((ci, d) => (hash60(s"${ci}_${d}") % 1000L).toDouble / 1000.0)
-  }
+  /** The 16×64 matrix of [[hashCentroids]] as a foldable SQL literal
+    * (`Double.toString` round-trips exactly), bit-identical to
+    * [[centroidSql]] and the DuckDB oracle's ([[SimilarityKernelSpec]]
+    * pins that). As a plan-time constant, cell assignment is a projection
+    * instead of a join against a centroid relation. */
+  private[graft] lazy val centroidMatrixSql: String =
+    hashCentroids(16).map(_.map(v => s"${v}D").mkString("array(", ", ", ")"))
+      .mkString("array(", ",\n  ", ")")
 
   /** Add `cellCol` = argmax-dot cell of `vecCol` against a BROADCAST
-    * centroid matrix — cell assignment as a pure projection at any C:
-    * the matrix ships once per executor, the generated code resolves it
-    * once per codegen instance, and no Exchange precedes the assignment
-    * (CentroidBroadcastSpec pins the plan at C=256). This is the
-    * write-time assignment [[writeIvfIndex]] uses when C outgrows the
-    * plan-constant literal. */
+    * centroid matrix — assignment as a projection at any C, with no
+    * Exchange before it (CentroidBroadcastSpec pins the plan at C=256). */
   def assignCells(vectors: DataFrame, vecCol: String, cellCol: String,
       centroids: Array[Array[Double]]): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -103,23 +61,18 @@ object Similarity {
         ColumnBridge.expression(vectors.col(vecCol)), bc)))
   }
 
-  /** [[writeIvfIndex]] for arbitrary C: same cell-partitioned layout,
-    * assignment through the broadcast matrix instead of the SQL
-    * literal. */
-  def writeIvfIndexAt(vectors: DataFrame, indexPath: String,
-      centroids: Array[Array[Double]], mode: String = "overwrite"): Unit =
-    assignCells(vectors.selectExpr("vec_id AS cand_id", "v AS cv"), "cv", "cell", centroids)
-      .write.mode(mode).partitionBy("cell").parquet(indexPath)
-
   private[queries] def centroidDuckAt(c: Int) =
     s"""SELECT c AS cid,
        |  list_transform(range(0, 64), d ->
-       |    ${Dedup.planeDuckSql("c", "d")}) AS cv
+       |    ${planeDuck("c", "d")}) AS cv
        |FROM range(0, $c) t(c)""".stripMargin
 
   private[queries] val centroidDuck = centroidDuckAt(16)
 
-  // --- brute-force cosine top-k -------------------------------------------
+  // --- brute-force cosine top-k: the exactness baseline ---------------------
+  // The query set is broadcast and the corpus scanned once, never
+  // shuffled; the per-query top-k is the only exchange, carrying
+  // (query, candidate, score) triples.
   def bruteForceTopK(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10): DataFrame = {
     emb(spark, dir)
@@ -133,15 +86,10 @@ object Similarity {
          |  FROM embeddings
          |),
          |scored AS (
-         |  SELECT query_id, cand_id, $dotSql AS score
+         |  SELECT query_id, cand_id, dot_product(qv, cv) AS score
          |  FROM q JOIN c ON query_id <> cand_id
          |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT query_id, cand_id, score,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
-         |  FROM scored) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${Ivf.topK("query_id", "cand_id", "score", "scored", k)}""".stripMargin)
   }
 
   private val bruteForceOracle =
@@ -154,392 +102,94 @@ object Similarity {
        |  FROM embeddings
        |),
        |scored AS (
-       |  SELECT query_id, cand_id, ${Dedup.dotDuckSql("qv", "cv")} AS score
+       |  SELECT query_id, cand_id, ${dotDuck("qv", "cv")} AS score
        |  FROM q JOIN c ON query_id <> cand_id
        |)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT query_id, cand_id, score,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
-       |  FROM scored) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.topK("query_id", "cand_id", "score", "scored")}""".stripMargin
 
   val bruteForce: QueryDef =
     QueryDef.sqlBacked("ann_bruteforce_topk", bruteForceOracle)(bruteForceTopK(_, _))
 
-  // --- IVF-style probed search --------------------------------------------
-  // Corpus rows are assigned to their max-dot centroid by the codegen'd
-  // argmax_dot kernel against the PLAN-TIME-CONSTANT centroid matrix — a
-  // pure projection inside the scan's codegen span, zero shuffles and no
-  // join to a centroid relation (the window-function argmax this replaces
-  // exchanged the whole corpus on vec_id). argmax_dot's first-max-wins
-  // tie-break is the engine-identical twin of the oracle's
-  // `row_number() OVER (ORDER BY dot DESC, cid) = 1`. Each query probes
-  // the nProbe nearest cells (window over nQueries×16 rows — negligible)
-  // and is broadcast to the corpus, so the only corpus-wide exchange left
-  // is the final per-query top-k over candidates in probed cells, carrying
-  // (query, candidate, score) triples only.
+  // --- IVF probes (stages in Ivf) -------------------------------------------
+  // Each query probes its nProbe nearest of C cells; only candidates in
+  // those cells are scored. With a stored cell-partitioned index the
+  // probe's broadcast join on the partition column plans dynamic
+  // partition pruning, so a probe reads nProbe/C of the files (AnnIndexSpec
+  // pins the dynamicpruningexpression). A stored index is a layout
+  // change, invisible in the result: each *_idx / *_append key shares its
+  // in-flight twin's oracle.
+
   def ivfTopK(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame = {
-    emb(spark, dir)
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |e AS (
-         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |corpus AS (
-         |  SELECT vec_id AS cand_id, v AS cv,
-         |    argmax_dot(v, $centroidMatrixSql) AS cell
-         |  FROM e
-         |),
-         |queries AS (
-         |  SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries
-         |),
-         |probes AS (
-         |  SELECT query_id, qv, cid AS cell FROM (
-         |    SELECT q.query_id, q.qv, cent.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, cent.cv) DESC, cent.cid) AS pr
-         |    FROM queries q CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe
-         |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id,
-         |    dot_product(p.qv, c.cv) AS score,
-         |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-         |      dot_product(p.qv, c.cv) DESC, c.cand_id) AS rnk
-         |  FROM probes p JOIN corpus c ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(nQueries = nQueries, k = k, nProbe = nProbe))
 
   private val ivfOracle =
     s"""WITH cent AS ($centroidDuck),
-       |e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |assign AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT e.vec_id, cent.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("e.v", "cent.cv")} DESC, cent.cid) AS rn
-       |    FROM e CROSS JOIN cent) t
-       |  WHERE rn = 1
-       |),
-       |corpus AS (
-       |  SELECT e.vec_id AS cand_id, e.v AS cv, a.cell
-       |  FROM e JOIN assign a ON e.vec_id = a.vec_id
-       |),
+       |${Ivf.Duck.flatCorpus()},
        |queries AS (
        |  SELECT vec_id AS query_id, v AS qv FROM (
        |    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |    FROM embeddings WHERE vec_id < 8) e
        |),
-       |probes AS (
-       |  SELECT query_id, qv, cid AS cell FROM (
-       |    SELECT q.query_id, q.qv, cent.cid,
-       |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |        ${Dedup.dotDuckSql("q.qv", "cent.cv")} DESC, cent.cid) AS pr
-       |    FROM queries q CROSS JOIN cent) t
-       |  WHERE pr <= 4
-       |)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT p.query_id, c.cand_id,
-       |    ${Dedup.dotDuckSql("p.qv", "c.cv")} AS score,
-       |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |      ${Dedup.dotDuckSql("p.qv", "c.cv")} DESC, c.cand_id) AS rnk
-       |  FROM probes p JOIN corpus c ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.flat(4)}""".stripMargin
 
   val ivf: QueryDef = QueryDef.sqlBacked("ann_ivf_topk", ivfOracle)(ivfTopK(_, _))
 
-  // --- filtered vector search (metadata predicate + top-k) -----------------
-  // The production ANN query is rarely unconstrained: retrieval filters on
-  // tenant / language / split alongside the vector ("filtered vector
-  // search"). Here each query keeps only candidates sharing ITS OWN label
-  // (~10% selectivity on this corpus) — the predicate rides the candidate
-  // join and is applied BEFORE ranking, so the top-k window sees only
-  // qualifying rows and the scan's label column prunes/pushes like any
-  // relational predicate (with the cell-partitioned index this composes
-  // with DPP: cells prune by probe, files filter by label). The standard
-  // recall caveat is made explicit by the parameter choice: a filter that
-  // keeps 1/10 of candidates thins every probed cell 10×, so nProbe is
-  // raised (8 vs the unfiltered key's 4) — the knob the nProbe sweep
-  // already quantifies. Oracle: the identical probed+filtered relational
-  // replay; FilteredAnnSpec pins label correctness and exact equality with
-  // filtered brute force restricted to the probed cells.
+  /** Filtered vector search: each query keeps only candidates sharing its
+    * own label (~10% of the corpus), applied in the candidate join before
+    * ranking. The filter thins every probed cell 10×, so nProbe is 8
+    * (FilteredAnnSpec pins labels and equality with filtered brute force
+    * over the probed cells). */
   def ivfFilteredTopK(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 8): DataFrame = {
-    emb(spark, dir)
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |e AS (
-         |  SELECT vec_id, label, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |corpus AS (
-         |  SELECT vec_id AS cand_id, label, v AS cv,
-         |    argmax_dot(v, $centroidMatrixSql) AS cell
-         |  FROM e
-         |),
-         |queries AS (
-         |  SELECT vec_id AS query_id, label AS qlabel, v AS qv
-         |  FROM e WHERE vec_id < $nQueries
-         |),
-         |probes AS (
-         |  SELECT query_id, qlabel, qv, cid AS cell FROM (
-         |    SELECT q.query_id, q.qlabel, q.qv, cent.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, cent.cv) DESC, cent.cid) AS pr
-         |    FROM queries q CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe
-         |)
-         |SELECT query_id, cand_id, label, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id, c.label,
-         |    dot_product(p.qv, c.cv) AS score,
-         |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-         |      dot_product(p.qv, c.cv) DESC, c.cand_id) AS rnk
-         |  FROM probes p JOIN corpus c
-         |    ON p.cell = c.cell AND c.label = p.qlabel
-         |   AND p.query_id <> c.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      nQueries: Int = 8, k: Int = 10, nProbe: Int = 8): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(labels = true, nQueries = nQueries, k = k, nProbe = nProbe))
 
   private val ivfFilteredOracle =
     s"""WITH cent AS ($centroidDuck),
-       |e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |assign AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT e.vec_id, cent.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("e.v", "cent.cv")} DESC, cent.cid) AS rn
-       |    FROM e CROSS JOIN cent) t
-       |  WHERE rn = 1
-       |),
-       |corpus AS (
-       |  SELECT e.vec_id AS cand_id, e.label, e.v AS cv, a.cell
-       |  FROM e JOIN assign a ON e.vec_id = a.vec_id
-       |),
+       |${Ivf.Duck.flatCorpus(labels = true)},
        |queries AS (
        |  SELECT vec_id AS query_id, label AS qlabel, v AS qv
        |  FROM e WHERE vec_id < 8
        |),
-       |probes AS (
-       |  SELECT query_id, qlabel, qv, cid AS cell FROM (
-       |    SELECT q.query_id, q.qlabel, q.qv, cent.cid,
-       |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |        ${Dedup.dotDuckSql("q.qv", "cent.cv")} DESC, cent.cid) AS pr
-       |    FROM queries q CROSS JOIN cent) t
-       |  WHERE pr <= 8
-       |)
-       |SELECT query_id, cand_id, label, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT p.query_id, c.cand_id, c.label,
-       |    ${Dedup.dotDuckSql("p.qv", "c.cv")} AS score,
-       |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |      ${Dedup.dotDuckSql("p.qv", "c.cv")} DESC, c.cand_id) AS rnk
-       |  FROM probes p JOIN corpus c
-       |    ON p.cell = c.cell AND c.label = p.qlabel
-       |   AND p.query_id <> c.cand_id) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.flat(8, labels = true)}""".stripMargin
 
   val ivfFiltered: QueryDef =
     QueryDef.sqlBacked("ann_filtered", ivfFilteredOracle)(ivfFilteredTopK(_, _))
 
-  // --- IVF at production C through the broadcast-matrix kernel ------------
-  // The same probed search with C=256 — past what a foldable SQL literal
-  // can reasonably carry — exercising the scale path end-to-end: corpus
-  // cell assignment runs through [[assignCells]] (ArgmaxDotBroadcast, the
-  // matrix shipped once per executor as a Spark broadcast), so assignment
-  // stays a pure projection with no Exchange before the cell column exists
-  // (CentroidBroadcastSpec pins the plan; this key pins the RESULTS
-  // against DuckDB re-deriving all 256 centroids relationally). Probe
-  // selection stays SQL — C rows is negligible on the query side at any C.
+  /** The probe at C=256, past what a foldable literal should carry: cells
+    * come from the broadcast matrix; the oracle re-derives all 256
+    * centroids relationally. */
   def ivfC256TopK(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 16): DataFrame = {
-    emb(spark, dir)
-    assignCells(
-      spark.sql(
-        """SELECT vec_id AS cand_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-          |FROM embeddings""".stripMargin),
-      "cv", "cell", hashCentroids(256))
-      .createOrReplaceTempView("ivf256_corpus")
-    spark.sql(
-      s"""WITH cent AS (${centroidSqlAt(256)}),
-         |queries AS (
-         |  SELECT vec_id AS query_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-         |  FROM embeddings WHERE vec_id < $nQueries
-         |),
-         |probes AS (
-         |  SELECT query_id, qv, cid AS cell FROM (
-         |    SELECT q.query_id, q.qv, cent.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, cent.cv) DESC, cent.cid) AS pr
-         |    FROM queries q CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe
-         |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id,
-         |    dot_product(p.qv, c.cv) AS score,
-         |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-         |      dot_product(p.qv, c.cv) DESC, c.cand_id) AS rnk
-         |  FROM probes p JOIN ivf256_corpus c
-         |    ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      nQueries: Int = 8, k: Int = 10, nProbe: Int = 16): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(Ivf.Hashed(256), nQueries = nQueries, k = k, nProbe = nProbe))
 
   private val ivfC256Oracle =
     s"""WITH cent AS (${centroidDuckAt(256)}),
-       |e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |assign AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT e.vec_id, cent.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("e.v", "cent.cv")} DESC, cent.cid) AS rn
-       |    FROM e CROSS JOIN cent) t
-       |  WHERE rn = 1
-       |),
-       |corpus AS (
-       |  SELECT e.vec_id AS cand_id, e.v AS cv, a.cell
-       |  FROM e JOIN assign a ON e.vec_id = a.vec_id
-       |),
+       |${Ivf.Duck.flatCorpus()},
        |queries AS (
        |  SELECT vec_id AS query_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
        |  FROM embeddings WHERE vec_id < 8
        |),
-       |probes AS (
-       |  SELECT query_id, qv, cid AS cell FROM (
-       |    SELECT q.query_id, q.qv, cent.cid,
-       |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |        ${Dedup.dotDuckSql("q.qv", "cent.cv")} DESC, cent.cid) AS pr
-       |    FROM queries q CROSS JOIN cent) t
-       |  WHERE pr <= 16
-       |)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT p.query_id, c.cand_id,
-       |    ${Dedup.dotDuckSql("p.qv", "c.cv")} AS score,
-       |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |      ${Dedup.dotDuckSql("p.qv", "c.cv")} DESC, c.cand_id) AS rnk
-       |  FROM probes p JOIN corpus c ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.flat(16)}""".stripMargin
 
   val ivfC256: QueryDef =
     QueryDef.sqlBacked("ann_ivf_c256", ivfC256Oracle)(ivfC256TopK(_, _))
 
-  // --- ANN quality evaluation: recall@k of IVF against brute force --------
-  // The operator that closes the ANN tuning loop: recall@k = |IVF top-k ∩
-  // exact top-k| / k per query. Tuning nProbe/C without this number is
-  // guesswork; with it, "nProbe=4 of 16 cells reaches recall X" is a
-  // measured statement. Cost shape at 100 TB: both inputs are already
-  // computed top-k relations (nQueries × k rows each — tiny regardless of
-  // corpus size), so the evaluation join is negligible next to the
-  // searches it scores; ground truth comes from the exact path over a
-  // sampled query set, the standard practice. Both sides reuse the exact
-  // SQL of their underlying keys, so this key's oracle parity also
-  // re-proves the two pipelines agree inside a composition.
-  def annRecall(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    bruteForceTopK(spark, dir).createOrReplaceTempView("ann_eval_bf")
-    ivfTopK(spark, dir).createOrReplaceTempView("ann_eval_ivf")
-    spark.sql(
-      s"""SELECT b.query_id, count(i.cand_id) AS hits,
-         |  CAST(count(i.cand_id) AS DOUBLE) / $k.0 AS recall
-         |FROM ann_eval_bf b LEFT JOIN ann_eval_ivf i
-         |  ON b.query_id = i.query_id AND b.cand_id = i.cand_id
-         |GROUP BY b.query_id
-         |ORDER BY b.query_id""".stripMargin)
-  }
-
-  private val annRecallOracle =
-    s"""SELECT b.query_id, count(i.cand_id) AS hits,
-       |  CAST(count(i.cand_id) AS DOUBLE) / 10.0 AS recall
-       |FROM ($bruteForceOracle) b LEFT JOIN ($ivfOracle) i
-       |  ON b.query_id = i.query_id AND b.cand_id = i.cand_id
-       |GROUP BY b.query_id
-       |ORDER BY b.query_id""".stripMargin
-
-  val recall: QueryDef =
-    QueryDef.sqlBacked("ann_recall", annRecallOracle)(annRecall(_, _))
-
-  /** Mean recall@k of the probed search at one nProbe — the sweep body
-    * behind the recall-vs-latency trade-off table (VERDICT r9 #4: the one
-    * number an ANN user actually reads when choosing nProbe). Reuses the
-    * exact pipelines ann_recall pins, so a sweep point's quality is
-    * oracle-anchored; only the probe width varies. */
-  def meanRecallAtNProbe(spark: SparkSession, dir: String, nProbe: Int,
-      k: Int = 10): Double = {
-    bruteForceTopK(spark, dir, k = k).createOrReplaceTempView("ann_sweep_bf")
-    ivfTopK(spark, dir, k = k, nProbe = nProbe)
-      .createOrReplaceTempView("ann_sweep_ivf")
-    spark.sql(
-      s"""SELECT avg(r) FROM (
-         |  SELECT CAST(count(i.cand_id) AS DOUBLE) / $k.0 AS r
-         |  FROM ann_sweep_bf b LEFT JOIN ann_sweep_ivf i
-         |    ON b.query_id = i.query_id AND b.cand_id = i.cand_id
-         |  GROUP BY b.query_id)""".stripMargin).head().getDouble(0)
-  }
-
-  /** Probed top-k against an ARBITRARY centroid matrix (the fitted model
-    * from [[trainCentroids]], or any C×d array): corpus assignment runs
-    * through the broadcast argmax kernel (projection, no Exchange), probe
-    * selection against the same matrix rendered as a C-row relation —
-    * model-sized, broadcast by AQE. This is how a TRAINED index is
-    * served; [[meanRecallWith]] scores it against the exact ground truth
-    * so "training lifted recall@10 by X at the same probe budget" is a
-    * measured statement (Bench's kmeans_recall_sf1 commits it). */
+  /** Probed top-k under any C×d model (the fitted one from
+    * [[trainCentroids]]): corpus cells from the broadcast matrix, probes
+    * against the model as a C-row relation. */
   def ivfTopKWith(spark: SparkSession, dir: String,
       cents: Array[Array[Double]], nQueries: Int = 8, k: Int = 10,
-      nProbe: Int = 4): DataFrame = {
-    emb(spark, dir)
-    assignCells(spark.sql(
-      """SELECT vec_id AS cand_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |FROM embeddings""".stripMargin), "cv", "cell", cents)
-      .createOrReplaceTempView("ivfw_corpus")
-    import spark.implicits._
-    cents.zipWithIndex.toSeq.map { case (cv, i) => (i, cv.toSeq) }
-      .toDF("cid", "cv").createOrReplaceTempView("ivfw_cent")
-    spark.sql(
-      s"""WITH queries AS (
-         |  SELECT vec_id AS query_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-         |  FROM embeddings WHERE vec_id < $nQueries
-         |),
-         |probes AS (
-         |  SELECT query_id, qv, cid AS cell FROM (
-         |    SELECT q.query_id, q.qv, c.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, c.cv) DESC, c.cid) AS pr
-         |    FROM queries q CROSS JOIN ivfw_cent c) t
-         |  WHERE pr <= $nProbe
-         |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id,
-         |    dot_product(p.qv, c.cv) AS score,
-         |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-         |      dot_product(p.qv, c.cv) DESC, c.cand_id) AS rnk
-         |  FROM probes p JOIN ivfw_corpus c
-         |    ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      nProbe: Int = 4): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(Ivf.Fitted(cents), nQueries = nQueries, k = k, nProbe = nProbe))
 
   /** The probed search over ARBITRARY query/corpus relations —
     * `queries(query_id, qv)` against `corpus(cand_id, cv[, cell])` under
-    * any centroid model. The core [[ivfTopKWith]] and the streaming
-    * vector-search path ([[graft.streaming.Streams.vectorSearch]]) share:
-    * a corpus already carrying a `cell` column (e.g. read back from a
-    * [[writeIvfIndexAt]] index) is probed as-is — partition pruning
-    * intact — otherwise assignment runs through the broadcast kernel. */
+    * any centroid model; the streaming vector-search path
+    * ([[graft.streaming.Streams.vectorSearch]]) runs it. A corpus already
+    * carrying `cell` (read back from a [[writeIvfIndexAt]] index) is
+    * probed as-is, partition pruning intact; otherwise assignment runs
+    * through the broadcast kernel. */
   def searchVectors(queries: DataFrame, corpus: DataFrame,
       cents: Array[Array[Double]], k: Int = 10, nProbe: Int = 4): DataFrame = {
     // Pure DataFrame composition — no temp views: inside foreachBatch the
@@ -570,205 +220,131 @@ object Similarity {
       .orderBy("query_id", "rnk")
   }
 
-  /** Mean recall@k of the probed search under an arbitrary centroid
-    * model — [[meanRecallAtNProbe]]'s twin for trained centroids. */
-  def meanRecallWith(spark: SparkSession, dir: String,
-      cents: Array[Array[Double]], nProbe: Int, k: Int = 10): Double = {
-    bruteForceTopK(spark, dir, k = k).createOrReplaceTempView("ann_sweep_bf")
-    ivfTopKWith(spark, dir, cents, k = k, nProbe = nProbe)
-      .createOrReplaceTempView("ann_sweep_ivfw")
-    spark.sql(
-      s"""SELECT avg(r) FROM (
-         |  SELECT CAST(count(i.cand_id) AS DOUBLE) / $k.0 AS r
-         |  FROM ann_sweep_bf b LEFT JOIN ann_sweep_ivfw i
-         |    ON b.query_id = i.query_id AND b.cand_id = i.cand_id
-         |  GROUP BY b.query_id)""".stripMargin).head().getDouble(0)
-  }
-
-  // --- IVF with a MATERIALIZED cell-partitioned index ---------------------
-  // The write-time half of the IVF promise ("the centroid assignment
-  // becomes the partition key"): the corpus is written ONCE, partitioned
-  // by cell, and a probe reads back only its cells. Pruning is Catalyst's
-  // dynamic partition pruning — the probes relation (nQueries×nProbe rows,
-  // broadcast) joins the index on its partition column, so the scan plans
-  // a dynamicpruning subquery and skips every unprobed cell's files at
-  // runtime. No driver-side cell math, no literal IN lists: declare the
-  // join, let the optimizer prune — at 100 TB a probe touches nProbe/C of
-  // the files, and that fraction is visible in the plan
-  // (AnnIndexSpec pins the dynamicpruningexpression + result equality
-  // with the index-free path). Same oracle as ann_ivf_topk: the index is
-  // a layout change, invisible in the result.
-
-  /** Write (or extend) the cell-partitioned IVF index from a vector
-    * relation `(vec_id, v: array<double>)`: one pass, assignment is the
-    * shuffle-free argmax_dot projection, cell is the partition dir. With
-    * mode = "append" this is INCREMENTAL index maintenance — new batches
-    * land as extra files inside their cells' partitions; centroids are
-    * deterministic constants, so old and new rows agree on cell
-    * boundaries and a probe over the grown index is indistinguishable
-    * from a full rebuild (AnnIndexSpec pins append ≡ rebuild). */
+  /** Write (or, with mode "append", extend) the flat cell-partitioned
+    * index of `vectors(vec_id, v)` (AnnIndexSpec pins append ≡ rebuild). */
   def writeIvfIndex(vectors: DataFrame, indexPath: String,
       mode: String = "overwrite"): Unit =
-    vectors.selectExpr("vec_id AS cand_id", "v AS cv",
-        s"argmax_dot(v, $centroidMatrixSql) AS cell")
-      .write.mode(mode).partitionBy("cell").parquet(indexPath)
+    Ivf.corpus(vectors, Ivf.Hashed16).write.mode(mode).partitionBy("cell").parquet(indexPath)
 
-  /** Build the index over the full embeddings table. */
-  def buildIvfIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
-    emb(spark, dir)
-    writeIvfIndex(spark.sql(
-      """SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |FROM embeddings""".stripMargin), indexPath)
-  }
+  /** [[writeIvfIndex]] under any centroid matrix. */
+  def writeIvfIndexAt(vectors: DataFrame, indexPath: String,
+      centroids: Array[Array[Double]], mode: String = "overwrite"): Unit =
+    Ivf.corpus(vectors, Ivf.Fitted(centroids)).write.mode(mode).partitionBy("cell").parquet(indexPath)
 
-  /** Probe an existing index: the same query/probe/top-k SQL as
-    * [[ivfIndexedTopK]], over whatever the index path holds. */
+  /** Build the flat index over the full embeddings table. */
+  def buildIvfIndex(spark: SparkSession, dir: String, indexPath: String): Unit =
+    Ivf.write(spark, dir, Ivf.Flat, indexPath)
+
+  private def stored(spark: SparkSession, indexPath: String) =
+    Some(StoredParquet.read(spark, indexPath))
+
   def probeIvfIndex(spark: SparkSession, dir: String, indexPath: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame = {
-    emb(spark, dir)
-    StoredParquet.read(spark, indexPath).createOrReplaceTempView("ivf_index")
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |queries AS (
-         |  SELECT vec_id AS query_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-         |  FROM embeddings WHERE vec_id < $nQueries
-         |),
-         |probes AS (
-         |  SELECT query_id, qv, cell FROM (
-         |    SELECT q.query_id, q.qv, cent.cid AS cell,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, cent.cv) DESC, cent.cid) AS pr
-         |    FROM queries q CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe
-         |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id,
-         |    dot_product(p.qv, c.cv) AS score,
-         |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-         |      dot_product(p.qv, c.cv) DESC, c.cand_id) AS rnk
-         |  FROM probes p JOIN ivf_index c
-         |    ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(index = stored(spark, indexPath),
+      nQueries = nQueries, k = k, nProbe = nProbe))
+
+  /** [[probeIvfIndex]] for an index written under `cents`
+    * ([[writeIvfIndexAt]]): probes run against the same model (KmeansSpec
+    * pins the composition ≡ [[ivfTopKWith]] row for row). */
+  def probeIvfIndexWith(spark: SparkSession, dir: String, indexPath: String,
+      cents: Array[Array[Double]], nQueries: Int = 8, k: Int = 10,
+      nProbe: Int = 4): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(Ivf.Fitted(cents), index = stored(spark, indexPath),
+      nQueries = nQueries, k = k, nProbe = nProbe))
 
   def ivfIndexedTopK(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame = {
-    val idx = Engine.scratchDir("graft_ivf_index_") + "/index"
-    buildIvfIndex(spark, dir, idx)
-    probeIvfIndex(spark, dir, idx, nQueries, k, nProbe)
-  }
+      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame =
+    Ivf.indexed(spark, dir, Ivf.Probe(nQueries = nQueries, k = k, nProbe = nProbe))
 
   val ivfIndexed: QueryDef =
     QueryDef.sqlBacked("ann_ivf_indexed", ivfOracle)(ivfIndexedTopK(_, _))
 
-  /** Incremental index maintenance as a GATE row, not just a spec pin:
-    * build the cell-partitioned index from 90% of the corpus, append the
-    * remaining batch with mode = "append" (new files land inside their
-    * cells' partition dirs; the deterministic centroids make old and new
-    * rows agree on cell boundaries), then probe the GROWN index. The
-    * oracle is the full-corpus IVF oracle — append ≡ rebuild is exactly
-    * what the hash compare certifies (AnnIndexSpec pins the same equality
-    * at the index-content level). This is the production ingest shape: a
-    * streaming/batch pipeline extends the index by writing only the new
-    * batch, never rewriting the corpus. */
+  /** Incremental index maintenance: 90% of the corpus written, the rest
+    * appended into the cells' partitions, then the grown index probed —
+    * against the full-corpus oracle, so append ≡ rebuild is what the
+    * compare certifies. */
   def ivfAppendTopK(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame = {
-    val idx = Engine.scratchDir("graft_ivf_append_") + "/index"
-    emb(spark, dir)
-    def vecs(pred: String) = spark.sql(
-      s"""SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |FROM embeddings WHERE vec_id % 10 $pred""".stripMargin)
-    writeIvfIndex(vecs("<> 7"), idx)
-    writeIvfIndex(vecs("= 7"), idx, mode = "append")
-    probeIvfIndex(spark, dir, idx, nQueries, k, nProbe)
-  }
+      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame =
+    Ivf.indexed(spark, dir, Ivf.Probe(nQueries = nQueries, k = k, nProbe = nProbe), append = true)
 
   val ivfAppend: QueryDef =
     QueryDef.sqlBacked("ann_ivf_append", ivfOracle)(ivfAppendTopK(_, _))
 
-  /** [[probeIvfIndex]] for a TRAINED (or any arbitrary-matrix) index:
-    * probe selection runs against the same model the index was written
-    * with — the matrix the caller got from [[trainCentroids]] — rendered
-    * as a model-sized relation; candidate scan, DPP pruning and top-k are
-    * identical to the hash-index path. Together with [[writeIvfIndexAt]]
-    * this closes the trained serving loop: train → write cell-partitioned
-    * index → probe with the fitted model (KmeansSpec pins the composition
-    * ≡ the in-memory [[ivfTopKWith]] row for row). */
-  def probeIvfIndexWith(spark: SparkSession, dir: String, indexPath: String,
-      cents: Array[Array[Double]], nQueries: Int = 8, k: Int = 10,
-      nProbe: Int = 4): DataFrame = {
-    emb(spark, dir)
-    StoredParquet.read(spark, indexPath).createOrReplaceTempView("ivfw_index")
-    import spark.implicits._
-    cents.zipWithIndex.toSeq.map { case (cv, i) => (i, cv.toSeq) }
-      .toDF("cid", "cv").createOrReplaceTempView("ivfw_cent")
-    spark.sql(
-      s"""WITH queries AS (
-         |  SELECT vec_id AS query_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-         |  FROM embeddings WHERE vec_id < $nQueries
-         |),
-         |probes AS (
-         |  SELECT query_id, qv, cid AS cell FROM (
-         |    SELECT q.query_id, q.qv, c.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, c.cv) DESC, c.cid) AS pr
-         |    FROM queries q CROSS JOIN ivfw_cent c) t
-         |  WHERE pr <= $nProbe
-         |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id,
-         |    dot_product(p.qv, c.cv) AS score,
-         |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-         |      dot_product(p.qv, c.cv) DESC, c.cand_id) AS rnk
-         |  FROM probes p JOIN ivfw_index c
-         |    ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
+  // --- recall@k --------------------------------------------------------------
+  // |approximate top-k ∩ exact top-k| / k per query: the number that tunes
+  // nProbe and C. Both inputs are top-k relations (queries × k rows), so
+  // the evaluation join is negligible next to the searches it scores.
+
+  /** Per query of `exact`: `hits`, its exact top-k found by `approx`,
+    * and `recall` = hits / k. */
+  def recallAtK(exact: DataFrame, approx: DataFrame, k: Int): DataFrame = {
+    val hits = count(col("i.cand_id"))
+    exact.as("b").join(approx.as("i"),
+        col("b.query_id") === col("i.query_id") && col("b.cand_id") === col("i.cand_id"), "left")
+      .groupBy(col("b.query_id"))
+      .agg(hits.as("hits"), (hits.cast("double") / k.toDouble).as("recall"))
   }
 
-  // --- int8 symmetric quantization (storage/compression path) -------------
-  // The standard embedding-compression step before writing an index:
-  // per-vector symmetric int8 quantization (scale = max|x| / 127, value
-  // q = round(x / scale) clamped to [-127, 127]) with its reconstruction
-  // error surfaced per vector. A pure per-row projection — at 100 TB the
-  // quantized table writes at scan speed with no shuffle, cutting the
-  // float32 corpus 4× before any ANN index build. Outputs are scalars
-  // (scale, max_err, mse) because the driver compare can't hold arrays;
-  // hash equality against DuckDB proves the whole per-element pipeline
-  // (both engines fold errors in index order with identical IEEE ops).
+  private def meanRecall(exact: DataFrame, approx: DataFrame, k: Int): Double =
+    recallAtK(exact, approx, k).agg(avg("recall")).head().getDouble(0)
+
+  def annRecall(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    recallAtK(bruteForceTopK(spark, dir), ivfTopK(spark, dir), k).orderBy("query_id")
+
+  private val annRecallOracle =
+    s"""SELECT b.query_id, count(i.cand_id) AS hits,
+       |  CAST(count(i.cand_id) AS DOUBLE) / 10.0 AS recall
+       |FROM ($bruteForceOracle) b LEFT JOIN ($ivfOracle) i
+       |  ON b.query_id = i.query_id AND b.cand_id = i.cand_id
+       |GROUP BY b.query_id
+       |ORDER BY b.query_id""".stripMargin
+
+  val recall: QueryDef =
+    QueryDef.sqlBacked("ann_recall", annRecallOracle)(annRecall(_, _))
+
+  /** Mean recall@k of the hashed-centroid probe at one nProbe: a point of
+    * the recall-vs-latency sweep. */
+  def meanRecallAtNProbe(spark: SparkSession, dir: String, nProbe: Int,
+      k: Int = 10): Double =
+    meanRecall(bruteForceTopK(spark, dir, k = k), ivfTopK(spark, dir, k = k, nProbe = nProbe), k)
+
+  /** Mean recall@k of the probe under any centroid model. */
+  def meanRecallWith(spark: SparkSession, dir: String,
+      cents: Array[Array[Double]], nProbe: Int, k: Int = 10): Double =
+    meanRecall(bruteForceTopK(spark, dir, k = k), ivfTopKWith(spark, dir, cents, k = k, nProbe = nProbe), k)
+
+  // --- int8 symmetric quantization statistics --------------------------------
+  // Per vector: scale = max|x| / 127, q = round(x / scale) clamped to
+  // ±127, and the reconstruction error — a per-row projection with no
+  // shuffle. Outputs are scalars (scale, max_err, mse) because the driver
+  // compare holds no arrays; both engines fold errors in index order.
   private val quantizeOracle =
-    """WITH base AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings
-      |), s AS (
-      |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS maxabs
-      |  FROM base
-      |), q AS (
-      |  SELECT vec_id, v, maxabs,
-      |    list_transform(v, x -> greatest(CAST(-127 AS BIGINT),
-      |      least(CAST(127 AS BIGINT),
-      |        CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)))) AS qv
-      |  FROM s WHERE maxabs > 0
-      |), e AS (
-      |  SELECT vec_id, maxabs,
-      |    list_transform(range(1, len(v) + 1),
-      |      i -> v[i] - qv[i] * maxabs / 127.0) AS err
-      |  FROM q
-      |)
-      |SELECT vec_id, maxabs / 127.0 AS scale,
-      |  list_max(list_transform(err, x -> abs(x))) AS max_err,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(err, x -> x * x)), (a, b) -> a + b) / len(err) AS mse
-      |FROM e ORDER BY vec_id""".stripMargin
+    s"""WITH base AS (
+       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  FROM embeddings
+       |), s AS (
+       |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS maxabs
+       |  FROM base
+       |), q AS (
+       |  SELECT vec_id, v, maxabs,
+       |    list_transform(v, x -> ${Ivf.Duck.sq8Code}) AS qv
+       |  FROM s WHERE maxabs > 0
+       |), e AS (
+       |  SELECT vec_id, maxabs,
+       |    list_transform(range(1, len(v) + 1),
+       |      i -> v[i] - qv[i] * maxabs / 127.0) AS err
+       |  FROM q
+       |)
+       |SELECT vec_id, maxabs / 127.0 AS scale,
+       |  list_max(list_transform(err, x -> abs(x))) AS max_err,
+       |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |      list_transform(err, x -> x * x)), (a, b) -> a + b) / len(err) AS mse
+       |FROM e ORDER BY vec_id""".stripMargin
 
   def quantize(spark: SparkSession, dir: String): DataFrame = {
     emb(spark, dir)
-    // One codegen loop per row (functions/SketchExpressions.QuantStats)
-    // instead of five chained higher-order lambdas — identical IEEE
-    // operation order, so the DuckDB oracle still matches bit for bit;
-    // the kernel reads the float array directly (float→double cast is
-    // exact), keeping the whole scoring inside whole-stage codegen.
+    // one codegen loop per row (functions/SketchExpressions.QuantStats),
+    // in the oracle's IEEE operation order, reading the float array
     spark.sql(
       """SELECT vec_id, st[0] AS scale, st[1] AS max_err, st[2] AS mse
         |FROM (SELECT vec_id, quant_stats(embedding) AS st FROM embeddings)
@@ -779,43 +355,22 @@ object Similarity {
   val quantized: QueryDef =
     QueryDef.sqlBacked("emb_quantize", quantizeOracle)(quantize(_, _))
 
-  // --- semantic deduplication (SemDeDup, Abbas et al. 2023) ---------------
-  // Embedding-space near-dup removal the way it scales: vectors are first
-  // bucketed to their nearest centroid — the same shuffle-free cell
-  // projection as the IVF path — and exact pairwise cosine runs only
-  // WITHIN a cell. The pair space shrinks from N²/2 to Σ|cell|²/2, so C
-  // MUST grow with the corpus: with C ~ √N, cells hold ~√N vectors and
-  // within-cell all-pairs stays ~N·√N/2 total. Round 10 ran a fixed
-  // C=16 (Θ(N²/16)) and its sf10 cell was the suite's slowest at 38.9 s
-  // (VERDICT r10 #2); C is now [[semanticC]] — the smallest power of two
-  // whose square covers the corpus (floored at 16) — computed from a
-  // metadata-cheap count() and assigned through [[assignCells]]'s
-  // broadcast centroid matrix, the arbitrary-C scale path ann_ivf_c256
-  // already pins against DuckDB. The oracle derives the SAME C
-  // relationally (pure integer comparison — no float log/sqrt whose
-  // rounding could diverge between engines), so the gate stays
-  // hash-green at every corpus size. At 100 TB the cell id becomes the
-  // write-time partition key and the within-cell join is co-partitioned
-  // and exchange-free. Keep rule is deterministic keep-lowest-id: a
-  // vector is dropped iff a lower-id vector in ITS cell has cosine ≥ τ.
-  // τ = 0.35 is calibrated to this synthetic corpus (near-orthogonal,
-  // top cosines ≈ 0.3–0.5) so the verdict splits both ways. Every vector
-  // is reported with its cell and kept flag. Cross-cell misses are the
-  // documented SemDeDup approximation (same as the paper's k-means
-  // bucketing), not a bug.
+  // --- semantic deduplication (SemDeDup, Abbas et al. 2023) -----------------
+  // Vectors are bucketed to their nearest of C hashed centroids (the
+  // broadcast cell projection) and exact pairwise cosine runs only within
+  // a cell: Σ|cell|²/2 pairs instead of N²/2, with C = [[semanticC]] ~ √N.
+  // Keep rule: a vector is dropped iff a lower-id vector in its cell has
+  // cosine ≥ τ (0.35, calibrated to this near-orthogonal corpus).
+  // Cross-cell misses are the SemDeDup approximation, not a bug.
 
-  /** Smallest power of two `c` with `c·c ≥ n`, floored at 16 — the
-    * C ~ √N centroid-count rule, in exact integer arithmetic so the
-    * relational DuckDB spelling ([[semanticCfgDuck]]) computes the
-    * identical value on every engine. */
+  /** Smallest power of two `c` with `c·c ≥ n`, floored at 16, in integer
+    * arithmetic so the oracle ([[semanticCfgDuck]]) computes the same C. */
   private[graft] def semanticC(n: Long): Int = {
     var c = 1L
     while (c * c < n) c <<= 1L
     math.max(16L, c).toInt
   }
 
-  /** The same rule as [[semanticC]] as a DuckDB CTE body: min over the
-    * powers of two whose square covers count(*) — integer compares only. */
   private val semanticCfgDuck =
     """SELECT greatest(16, min(c)) AS c FROM (
       |    SELECT CAST(pow(2, i) AS BIGINT) AS c FROM range(0, 31) t(i)) p
@@ -825,9 +380,7 @@ object Similarity {
       threshold: Double = 0.35): DataFrame = {
     emb(spark, dir)
     val n = Engine.table(spark, dir, "embeddings").count()
-    // Materialize the cell assignment once (the 100 TB shape writes it
-    // with cell as partition key); otherwise each of the three references
-    // below would re-run the assignment projection over the scan.
+    // the assignment is cached once: the query references it three times
     val corpus = Engine.cacheSwap("sem_corpus", assignCells(
       spark.sql(
         """SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -851,7 +404,7 @@ object Similarity {
        |cent AS (
        |  SELECT c AS cid,
        |    list_transform(range(0, 64), d ->
-       |      ${Dedup.planeDuckSql("c", "d")}) AS cv
+       |      ${planeDuck("c", "d")}) AS cv
        |  FROM (SELECT unnest(range(0, (SELECT c FROM semcfg))) AS c) ids
        |),
        |e AS (
@@ -860,18 +413,15 @@ object Similarity {
        |),
        |corpus AS (
        |  SELECT e.vec_id, e.v, t.cid AS cell FROM e JOIN (
-       |    SELECT vec_id, cid FROM (
-       |      SELECT e.vec_id, cent.cid,
-       |        row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |          ${Dedup.dotDuckSql("e.v", "cent.cv")} DESC, cent.cid) AS rn
-       |      FROM e CROSS JOIN cent) WHERE rn = 1) t
+       |    ${Ivf.ranked("vec_id, cid", "e.vec_id, cent.cid", "e.vec_id",
+      s"${dotDuck("e.v", "cent.cv")} DESC, cent.cid", "e CROSS JOIN cent", "rn", "= 1", t = "")}) t
        |  ON e.vec_id = t.vec_id
        |),
        |losers AS (
        |  SELECT DISTINCT b.vec_id
        |  FROM corpus a JOIN corpus b
        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE ${Dedup.dotDuckSql("a.v", "b.v")} >= 0.35
+       |  WHERE ${dotDuck("a.v", "b.v")} >= 0.35
        |)
        |SELECT c.vec_id, CAST(c.cell AS INT) AS cell, l.vec_id IS NULL AS kept
        |FROM corpus c LEFT JOIN losers l ON c.vec_id = l.vec_id
@@ -880,43 +430,18 @@ object Similarity {
   val semantic: QueryDef =
     QueryDef.sqlBacked("dedup_semantic", semanticOracle)(semanticDedup(_, _))
 
-  // --- k-means centroid TRAINING (Lloyd's iterations) ----------------------
-  // Everything IVF-shaped above runs against the deterministic HASH
-  // centroids — fine as a partitioning function, but real IVF quality
-  // comes from centroids fitted to the corpus (recall at a given nProbe
-  // rises when cells follow the data's density). This is the training
-  // half: spherical k-means via Lloyd's iterations, seeded from the same
-  // hashCentroids family so the whole pipeline stays RNG-free.
-  //
-  // 100 TB shape — the classic distributed-k-means contract (same as
-  // Spark MLlib's KMeans, re-derived here so arithmetic is oracle-
-  // replayable): per iteration, ONE projection pass over the corpus
-  // (cell = argmax-dot against the BROADCAST centroid matrix — no join,
-  // no exchange before the cell column exists), then a partial-aggregated
-  // shuffle keyed (cell, dim) carrying ≤ partitions×C×d rows, landing
-  // C×d rows on the driver. Driver state is C×d doubles — bounded by the
-  // model size, NEVER by the corpus (at C=√N=10⁴, d=64 that is 640k
-  // doubles ≈ 5 MB; past that you'd treeAggregate the partials, nothing
-  // else changes). The corpus projection is cached once across the
-  // iters+1 passes.
-  //
-  // Oracle-exact arithmetic, the part that makes this verifiable at all:
-  //   - per-dim sums run in SCALED FIXED-POINT (floor(x·1e7 + 0.5) as
-  //     BIGINT) — integer adds are order-independent, so Spark's
-  //     arbitrary partial-agg order and DuckDB's single-threaded sum
-  //     produce the same bits;
-  //   - the mean back to double is (CAST(s) / CAST(n)) / 1e7 — two IEEE
-  //     divisions, exactly specified, identical on both engines;
-  //   - assignment replays dot_product's index-order fold with
-  //     first-max-wins ties (row_number ORDER BY dot DESC, cid in the
-  //     oracle — the pinned ArgmaxDotBroadcast contract);
-  //   - empty cells keep their previous centroid (standard Lloyd's
-  //     practice), expressed as the same LEFT JOIN + coalesce on both
-  //     engines.
-  /** Unit-normalize in index-order IEEE arithmetic (fold order matches
-    * the DuckDB list_reduce; sqrt and division are correctly rounded on
-    * both engines, so normalized components agree bit for bit).
-    * Zero-norm rows pass through unchanged — the drop-to-previous rule. */
+  // --- k-means centroid training (spherical Lloyd's iterations) -------------
+  // Seeded from hashCentroids, so the pipeline stays RNG-free. Per round:
+  // one projection pass (cells from the broadcast matrix) and a
+  // partial-aggregated shuffle keyed (cell, dim) landing C×d rows on the
+  // driver — state bounded by the model, never the corpus. Oracle-exact:
+  // per-dim sums in fixed point (floor(x·1e7 + 0.5) as BIGINT, so sum
+  // order cannot matter), the mean back to double as two IEEE divisions,
+  // assignment ties to the lowest cid, and empty cells keep their
+  // previous centroid — the same LEFT JOIN + coalesce on both engines.
+
+  /** Unit-normalize in index-order IEEE arithmetic (the oracle's fold).
+    * Zero-norm rows pass through unchanged — the keep-previous rule. */
   private def unitRow(row: Array[Double]): Array[Double] = {
     var s = 0.0
     var d = 0
@@ -925,23 +450,16 @@ object Similarity {
   }
 
   /** Train C centroids with `iters` Lloyd rounds; returns the fitted
-    * matrix (feed it to [[writeIvfIndexAt]] for a trained IVF index).
-    * SPHERICAL k-means: every centroid — seed included — is kept at unit
-    * norm, so argmax-dot assignment IS argmax-cosine and the normalized
-    * within-cell mean is the exact per-cell optimum (Cauchy-Schwarz) —
-    * Lloyd's monotone-ascent guarantee holds, which KmeansSpec pins
-    * empirically. Without the normalization, raw means of near-orthogonal
-    * unit vectors shrink toward 0 and high-norm centroids capture
-    * everything — the first KmeansSpec run measured the objective
-    * DROPPING 0.51 → 0.10 exactly that way. */
+    * matrix and each cell's fixed-point component sum of the last round.
+    * Every centroid is kept at unit norm, so argmax-dot IS argmax-cosine
+    * and the normalized cell mean is the per-cell optimum — Lloyd's
+    * monotone ascent holds (KmeansSpec pins it). Unnormalized means of
+    * near-orthogonal unit vectors shrink toward 0 and let high-norm
+    * centroids capture everything. Past `sampleCap` vectors the model is
+    * fitted on a deterministic hash sample (FAISS/MLlib practice). */
   def trainCentroids(spark: SparkSession, dir: String, c: Int = 16,
       iters: Int = 2, sampleCap: Long = Long.MaxValue): (Array[Array[Double]], Array[Long]) = {
     emb(spark, dir)
-    // Standard big-corpus practice (FAISS/MLlib): fit the model on a
-    // deterministic hash-sample of ~256 vectors per centroid — centroid
-    // quality saturates there, and the training passes stop scaling with
-    // the corpus. The census config trains un-sampled (cap ≥ corpus), so
-    // the DuckDB oracle never sees the sampling predicate.
     val n = spark.sql("SELECT count(*) FROM embeddings").head().getLong(0)
     val where =
       if (n <= sampleCap) ""
@@ -1011,16 +529,11 @@ object Similarity {
   }
 
   // DuckDB replay: aN = assignment round, uN = fixed-point update, cN =
-  // fitted centroids after round N. Same fold order, same tie-break, same
-  // fixed-point arithmetic as the Spark path above.
+  // fitted centroids after round N.
   private def kmAssignDuck(centRel: String, out: String): String =
     s"""$out AS (
-       |  SELECT vec_id, v, cid AS cell FROM (
-       |    SELECT e.vec_id, e.v, c.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("e.v", "c.cv")} DESC, c.cid) AS rn
-       |    FROM e CROSS JOIN $centRel c) t
-       |  WHERE rn = 1)""".stripMargin
+       |  ${Ivf.ranked("vec_id, v, cid AS cell", "e.vec_id, e.v, c.cid", "e.vec_id",
+      s"${dotDuck("e.v", "c.cv")} DESC, c.cid", s"e CROSS JOIN $centRel c", "rn", "= 1")})""".stripMargin
 
   private def kmUpdateDuck(assignRel: String, out: String): String =
     s"""$out AS (
@@ -1030,21 +543,22 @@ object Similarity {
        |  FROM $assignRel CROSS JOIN range(0, 64) t(d)
        |  GROUP BY cell, d)""".stripMargin
 
-  // normalized mean, drop-to-previous on untouched or zero-norm cells —
-  // the same rule as the Scala path, expressed as LEFT JOIN + CASE
+  // normalized mean, keep-previous on untouched or zero-norm cells
   private def kmNextDuck(prevCent: String, updRel: String, out: String): String =
     s"""$out AS (
        |  SELECT p.cid,
        |    CASE WHEN u.n2 IS NULL OR u.n2 <= 0 THEN p.cv
        |         ELSE list_transform(u.cv2, x -> x / sqrt(u.n2)) END AS cv
        |  FROM $prevCent p LEFT JOIN (
-       |    SELECT cid, cv2, ${Dedup.dotDuckSql("cv2", "cv2")} AS n2 FROM (
+       |    SELECT cid, cv2, ${dotDuck("cv2", "cv2")} AS n2 FROM (
        |      SELECT cell AS cid,
        |        list((CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / 10000000.0 ORDER BY d) AS cv2
        |      FROM $updRel GROUP BY cell) t0) u USING (cid))""".stripMargin
 
-  private val kmeansOracle =
-    s"""WITH e AS (
+  /** The two Lloyd rounds of `kmeansTrain(c = 16, iters = 2)`: fitted
+    * centroids `c2`, last update `u2`, final assignment `a3`. */
+  private val kmChainDuck =
+    s"""e AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings
        |),
@@ -1052,7 +566,7 @@ object Similarity {
        |cseed AS (
        |  SELECT cid, CASE WHEN n2 <= 0 THEN cv
        |    ELSE list_transform(cv, x -> x / sqrt(n2)) END AS cv
-       |  FROM (SELECT cid, cv, ${Dedup.dotDuckSql("cv", "cv")} AS n2 FROM craw) t0
+       |  FROM (SELECT cid, cv, ${dotDuck("cv", "cv")} AS n2 FROM craw) t0
        |),
        |${kmAssignDuck("cseed", "a1")},
        |${kmUpdateDuck("a1", "u1")},
@@ -1060,7 +574,10 @@ object Similarity {
        |${kmAssignDuck("c1", "a2")},
        |${kmUpdateDuck("a2", "u2")},
        |${kmNextDuck("c1", "u2", "c2")},
-       |${kmAssignDuck("c2", "a3")}
+       |${kmAssignDuck("c2", "a3")}""".stripMargin
+
+  private val kmeansOracle =
+    s"""WITH $kmChainDuck
        |SELECT CAST(c2.cid AS INT) AS cid,
        |  CAST(coalesce(k.cnt, 0) AS BIGINT) AS cnt,
        |  CAST(c2.cv[1] AS DOUBLE) AS c0,
@@ -1075,94 +592,38 @@ object Similarity {
   val kmeans: QueryDef =
     QueryDef.sqlBacked("ann_kmeans_train", kmeansOracle)(kmeansTrain(_, _))
 
-  // --- trained-IVF serving, end to end (VERDICT r11 #4) --------------------
-  // Training (ann_kmeans_train) and hash-model serving (ann_ivf_topk /
-  // ann_ivf_indexed) were each oracle-green, but the composition a
-  // production deployment actually runs — train on the corpus, WRITE the
-  // fitted cell-partitioned index, probe the stored index with the
-  // fitted model — was only spec-pinned. This key runs that exact
-  // composition: trainCentroids (C=16, 2 rounds — the bit-exact
-  // replayable config) → writeIvfIndexAt (cell assignment through the
-  // broadcast argmax kernel, cell = partition dir) → probeIvfIndexWith
-  // (DPP-pruned scan of the probed cells only). The oracle replays the
-  // identical two Lloyd rounds relationally (the ann_kmeans_train chain)
-  // and then the probed search under the fitted centroids — so a single
-  // hash compare covers fitted-model equality across all 64 components
-  // (any divergence reorders a top-k somewhere), the write/read
-  // roundtrip, and the probe arithmetic.
+  /** Trained IVF serving end to end: train (C=16, 2 rounds), write the
+    * fitted cell-partitioned index, probe it with the fitted model. The
+    * oracle replays both Lloyd rounds and then the probe, so one hash
+    * compare covers the fitted model, the write/read roundtrip and the
+    * probe arithmetic. */
   def ivfTrainedTopK(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4): DataFrame = {
     val (fit, _) = trainCentroids(spark, dir, c = 16, iters = 2)
-    emb(spark, dir)
-    val idx = Engine.scratchDir("graft_ivf_trained_") + "/index"
-    writeIvfIndexAt(spark.sql(
-      """SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |FROM embeddings""".stripMargin), idx, fit)
-    probeIvfIndexWith(spark, dir, idx, fit, nQueries, k, nProbe)
+    Ivf.indexed(spark, dir, Ivf.Probe(Ivf.Fitted(fit), nQueries = nQueries, k = k, nProbe = nProbe))
   }
 
   private val ivfTrainedOracle =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |craw AS (${centroidDuckAt(16)}),
-       |cseed AS (
-       |  SELECT cid, CASE WHEN n2 <= 0 THEN cv
-       |    ELSE list_transform(cv, x -> x / sqrt(n2)) END AS cv
-       |  FROM (SELECT cid, cv, ${Dedup.dotDuckSql("cv", "cv")} AS n2 FROM craw) t0
-       |),
-       |${kmAssignDuck("cseed", "a1")},
-       |${kmUpdateDuck("a1", "u1")},
-       |${kmNextDuck("cseed", "u1", "c1")},
-       |${kmAssignDuck("c1", "a2")},
-       |${kmUpdateDuck("a2", "u2")},
-       |${kmNextDuck("c1", "u2", "c2")},
-       |${kmAssignDuck("c2", "a3")},
+    s"""WITH $kmChainDuck,
        |corpus AS (
        |  SELECT vec_id AS cand_id, v AS cv, cell FROM a3
        |),
        |queries AS (
        |  SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8
        |),
-       |probes AS (
-       |  SELECT query_id, qv, cid AS cell FROM (
-       |    SELECT q.query_id, q.qv, c.cid,
-       |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |        ${Dedup.dotDuckSql("q.qv", "c.cv")} DESC, c.cid) AS pr
-       |    FROM queries q CROSS JOIN c2 c) t
-       |  WHERE pr <= 4
-       |)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT p.query_id, c.cand_id,
-       |    ${Dedup.dotDuckSql("p.qv", "c.cv")} AS score,
-       |    row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |      ${Dedup.dotDuckSql("p.qv", "c.cv")} DESC, c.cand_id) AS rnk
-       |  FROM probes p JOIN corpus c ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.flat(4, cent = "c2 c")}""".stripMargin
 
   val ivfTrained: QueryDef =
     QueryDef.sqlBacked("ann_ivf_trained", ivfTrainedOracle)(ivfTrainedTopK(_, _))
 
   // --- hybrid retrieval: lexical ⊕ vector via reciprocal-rank fusion ------
-  // The production RAG retrieval shape (Cormack/Clarke/Buettcher RRF,
-  // the default fusion in Elasticsearch/OpenSearch/Vespa): run a lexical
-  // arm and a vector arm independently, fuse by Σ 1/(60 + rank) — rank
-  // fusion needs no score calibration between arms, which is why it won.
-  // Lexical arm: shared-distinct-token count against the corpus token
-  // inverted index (the ta_vocab pass); the query side is a handful of
-  // rows, so the candidate join is "broadcast 8 token lists against the
-  // posting relation" — one corpus-scale explode + a partial-agg shuffle
-  // carrying (query, cand, count) triples, never documents. Vector arm:
-  // the oracle-pinned IVF probe, reused verbatim. Fusion is a
-  // FULL OUTER JOIN of two ≤ k·|queries|-row relations — size-independent
-  // of the corpus. 1/(60+r) on both engines is one IEEE division of the
-  // same ints, so fused scores hash-match bit for bit. A doc missing
-  // from one arm contributes 0 from it (standard RRF). At thousands of
-  // concurrent queries the lexical join wants a df-capped token filter
-  // (drop stopword postings); at the census scale the full index is
-  // exact and cheap.
+  // The RAG retrieval shape (Cormack/Clarke/Buettcher RRF): a lexical arm
+  // and a vector arm ranked independently, fused by Σ 1/(60 + rank) — no
+  // score calibration between arms. Lexical arm: shared-distinct-token
+  // count against the corpus tokens, the query side broadcast; vector
+  // arm: the ann_ivf_topk probe. Fusion is a FULL OUTER JOIN of two
+  // k·|queries|-row relations; 1/(60+r) is one IEEE division of the same
+  // ints on both engines. A doc missing from one arm contributes 0 there.
   def hybridRrf(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10): DataFrame = {
     Engine.table(spark, dir, "documents").createOrReplaceTempView("documents")
@@ -1230,458 +691,121 @@ object Similarity {
   val hybrid: QueryDef =
     QueryDef.sqlBacked("ann_hybrid_rrf", hybridOracle)(hybridRrf(_, _))
 
-  // --- IVF-SQ8: int8-quantized scoring + exact re-rank ---------------------
-  // The FAISS-default memory path (IndexIVFScalarQuantizer): inside each
-  // probed cell, candidates score with the INT8 codes (4× less memory
-  // bandwidth than float32 — at 100 TB the quantized corpus is what fits
-  // in cluster page cache), then only the top `rerank` survivors fetch
-  // their float vectors for the exact re-scoring that orders the final
-  // top-k. Quantization is emb_quantize's exact convention (q =
-  // floor(x·127/maxabs + 0.5) clamped, scale = maxabs/127). Everything
-  // the approximate stage computes is INTEGER arithmetic (Σ q_a·q_b in
-  // BIGINT — order-independent) scaled by two IEEE multiplies, so the
-  // DuckDB oracle replays approximate ranks, survivor set, and final
-  // scores bit for bit. The re-rank join is `rerank·|queries|` rows —
-  // corpus-size-independent.
-  //
-  // Domain note (ADVICE r11): the qz stage's `WHERE maxabs > 0` excludes
-  // all-zero vectors from BOTH the query set and the candidate corpus —
-  // symmetric quantization is undefined at maxabs = 0 (scale = 0/127,
-  // q = x·127/0). This is a deliberate declared contract, replayed
-  // identically by the oracle: a zero vector has cosine 0 against
-  // everything, so it can neither rank nor be meaningfully ranked, and
-  // the wide-embedding ingestion contract (requireDims64 + L2-norm)
-  // keeps such vectors out of real corpora anyway. ivfTopK, which never
-  // divides by a norm, keeps them — the documented domain divergence.
+  // --- IVF-SQ8: int8-coded scoring + exact re-rank ---------------------------
+  // The FAISS IndexIVFScalarQuantizer shape: candidates in the probed
+  // cells score with int8 codes (Σ q_a·q_b in BIGINT, times two scales),
+  // and only the top `rerank` survivors are re-ranked by exact float dot.
+  // Quantization is emb_quantize's convention. All-zero vectors are out of
+  // both the query set and the corpus (their scale is 0), on both
+  // engines; ivfTopK keeps them. The stored index persists the codes, the
+  // scale and the JL projection once; its probe's scoring scan reads
+  // (cand_id, cscale, cq) only (AnnIndexSpec pins the pruned schema and
+  // the DPP), and the survivors fetch their floats back by cand_id.
   def ivfSq8TopK(spark: SparkSession, dir: String, nQueries: Int = 8,
-      k: Int = 10, nProbe: Int = 4, rerank: Int = 50): DataFrame = {
-    emb(spark, dir)
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |e AS (
-         |  SELECT vec_id, v, array_max(transform(v, x -> abs(x))) AS maxabs
-         |  FROM (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |        FROM embeddings)
-         |),
-         |qz AS (
-         |  SELECT vec_id, v, maxabs / 127.0 AS scale,
-         |    transform(v, x -> greatest(CAST(-127 AS BIGINT),
-         |      least(CAST(127 AS BIGINT),
-         |        CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)))) AS q8
-         |  FROM e WHERE maxabs > 0
-         |),
-         |corpus AS (
-         |  SELECT vec_id AS cand_id, v AS cv, scale AS cscale, q8 AS cq,
-         |    argmax_dot(v, $centroidMatrixSql) AS cell
-         |  FROM qz
-         |),
-         |queries AS (
-         |  SELECT vec_id AS query_id, v AS qv, scale AS qscale, q8 AS qq
-         |  FROM qz WHERE vec_id < $nQueries
-         |),
-         |probes AS (
-         |  SELECT query_id, qv, qscale, qq, cid AS cell FROM (
-         |    SELECT q.query_id, q.qv, q.qscale, q.qq, cent.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, cent.cv) DESC, cent.cid) AS pr
-         |    FROM queries q CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe
-         |),
-         |approx AS (
-         |  SELECT query_id, cand_id, qv, cv,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY ascore DESC, cand_id) AS arnk
-         |  FROM (
-         |    SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id, p.qv, c.cv,
-         |      CAST(aggregate(zip_with(p.qq, c.cq, (x, y) -> x * y),
-         |        0L, (acc, pr) -> acc + pr) AS DOUBLE) * p.qscale * c.cscale AS ascore
-         |    FROM probes p JOIN corpus c
-         |      ON p.cell = c.cell AND p.query_id <> c.cand_id) raw
-         |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT query_id, cand_id, dot_product(qv, cv) AS score,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY
-         |      dot_product(qv, cv) DESC, cand_id) AS rnk
-         |  FROM approx WHERE arnk <= $rerank) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      k: Int = 10, nProbe: Int = 4, rerank: Int = 50): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(codec = Ivf.Sq8, nQueries = nQueries, k = k,
+      nProbe = nProbe, rerank = rerank))
 
-  /** The SQ8 probe oracle over an arbitrary corpus source — `src` is any
-    * DuckDB relation with (vec_id, embedding). The retractable-index keys
-    * (`ivm_ann`/`ivm_ann_stream`, [[graft.queries.Ivm.annRetract]])
-    * recompute the probe from scratch over the EDITED corpus with this
-    * same text; the plain keys use the full table.
-    *
-    * Constraint on edited sources (ADVICE r13): this oracle draws its
-    * query set (`vec_id < 8`) from `src` — the edited corpus — while the
-    * engine's [[probeSq8View]] draws queries from the FULL embeddings
-    * table. They agree exactly when every query id survives the edit, so
-    * any edit slice passed here MUST keep vec_ids 0–7 alive (the
-    * % 13 / % 26 scenario does: 0 is retracted but re-added, 1–7 are
-    * untouched). A slice retracting a query id without re-adding it
-    * would silently drop that query from the oracle only — declare the
-    * survival property at the slice definition, as Ivm's keys do. */
+  /** The SQ8 probe oracle over any DuckDB relation `src` with (vec_id,
+    * embedding); the retractable-index keys (`ivm_ann`, `ivm_ann_stream`)
+    * pass the edited corpus. Its query set (`vec_id < 8`) comes from
+    * `src` while the engine's probe draws queries from the full table, so
+    * an edit passed here MUST keep vec_ids 0–7 alive. */
   private[graft] def ivfSq8OracleOver(src: String): String =
     s"""WITH cent AS ($centroidDuck),
-       |e AS (
-       |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS maxabs
-       |  FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |        FROM $src)
-       |),
-       |qz AS (
-       |  SELECT vec_id, v, maxabs / 127.0 AS scale,
-       |    list_transform(v, x -> greatest(CAST(-127 AS BIGINT),
-       |      least(CAST(127 AS BIGINT),
-       |        CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)))) AS q8
-       |  FROM e WHERE maxabs > 0
-       |),
-       |assign AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT qz.vec_id, cent.cid,
-       |      row_number() OVER (PARTITION BY qz.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("qz.v", "cent.cv")} DESC, cent.cid) AS rn
-       |    FROM qz CROSS JOIN cent) t
-       |  WHERE rn = 1
-       |),
-       |corpus AS (
-       |  SELECT qz.vec_id AS cand_id, qz.v AS cv, qz.scale AS cscale,
-       |    qz.q8 AS cq, a.cell
-       |  FROM qz JOIN assign a ON qz.vec_id = a.vec_id
-       |),
+       |${Ivf.Duck.sq8(src)},
        |queries AS (
        |  SELECT vec_id AS query_id, v AS qv, scale AS qscale, q8 AS qq
        |  FROM qz WHERE vec_id < 8
        |),
        |probes AS (
-       |  SELECT query_id, qv, qscale, qq, cid AS cell FROM (
-       |    SELECT q.query_id, q.qv, q.qscale, q.qq, cent.cid,
-       |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |        ${Dedup.dotDuckSql("q.qv", "cent.cv")} DESC, cent.cid) AS pr
-       |    FROM queries q CROSS JOIN cent) t
-       |  WHERE pr <= 4
+       |  ${Ivf.Duck.probes(Seq("q.query_id", "q.qv", "q.qscale", "q.qq"), "q.query_id", "q.qv", "queries q", 4)}
        |),
        |approx AS (
-       |  SELECT query_id, cand_id, qv, cv,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY ascore DESC, cand_id) AS arnk
+       |  ${Ivf.rank("query_id, cand_id, qv, cv", "query_id", "ascore DESC, cand_id", "arnk")}
        |  FROM (
        |    SELECT p.query_id, c.cand_id, p.qv, c.cv,
-       |      CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |        list_transform(range(1, len(p.qq) + 1), i -> p.qq[i] * c.cq[i])),
-       |        (x, y) -> x + y) AS DOUBLE) * p.qscale * c.cscale AS ascore
+       |      ${Ivf.Duck.sq8Dot("p.qq", "c.cq")} * p.qscale * c.cscale AS ascore
        |    FROM probes p JOIN corpus c
        |      ON p.cell = c.cell AND p.query_id <> c.cand_id) raw
        |)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT query_id, cand_id, ${Dedup.dotDuckSql("qv", "cv")} AS score,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY
-       |      ${Dedup.dotDuckSql("qv", "cv")} DESC, cand_id) AS rnk
-       |  FROM approx WHERE arnk <= 50) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.topK("query_id", "cand_id", dotDuck("qv", "cv"), "approx WHERE arnk <= 50")}""".stripMargin
 
   private val ivfSq8Oracle = ivfSq8OracleOver("embeddings")
 
   val ivfSq8: QueryDef =
     QueryDef.sqlBacked("ann_ivf_sq8", ivfSq8Oracle)(ivfSq8TopK(_, _))
 
-  // --- IVF-SQ8 with STORED codes (VERDICT r11 #5) --------------------------
-  // ann_ivf_sq8 quantizes the corpus inside the query — fine for the
-  // arithmetic gate, but it forfeits the FAISS memory argument its own
-  // comment makes: the production shape stores the int8 codes + scale in
-  // the cell-partitioned index ONCE and scores every probe from them.
-  // This pair is that shape. The index persists
-  // (cand_id, cv, cscale, cq TINYINT[], cell) partitioned by cell;
-  // a probe's approximate stage reads ONLY (cand_id, cscale, cq, cell) —
-  // parquet column pruning keeps the float vectors out of the scan, so
-  // the bytes-per-candidate drops ~4× (the I/O win measured by the
-  // ann_sq8_probe bench cell) — and only the `rerank` survivors per
-  // query fetch their float vectors back by cand_id for the exact
-  // re-rank. Quantization is deterministic, so stored codes ≡ in-flight
-  // codes and the key shares ann_ivf_sq8's oracle verbatim; KmeansSpec
-  // pins stored-probe == in-flight row for row, AnnIndexSpec pins the
-  // DPP + pruned-schema plan shape.
   def writeIvfSq8Index(spark: SparkSession, dir: String, indexPath: String,
-      mode: String = "overwrite", slice: String = "TRUE"): Unit = {
-    emb(spark, dir)
-    // `pv` (the 16-d JL projection, VERDICT r12 #6) rides in the same
-    // index: parquet column pruning keeps it out of the plain SQ8 probe's
-    // scan, and [[probeRprojSq8Index]]'s first stage reads ONLY
-    // (cand_id, pv) within its probed cells — one index write serves
-    // both probe strategies.
-    spark.sql(
-      s"""SELECT vec_id AS cand_id, v AS cv, maxabs / 127.0 AS cscale,
-         |  transform(v, x -> CAST(greatest(CAST(-127 AS BIGINT),
-         |    least(CAST(127 AS BIGINT),
-         |      CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT))) AS TINYINT)) AS cq,
-         |  rproj_i64(v, $rprojSignsSql) AS pv,
-         |  argmax_dot(v, $centroidMatrixSql) AS cell
-         |FROM (
-         |  SELECT vec_id, v, array_max(transform(v, x -> abs(x))) AS maxabs
-         |  FROM (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |        FROM embeddings WHERE $slice))
-         |WHERE maxabs > 0""".stripMargin)
-      .write.mode(mode).partitionBy("cell").parquet(indexPath)
-  }
+      mode: String = "overwrite", slice: String = "TRUE"): Unit =
+    Ivf.write(spark, dir, Ivf.Sq8, indexPath, mode, slice)
 
-  /** Probe a stored-code index: queries quantize in-flight (they are
-    * nQueries rows), candidates score from the STORED codes, survivors
-    * re-rank from the stored float column. Identical results to
-    * [[ivfSq8TopK]] by construction. */
   def probeIvfSq8Index(spark: SparkSession, dir: String, indexPath: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      rerank: Int = 50): DataFrame = {
-    StoredParquet.read(spark, indexPath).createOrReplaceTempView("sq8_index")
-    probeSq8View(spark, dir, nQueries, k, nProbe, rerank)
-  }
+      rerank: Int = 50): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(codec = Ivf.Sq8, index = stored(spark, indexPath),
+      nQueries = nQueries, k = k, nProbe = nProbe, rerank = rerank))
 
-  /** The SQ8 probe against whatever relation is registered as
-    * `sq8_index` — [[probeIvfSq8Index]] registers one stored segment;
-    * the retractable composition ([[graft.queries.Ivm.annRetract]])
-    * registers (base ∖ tombstones) ∪ delta. Queries quantize in-flight
-    * from the corpus table (they are `nQueries` rows); candidates score
-    * from the registered index's stored codes. */
-  def probeSq8View(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      rerank: Int = 50): DataFrame = {
-    emb(spark, dir)
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |qz AS (
-         |  SELECT vec_id, v, maxabs / 127.0 AS scale,
-         |    transform(v, x -> greatest(CAST(-127 AS BIGINT),
-         |      least(CAST(127 AS BIGINT),
-         |        CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)))) AS q8
-         |  FROM (
-         |    SELECT vec_id, v, array_max(transform(v, x -> abs(x))) AS maxabs
-         |    FROM (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |          FROM embeddings WHERE vec_id < $nQueries))
-         |  WHERE maxabs > 0
-         |),
-         |probes AS (
-         |  SELECT query_id, qscale, qq, cid AS cell FROM (
-         |    SELECT q.vec_id AS query_id, q.scale AS qscale, q.q8 AS qq, cent.cid,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        dot_product(q.v, cent.cv) DESC, cent.cid) AS pr
-         |    FROM qz q CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe
-         |),
-         |approx AS (
-         |  SELECT query_id, cand_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY ascore DESC, cand_id) AS arnk
-         |  FROM (
-         |    SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id,
-         |      CAST(aggregate(zip_with(p.qq, c.cq, (x, y) -> x * CAST(y AS BIGINT)),
-         |        0L, (acc, pr) -> acc + pr) AS DOUBLE) * p.qscale * c.cscale AS ascore
-         |    FROM probes p JOIN sq8_index c
-         |      ON p.cell = c.cell AND p.query_id <> c.cand_id) raw
-         |),
-         |surv AS (SELECT query_id, cand_id FROM approx WHERE arnk <= $rerank)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(s) */ s.query_id, s.cand_id,
-         |    dot_product(q.v, f.cv) AS score,
-         |    row_number() OVER (PARTITION BY s.query_id ORDER BY
-         |      dot_product(q.v, f.cv) DESC, s.cand_id) AS rnk
-         |  FROM surv s
-         |  JOIN qz q ON s.query_id = q.vec_id
-         |  JOIN sq8_index f ON s.cand_id = f.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
-
-  /** Self-contained census composition: write the stored-code index to a
-    * session scratch path, probe it. Same oracle as ann_ivf_sq8 — the
-    * storage layout is invisible in the result. */
   def ivfSq8IndexedTopK(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      rerank: Int = 50): DataFrame = {
-    val idx = Engine.scratchDir("graft_sq8_idx_") + "/index"
-    writeIvfSq8Index(spark, dir, idx)
-    probeIvfSq8Index(spark, dir, idx, nQueries, k, nProbe, rerank)
-  }
+      rerank: Int = 50): DataFrame =
+    Ivf.indexed(spark, dir, Ivf.Probe(codec = Ivf.Sq8, nQueries = nQueries, k = k,
+      nProbe = nProbe, rerank = rerank))
 
   val ivfSq8Indexed: QueryDef =
     QueryDef.sqlBacked("ann_ivf_sq8_idx", ivfSq8Oracle)(ivfSq8IndexedTopK(_, _))
 
-  // --- JL ∘ SQ8: the composed two-stage index probe (VERDICT r12 #6) ------
-  // The 16-d projected scan in front of the stored-SQ8 cell probe, done
-  // literally instead of as two parallel demonstrations. Within the
-  // probed cells, stage 1 ranks candidates by the INTEGER projected dot
-  // (the scan touches only the cand_id + pv columns — the per-candidate
-  // arithmetic drops from 64 int8 MACs + two float scales to 16 long
-  // MACs, and the float and code columns never enter the scan); only the
-  // `shortlist` survivors per query fetch their stored int8 codes for
-  // SQ8 scoring (stage 2, broadcast join — rerank-bounded work); only
-  // the top `rerank` of THOSE fetch float vectors for the exact re-rank
-  // (stage 3). Every stage is deterministic (integer stage-1 scores,
-  // single-IEEE-multiply stage-2 scores, pinned-fold stage-3 dots, all
-  // tie-broken on cand_id), so the full three-stage pipeline is
-  // hash-replayable in DuckDB.
+  // --- JL ∘ SQ8: the three-stage probe of a stored SQ8 index -----------------
+  // Within the probed cells, stage 1 ranks candidates by the INTEGER 16-d
+  // projected dot, reading only (cand_id, pv); the `shortlist` survivors
+  // per query fetch their int8 codes for SQ8 scoring; the top `rerank` of
+  // those fetch float vectors for the exact re-rank. Every stage is
+  // deterministic and tie-broken on cand_id, so DuckDB replays all three.
   def probeRprojSq8Index(spark: SparkSession, dir: String, indexPath: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      shortlist: Int = 200, rerank: Int = 50): DataFrame = {
-    emb(spark, dir)
-    StoredParquet.read(spark, indexPath).createOrReplaceTempView("sq8_index")
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |qz AS (
-         |  SELECT vec_id, v, maxabs / 127.0 AS scale,
-         |    transform(v, x -> greatest(CAST(-127 AS BIGINT),
-         |      least(CAST(127 AS BIGINT),
-         |        CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)))) AS q8,
-         |    rproj_i64(v, $rprojSignsSql) AS qpv
-         |  FROM (
-         |    SELECT vec_id, v, array_max(transform(v, x -> abs(x))) AS maxabs
-         |    FROM (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |          FROM embeddings WHERE vec_id < $nQueries))
-         |  WHERE maxabs > 0
-         |),
-         |probes AS (
-         |  SELECT query_id, qpv, cid AS cell FROM (
-         |    SELECT q.vec_id AS query_id, q.qpv, cent.cid,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        dot_product(q.v, cent.cv) DESC, cent.cid) AS pr
-         |    FROM qz q CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe
-         |),
-         |s1 AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY dot_i64(p.qpv, c.pv) DESC, c.cand_id) AS rn
-         |    FROM probes p JOIN sq8_index c
-         |      ON p.cell = c.cell AND p.query_id <> c.cand_id) t
-         |  WHERE rn <= $shortlist
-         |),
-         |s2 AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT query_id, cand_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ascore DESC, cand_id) AS arnk
-         |    FROM (
-         |      SELECT /*+ BROADCAST(sl) */ sl.query_id, sl.cand_id,
-         |        CAST(aggregate(zip_with(q.q8, c.cq, (x, y) -> x * CAST(y AS BIGINT)),
-         |          0L, (acc, pr) -> acc + pr) AS DOUBLE) * q.scale * c.cscale AS ascore
-         |      FROM s1 sl JOIN qz q ON sl.query_id = q.vec_id
-         |                 JOIN sq8_index c ON sl.cand_id = c.cand_id) raw) t
-         |  WHERE arnk <= $rerank
-         |)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(s) */ s.query_id, s.cand_id,
-         |    dot_product(q.v, f.cv) AS score,
-         |    row_number() OVER (PARTITION BY s.query_id ORDER BY
-         |      dot_product(q.v, f.cv) DESC, s.cand_id) AS rnk
-         |  FROM s2 s
-         |  JOIN qz q ON s.query_id = q.vec_id
-         |  JOIN sq8_index f ON s.cand_id = f.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      shortlist: Int = 200, rerank: Int = 50): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(codec = Ivf.RprojSq8(shortlist), index = stored(spark, indexPath),
+      nQueries = nQueries, k = k, nProbe = nProbe, rerank = rerank))
 
-  /** Self-contained census composition: one index write, the composed
-    * JL→SQ8→float probe. */
   def rprojSq8TopK(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      shortlist: Int = 200, rerank: Int = 50): DataFrame = {
-    val idx = Engine.scratchDir("graft_rproj_sq8_") + "/index"
-    writeIvfSq8Index(spark, dir, idx)
-    probeRprojSq8Index(spark, dir, idx, nQueries, k, nProbe, shortlist, rerank)
-  }
+      shortlist: Int = 200, rerank: Int = 50): DataFrame =
+    Ivf.indexed(spark, dir, Ivf.Probe(codec = Ivf.RprojSq8(shortlist), nQueries = nQueries,
+      k = k, nProbe = nProbe, rerank = rerank))
 
   private val rprojSq8Oracle =
     s"""WITH cent AS ($centroidDuck),
-       |e AS (
-       |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS maxabs
-       |  FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |        FROM embeddings)
-       |),
-       |qz AS (
-       |  SELECT vec_id, v, maxabs / 127.0 AS scale,
-       |    list_transform(v, x -> greatest(CAST(-127 AS BIGINT),
-       |      least(CAST(127 AS BIGINT),
-       |        CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)))) AS q8
-       |  FROM e WHERE maxabs > 0
-       |),
-       |qq AS (
-       |  SELECT vec_id, j, CAST(floor(v[j + 1] * 1048576.0 + 0.5) AS BIGINT) AS qv
-       |  FROM qz CROSS JOIN range(0, 64) t(j)),
-       |sgn AS (${rprojSignsDuck()}),
-       |prj AS (
-       |  SELECT vec_id, k, CAST(sum(sgn * qv) AS BIGINT) AS p
-       |  FROM qq JOIN sgn ON qq.j = sgn.j
-       |  GROUP BY vec_id, k),
-       |assign AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT qz.vec_id, cent.cid,
-       |      row_number() OVER (PARTITION BY qz.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("qz.v", "cent.cv")} DESC, cent.cid) AS rn
-       |    FROM qz CROSS JOIN cent) t
-       |  WHERE rn = 1
-       |),
-       |corpus AS (
-       |  SELECT qz.vec_id AS cand_id, qz.v AS cv, qz.scale AS cscale,
-       |    qz.q8 AS cq, a.cell
-       |  FROM qz JOIN assign a ON qz.vec_id = a.vec_id
-       |),
+       |${Ivf.Duck.sq8("embeddings", rprojDuck("qz", "qq", "sgn", "prj") + ",\n")},
        |probes AS (
-       |  SELECT query_id, cid AS cell FROM (
-       |    SELECT q.vec_id AS query_id, cent.cid,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("q.v", "cent.cv")} DESC, cent.cid) AS pr
-       |    FROM (SELECT * FROM qz WHERE vec_id < 8) q CROSS JOIN cent) t
-       |  WHERE pr <= 4
+       |  ${Ivf.Duck.probes(Seq("q.vec_id AS query_id"), "q.vec_id", "q.v", "(SELECT * FROM qz WHERE vec_id < 8) q", 4)}
        |),
        |s1 AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT query_id, cand_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY iscore DESC, cand_id) AS rn
-       |    FROM (
-       |      SELECT pb.query_id, c.cand_id, CAST(sum(qp.p * cp.p) AS BIGINT) AS iscore
-       |      FROM probes pb
-       |      JOIN corpus c ON pb.cell = c.cell AND pb.query_id <> c.cand_id
-       |      JOIN prj qp ON qp.vec_id = pb.query_id
-       |      JOIN prj cp ON cp.vec_id = c.cand_id AND cp.k = qp.k
-       |      GROUP BY pb.query_id, c.cand_id) g) t
-       |  WHERE rn <= 200
+       |  ${Ivf.ranked("query_id, cand_id", "query_id, cand_id", "query_id", "iscore DESC, cand_id",
+      """(
+        |      SELECT pb.query_id, c.cand_id, CAST(sum(qp.p * cp.p) AS BIGINT) AS iscore
+        |      FROM probes pb
+        |      JOIN corpus c ON pb.cell = c.cell AND pb.query_id <> c.cand_id
+        |      JOIN prj qp ON qp.vec_id = pb.query_id
+        |      JOIN prj cp ON cp.vec_id = c.cand_id AND cp.k = qp.k
+        |      GROUP BY pb.query_id, c.cand_id) g""".stripMargin, "rn", "<= 200")}
        |),
        |s2 AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT query_id, cand_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY ascore DESC, cand_id) AS arnk
-       |    FROM (
-       |      SELECT sl.query_id, sl.cand_id,
-       |        CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |          list_transform(range(1, len(q.q8) + 1), i -> q.q8[i] * c.cq[i])),
-       |          (x, y) -> x + y) AS DOUBLE) * q.scale * c.cscale AS ascore
-       |      FROM s1 sl JOIN qz q ON sl.query_id = q.vec_id
-       |                 JOIN corpus c ON sl.cand_id = c.cand_id) raw) t
-       |  WHERE arnk <= 50
+       |  ${Ivf.ranked("query_id, cand_id", "query_id, cand_id", "query_id", "ascore DESC, cand_id",
+      s"""(
+         |      SELECT sl.query_id, sl.cand_id,
+         |        ${Ivf.Duck.sq8Dot("q.q8", "c.cq")} * q.scale * c.cscale AS ascore
+         |      FROM s1 sl JOIN qz q ON sl.query_id = q.vec_id
+         |                 JOIN corpus c ON sl.cand_id = c.cand_id) raw""".stripMargin, "arnk", "<= 50")}
        |)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT s.query_id, s.cand_id,
-       |    ${Dedup.dotDuckSql("q.v", "f.cv")} AS score,
-       |    row_number() OVER (PARTITION BY s.query_id ORDER BY
-       |      ${Dedup.dotDuckSql("q.v", "f.cv")} DESC, s.cand_id) AS rnk
-       |  FROM s2 s
-       |  JOIN qz q ON s.query_id = q.vec_id
-       |  JOIN corpus f ON s.cand_id = f.cand_id) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.topK("s.query_id", "s.cand_id", dotDuck("q.v", "f.cv"),
+      "s2 s\n  JOIN qz q ON s.query_id = q.vec_id\n  JOIN corpus f ON s.cand_id = f.cand_id")}""".stripMargin
 
   val rprojSq8: QueryDef =
     QueryDef.sqlBacked("ann_rproj_sq8", rprojSq8Oracle)(rprojSq8TopK(_, _))
 
-  /** Bench-only corpus-sized-C training (same √N rule as semanticDedup's
-    * [[semanticC]]): C is a MODEL-SIZE knob — cost is O(N·C·d) per round
-    * through the broadcast projection, so the honest big-tier number
-    * trains the C a production IVF would actually use, not the gate
-    * tier's 16 (the fixed-knob-at-every-scale pattern VERDICT r10 flagged
-    * on semantic). NOT in the census: the (16,2)-parameterized oracle is
-    * the correctness gate; this def only prices the scale config. */
+  /** Bench-only k-means at C = [[semanticC]] of the corpus: C is a model
+    * size, so the big-tier number trains what a production IVF would use.
+    * Not in the census: the (16, 2) oracle is the correctness gate. */
   val kmeansScaled: QueryDef = QueryDef.rowsOnly("ann_kmeans_train_c") { (s, dir) =>
     emb(s, dir)
     val n = s.sql("SELECT count(*) FROM embeddings").head().getLong(0)
@@ -1690,37 +814,19 @@ object Similarity {
   }
 
   // --- JL random projection: dimension reduction as the scale lever --------
-  // Johnson-Lindenstrauss with Achlioptas's ±1 sign matrix, under the
-  // repo's exactness discipline (see functions.RProjI64): components
-  // quantize to 2^20 fixed point, projection and scoring are then pure
-  // BIGINT sums — order-independent, so the projected vectors AND a
-  // brute-force ranking in the projected space are hash-replayable in
-  // DuckDB. Why it matters at 100 TB: a 64-d float scan is 256 B/vector
-  // of memory bandwidth per candidate; the 16-d projected scan reads 128 B
-  // and does 1/4 the multiplies, and JL guarantees pairwise dot products
-  // distort by O(√(log N / out_dims)) — the standard first-stage filter in
-  // front of an exact re-rank (same two-stage shape as ivfSq8). The sign
-  // matrix derives from the portable md5 hash: the driver, Spark SQL, and
-  // the DuckDB oracle all re-derive it bit for bit, and it ships as a
-  // plan-time foldable literal (16×64 ints), so the projection runs as a
-  // pure projection inside the scan's codegen span — no join, no shuffle.
-  // a def, not a val: eagerly-initialized oracle strings EARLIER in this
-  // object (rprojSq8Oracle) render sign matrices through it — a val would
-  // still be 0 when they initialize (declaration order), silently
-  // emitting `range(0, 0)` sign CTEs
+  // Johnson-Lindenstrauss with Achlioptas's ±1 signs under the exactness
+  // discipline (functions.RProjI64): components quantize to 2^20 fixed
+  // point, so projection and scoring are BIGINT sums, order-independent.
+  // A 64-d float scan reads 256 B per candidate; the 16-d projection reads
+  // 128 B with a quarter of the multiplies. The sign matrix derives from
+  // the portable hash and ships as a foldable literal (16×64 ints).
+  // A def, not a val: oracle vals above render sign CTEs through it, and
+  // a val would still be 0 when they initialize.
   private[graft] def rprojOutDims = 16
 
   /** ±1 sign matrix: sign(k,j) = +1 iff portableHash60("rp_k_j") is even. */
-  def rprojSigns(out: Int = rprojOutDims, dims: Int = 64): Array[Array[Int]] = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    def hash60(s: String): Long = {
-      md5.reset()
-      val hex = md5.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }
-    Array.tabulate(out, dims)((k, j) => if (hash60(s"rp_${k}_${j}") % 2 == 0) 1 else -1)
-  }
+  def rprojSigns(out: Int = rprojOutDims, dims: Int = 64): Array[Array[Int]] =
+    Array.tabulate(out, dims)((k, j) => if (portableHash60(s"rp_${k}_${j}") % 2 == 0) 1 else -1)
 
   /** The sign matrix as a foldable Spark SQL literal. */
   private[graft] lazy val rprojSignsSql: String =
@@ -1733,6 +839,18 @@ object Similarity {
        |    concat('rp_', CAST(k AS VARCHAR), '_', CAST(j AS VARCHAR))), 1, 15)) AS BIGINT)
        |    % 2 = 0 THEN 1 ELSE -1 END AS sgn
        |FROM range(0, $out) a(k) CROSS JOIN range(0, $dims) b(j)""".stripMargin
+
+  /** DuckDB JL projection of `src`(vec_id, v): fixed-point components
+    * `q`, signs `s`, and the projection `pr`(vec_id, k, p). */
+  private def rprojDuck(src: String, q: String, s: String, pr: String): String =
+    s"""$q AS (
+       |  SELECT vec_id, j, CAST(floor(v[j + 1] * 1048576.0 + 0.5) AS BIGINT) AS qv
+       |  FROM $src CROSS JOIN range(0, 64) t(j)),
+       |$s AS (${rprojSignsDuck()}),
+       |$pr AS (
+       |  SELECT vec_id, k, CAST(sum(sgn * qv) AS BIGINT) AS p
+       |  FROM $q JOIN $s ON $q.j = $s.j
+       |  GROUP BY vec_id, k)""".stripMargin
 
   def rproj(spark: SparkSession, dir: String): DataFrame = {
     emb(spark, dir)
@@ -1762,11 +880,8 @@ object Similarity {
   val rprojDef: QueryDef = QueryDef.sqlBacked("emb_rproj", rprojOracle)(rproj(_, _))
 
   /** Brute-force top-k in the projected space: the JL first stage as a
-    * standalone ranking. Same plan as [[bruteForceTopK]] — broadcast
-    * queries, one corpus scan, partial per-partition top-k — but each
-    * candidate costs 16 long multiplies against 128 B instead of 64
-    * double multiplies against 256 B. RProjSpec pins its recall against
-    * the exact float ranking. */
+    * standalone ranking, 16 long multiplies per candidate. RProjSpec pins
+    * its recall against the exact float ranking. */
   def rprojTopK(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10): DataFrame = {
     emb(spark, dir)
@@ -1780,52 +895,29 @@ object Similarity {
          |  SELECT /*+ BROADCAST(q) */ query_id, c.vec_id AS cand_id,
          |    dot_i64(qv, c.pv) AS score
          |  FROM q JOIN pr c ON query_id <> c.vec_id)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT query_id, cand_id, score,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
-         |  FROM scored) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${Ivf.topK("query_id", "cand_id", "score", "scored", k)}""".stripMargin)
   }
 
   private val rprojTopKOracle =
     s"""WITH e AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings),
-       |qq AS (
-       |  SELECT vec_id, j, CAST(floor(v[j + 1] * 1048576.0 + 0.5) AS BIGINT) AS qv
-       |  FROM e CROSS JOIN range(0, 64) t(j)),
-       |s AS (${rprojSignsDuck()}),
-       |pr AS (
-       |  SELECT vec_id, k, CAST(sum(sgn * qv) AS BIGINT) AS p
-       |  FROM qq JOIN s ON qq.j = s.j
-       |  GROUP BY vec_id, k),
+       |${rprojDuck("e", "qq", "s", "pr")},
        |scored AS (
        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
        |    CAST(sum(q.p * c.p) AS BIGINT) AS score
        |  FROM pr q JOIN pr c ON q.k = c.k AND q.vec_id <> c.vec_id
        |  WHERE q.vec_id < 8
        |  GROUP BY q.vec_id, c.vec_id)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT query_id, cand_id, score,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
-       |  FROM scored) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.topK("query_id", "cand_id", "score", "scored")}""".stripMargin
 
   val rprojTopKDef: QueryDef =
     QueryDef.sqlBacked("ann_rproj_topk", rprojTopKOracle)(rprojTopK(_, _))
 
-  /** The JL production shape: two-stage search — shortlist in the
-    * projected space (16 long multiplies / 128 B per candidate), then
-    * exact float re-rank of ONLY the shortlist·|queries| survivors,
-    * which re-fetch their float vectors through a broadcast join (the
-    * corpus's 64-d floats are never carried through the ranking
-    * shuffle — the same survivors-fetch-floats discipline as
-    * [[ivfSq8TopK]]'s comment argues for, here done literally). Both
-    * stages are deterministic (integer stage-1 scores; stage-2 dots in
-    * the pinned IEEE fold with cand_id tie-breaks), so the whole
-    * two-stage pipeline is hash-replayable in DuckDB. */
+  /** Two-stage JL search: shortlist in the projected space, then exact
+    * float re-rank of only the shortlist·|queries| survivors, which
+    * re-fetch their floats through a broadcast join — the float vectors
+    * never ride the ranking shuffle. */
   def rprojRerank(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10, shortlist: Int = 100): DataFrame = {
     emb(spark, dir)
@@ -1836,38 +928,22 @@ object Similarity {
          |pr AS (SELECT vec_id, rproj_i64(v, $rprojSignsSql) AS pv FROM e),
          |q AS (SELECT vec_id AS query_id, pv AS qpv FROM pr WHERE vec_id < $nQueries),
          |cand AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT /*+ BROADCAST(q) */ q.query_id, c.vec_id AS cand_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY dot_i64(q.qpv, c.pv) DESC, c.vec_id) AS rn
-         |    FROM q JOIN pr c ON q.query_id <> c.vec_id) t
-         |  WHERE rn <= $shortlist),
+         |  ${Ivf.ranked("query_id, cand_id", "/*+ BROADCAST(q) */ q.query_id, c.vec_id AS cand_id",
+        "q.query_id", "dot_i64(q.qpv, c.pv) DESC, c.vec_id", "q JOIN pr c ON q.query_id <> c.vec_id",
+        "rn", s"<= $shortlist")}),
          |scored AS (
          |  SELECT /*+ BROADCAST(cand) */ cand.query_id, cand.cand_id,
          |    dot_product(qe.v, ce.v) AS score
          |  FROM cand JOIN e qe ON qe.vec_id = cand.query_id
          |            JOIN e ce ON ce.vec_id = cand.cand_id)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT query_id, cand_id, score,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, cand_id) AS rnk
-         |  FROM scored) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
+         |${Ivf.topK("query_id", "cand_id", "score", "scored", k)}""".stripMargin)
   }
 
   private val rprojRerankOracle =
     s"""WITH e AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings),
-       |qq AS (
-       |  SELECT vec_id, j, CAST(floor(v[j + 1] * 1048576.0 + 0.5) AS BIGINT) AS qv
-       |  FROM e CROSS JOIN range(0, 64) t(j)),
-       |s AS (${rprojSignsDuck()}),
-       |pr AS (
-       |  SELECT vec_id, k, CAST(sum(sgn * qv) AS BIGINT) AS p
-       |  FROM qq JOIN s ON qq.j = s.j
-       |  GROUP BY vec_id, k),
+       |${rprojDuck("e", "qq", "s", "pr")},
        |approx AS (
        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
        |    CAST(sum(q.p * c.p) AS BIGINT) AS ascore
@@ -1875,146 +951,39 @@ object Similarity {
        |  WHERE q.vec_id < 8
        |  GROUP BY q.vec_id, c.vec_id),
        |cand AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT query_id, cand_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY ascore DESC, cand_id) AS rn
-       |    FROM approx) t
-       |  WHERE rn <= 100),
+       |  ${Ivf.ranked("query_id, cand_id", "query_id, cand_id", "query_id", "ascore DESC, cand_id",
+      "approx", "rn", "<= 100")}),
        |scored AS (
        |  SELECT cand.query_id, cand.cand_id,
-       |    ${Dedup.dotDuckSql("qe.v", "ce.v")} AS score
+       |    ${dotDuck("qe.v", "ce.v")} AS score
        |  FROM cand JOIN e qe ON qe.vec_id = cand.query_id
        |            JOIN e ce ON ce.vec_id = cand.cand_id)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT query_id, cand_id, score,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY score DESC, cand_id) AS rnk
-       |  FROM scored) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.topK("query_id", "cand_id", "score", "scored")}""".stripMargin
 
   val rprojRerankDef: QueryDef =
     QueryDef.sqlBacked("ann_rproj_rerank", rprojRerankOracle)(rprojRerank(_, _))
 
   // --- IVF-PQ: product quantization + ADC (Jégou/Douze/Schmid 2011) --------
-  // Completes the quantization ladder (float → JL-16d → SQ8 → PQ, the
-  // FAISS IndexIVFPQ shape): the 64 dims split into m=8 subspaces of 8
-  // dims, each coded against a 16-entry per-subspace codebook (4 bits),
-  // so a vector's ENTIRE code word packs into one BIGINT — 8 bytes per
-  // candidate, 32× smaller than the float vector and 8× smaller than the
-  // SQ8 codes. The probe's approximate stage is Asymmetric Distance
-  // Computation: each query precomputes an m×ks lookup table of
-  // fixed-point partial inner products against the codebooks (128
-  // BIGINTs, riding along with the broadcast query side), and scoring a
-  // candidate is 8 array lookups + BIGINT adds — no float arithmetic, so
-  // approximate ranks replay bit-exactly in the oracle. Codebooks are
-  // sampled deterministically from the corpus head (the subvectors of
-  // vec_id < 16 — FAISS's sample-init under the repo's no-RNG
-  // discipline; a trained variant would run the same per-subspace Lloyd
-  // rounds as trainCentroids). Encoding is argmin L2 in 2^20 fixed
-  // point with ties to the lowest codeword — the composite BIGINT key
-  // d2·16+j makes the argmin a plain MIN aggregate (map-side
-  // combinable, no window). Survivors re-rank by exact float dot, as
-  // SQ8 does. Reference has no vector ops (SURVEY §2 north-star scope).
-
-  /** Shared CTE text: fixed-point vectors `f`, sampled codebooks `cb`
-    * (m=8 × ks=16 × 8 dims), the codebook matrix `cbm` (one row, the
-    * 128 entries ordered by s·16+j), packed code words `codes(vec_id,
-    * cw)`. Engine-side (Spark) spelling.
-    *
-    * OPTIMIZATION r14 (guide §1.2 "per-task work" + §2.4 "remove
-    * shuffles outright"): the encode was an N×128-row cross join
-    * computing one interpreted `aggregate(zip_with(slice(...)))` lambda
-    * chain per row, followed by TWO aggregate exchanges (argmin per
-    * (vec, s), pack per vec) whose output was then JOINED back to the
-    * corpus. It is now the [[graft.functions.PqEncode]] codegen kernel:
-    * the codebook folds to a single 128×8 array (one scalar subquery —
-    * model-sized, same class as the centroid literal), and each vector's
-    * entire code word is one generated-loop projection inside the scan's
-    * codegen span — zero encode exchanges, zero attach join, identical
-    * argmin-key arithmetic (PqSpec pins kernel ≡ SQL spelling ≡ oracle).
-    */
-  private def pqCodesCte(src: String): String =
-    s"""e AS (
-       |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM $src),
-       |f AS (
-       |  SELECT vec_id, v,
-       |    transform(v, x -> CAST(floor(x * 1048576.0D + 0.5D) AS BIGINT)) AS vf
-       |  FROM e),
-       |cb AS (
-       |  SELECT sub.s, f.vec_id AS j, slice(f.vf, sub.s * 8 + 1, 8) AS cf
-       |  FROM f CROSS JOIN (SELECT explode(sequence(0, 7)) AS s) sub
-       |  WHERE f.vec_id < 16),
-       |cbm AS (
-       |  SELECT transform(sort_array(collect_list(named_struct(
-       |    'idx', s * 16 + CAST(j AS INT), 'cf', cf))), x -> x.cf) AS m
-       |  FROM cb),
-       |codes AS (
-       |  SELECT vec_id, pq_encode(vf, (SELECT m FROM cbm)) AS cw FROM f)""".stripMargin
-
-  /** Query-side LUT CTE: one 128-entry BIGINT array per query, index
-    * s·16+j (1-based at read). Requires `f` and `cb` from
-    * [[pqCodesCte]] in scope. */
-  private def pqLutCte(nQueries: Int): String =
-    s"""queries AS (
-       |  SELECT vec_id AS query_id, v AS qv, vf AS qf
-       |  FROM f WHERE vec_id < $nQueries),
-       |lut AS (
-       |  SELECT query_id,
-       |    transform(sort_array(collect_list(named_struct(
-       |      'idx', s * 16 + CAST(j AS INT), 'dp', dp))), x -> x.dp) AS lutv
-       |  FROM (
-       |    SELECT q.query_id, cb.s, cb.j,
-       |      aggregate(zip_with(slice(q.qf, cb.s * 8 + 1, 8), cb.cf,
-       |        (x, y) -> x * y), 0L, (acc, p) -> acc + p) AS dp
-       |    FROM queries q CROSS JOIN cb) t
-       |  GROUP BY query_id)""".stripMargin
-
+  // The 64 dims split into m=8 subspaces of 8, each coded against a
+  // 16-entry codebook (4 bits), so a vector's whole code word packs into
+  // one BIGINT — 8 bytes per candidate, 32× less than the floats.
+  // Asymmetric Distance Computation: each query precomputes an 8×16 LUT
+  // of fixed-point partial dots, and a candidate scores by 8 lookups and
+  // BIGINT adds, so approximate ranks replay bit-exactly. Codebooks are
+  // the subvectors of vec_id < 16 (sample-init without an RNG). Encoding
+  // is argmin L2 in 2^20 fixed point, ties to the lowest codeword: the
+  // composite key d2·16+j makes the argmin a plain MIN (the pq_encode
+  // kernel computes it per row inside the scan's codegen span; PqSpec
+  // pins kernel ≡ SQL ≡ oracle). Survivors re-rank by exact float dot.
   def ivfPqTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
-      k: Int = 10, nProbe: Int = 4, rerank: Int = 50): DataFrame = {
-    emb(spark, dir)
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |${pqCodesCte("embeddings")},
-         |corpus AS (
-         |  SELECT vec_id AS cand_id, v AS cv,
-         |    pq_encode(vf, (SELECT m FROM cbm)) AS cw,
-         |    argmax_dot(v, $centroidMatrixSql) AS cell
-         |  FROM f),
-         |${pqLutCte(nQueries)},
-         |probes AS (
-         |  SELECT query_id, qv, lutv, cid AS cell FROM (
-         |    SELECT q.query_id, q.qv, l.lutv, cent.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, cent.cv) DESC, cent.cid) AS pr
-         |    FROM queries q JOIN lut l ON q.query_id = l.query_id
-         |    CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe),
-         |approx AS (
-         |  SELECT query_id, cand_id, qv, cv,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY ascore DESC, cand_id) AS arnk
-         |  FROM (
-         |    SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id, p.qv, c.cv,
-         |      pq_adc(p.lutv, c.cw) AS ascore
-         |    FROM probes p JOIN corpus c
-         |      ON p.cell = c.cell AND p.query_id <> c.cand_id) raw)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT query_id, cand_id, dot_product(qv, cv) AS score,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY
-         |      dot_product(qv, cv) DESC, cand_id) AS rnk
-         |  FROM approx WHERE arnk <= $rerank) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      k: Int = 10, nProbe: Int = 4, rerank: Int = 50): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(codec = Ivf.Pq, nQueries = nQueries, k = k,
+      nProbe = nProbe, rerank = rerank))
 
-  /** DuckDB replay of the full PQ pipeline — codebook sampling, fixed-
-    * point encode (identical composite-key argmin), packed code words,
-    * ADC lookups, exact re-rank — over an arbitrary (vec_id, embedding)
-    * source. Bit-exact: every ranking stage is BIGINT or the pinned
-    * IEEE dot fold. */
+  /** DuckDB replay of the full PQ pipeline — codebook sampling,
+    * fixed-point encode (the same composite-key argmin), packed code
+    * words, ADC lookups, exact re-rank — over a (vec_id, embedding)
+    * source. */
   private[graft] def ivfPqOracleOver(src: String): String =
     s"""WITH cent AS ($centroidDuck),
        |e AS (
@@ -2043,13 +1012,7 @@ object Similarity {
        |  SELECT vec_id,
        |    CAST(sum(CAST(code AS BIGINT) * (CAST(1 AS BIGINT) << (4 * s))) AS BIGINT) AS cw
        |  FROM enc GROUP BY vec_id),
-       |assign AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT f.vec_id, cent.cid,
-       |      row_number() OVER (PARTITION BY f.vec_id ORDER BY
-       |        ${Dedup.dotDuckSql("f.v", "cent.cv")} DESC, cent.cid) AS rn
-       |    FROM f CROSS JOIN cent) t
-       |  WHERE rn = 1),
+       |${Ivf.Duck.assign("f", ")")},
        |corpus AS (
        |  SELECT f.vec_id AS cand_id, f.v AS cv, codes.cw, a.cell
        |  FROM f JOIN codes ON f.vec_id = codes.vec_id
@@ -2066,17 +1029,10 @@ object Similarity {
        |    FROM queries q CROSS JOIN cb) t
        |  GROUP BY query_id),
        |probes AS (
-       |  SELECT query_id, qv, lutv, cell FROM (
-       |    SELECT q.query_id, q.qv, l.lutv, cent.cid AS cell,
-       |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-       |        ${Dedup.dotDuckSql("q.qv", "cent.cv")} DESC, cent.cid) AS pr
-       |    FROM queries q JOIN lut l ON q.query_id = l.query_id
-       |    CROSS JOIN cent) t
-       |  WHERE pr <= 4),
+       |  ${Ivf.Duck.probes(Seq("q.query_id", "q.qv", "l.lutv"), "q.query_id", "q.qv",
+      "queries q JOIN lut l ON q.query_id = l.query_id", 4, cellInside = true)}),
        |approx AS (
-       |  SELECT query_id, cand_id, qv, cv,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY ascore DESC, cand_id) AS arnk
+       |  ${Ivf.rank("query_id, cand_id, qv, cv", "query_id", "ascore DESC, cand_id", "arnk")}
        |  FROM (
        |    SELECT p.query_id, c.cand_id, p.qv, c.cv,
        |      list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -2085,97 +1041,31 @@ object Similarity {
        |        (x, y) -> x + y) AS ascore
        |    FROM probes p JOIN corpus c
        |      ON p.cell = c.cell AND p.query_id <> c.cand_id) raw)
-       |SELECT query_id, cand_id, score, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT query_id, cand_id, ${Dedup.dotDuckSql("qv", "cv")} AS score,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY
-       |      ${Dedup.dotDuckSql("qv", "cv")} DESC, cand_id) AS rnk
-       |  FROM approx WHERE arnk <= 50) t
-       |WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin
+       |${Ivf.Duck.topK("query_id", "cand_id", dotDuck("qv", "cv"), "approx WHERE arnk <= 50")}""".stripMargin
 
   private val ivfPqOracle = ivfPqOracleOver("embeddings")
 
   val ivfPq: QueryDef =
     QueryDef.sqlBacked("ann_ivf_pq", ivfPqOracle)(ivfPqTopK(_, _))
 
-  // --- IVF-PQ with STORED code words ---------------------------------------
-  // The production serving shape: the 8-byte packed code word is written
-  // into the cell-partitioned index ONCE; a probe's ADC stage reads ONLY
-  // (cand_id, cw) within its probed cells — 16 bytes per candidate
-  // against SQ8's ~72 (64 int8 codes + scale) and the float path's 256,
-  // the bandwidth ratio that makes PQ the memory-resident tier at
-  // billion-vector scale. Survivors fetch floats back by cand_id.
-  // Encoding is deterministic, so stored ≡ in-flight code words and the
-  // key shares ann_ivf_pq's oracle verbatim.
+  /** The stored PQ index: the packed code word is written once, and a
+    * probe's ADC stage reads (cand_id, cw) only — 16 bytes per candidate
+    * against SQ8's ~72 and the floats' 256. */
   def writeIvfPqIndex(spark: SparkSession, dir: String, indexPath: String,
-      mode: String = "overwrite"): Unit = {
-    emb(spark, dir)
-    spark.sql(
-      s"""WITH ${pqCodesCte("embeddings")}
-         |SELECT vec_id AS cand_id, v AS cv,
-         |  pq_encode(vf, (SELECT m FROM cbm)) AS cw,
-         |  argmax_dot(v, $centroidMatrixSql) AS cell
-         |FROM f""".stripMargin)
-      .write.mode(mode).partitionBy("cell").parquet(indexPath)
-  }
-
-  /** The PQ probe against whatever relation is registered as
-    * `pq_index` (cand_id, cv, cw, cell). Queries derive their LUT
-    * in-flight against the corpus-head codebooks (they are `nQueries`
-    * rows); candidates score from the stored code words. */
-  def probePqView(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      rerank: Int = 50): DataFrame = {
-    emb(spark, dir)
-    spark.sql(
-      s"""WITH cent AS ($centroidSql),
-         |${pqCodesCte("embeddings")},
-         |${pqLutCte(nQueries)},
-         |probes AS (
-         |  SELECT query_id, qv, lutv, cid AS cell FROM (
-         |    SELECT q.query_id, q.qv, l.lutv, cent.cid,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        dot_product(q.qv, cent.cv) DESC, cent.cid) AS pr
-         |    FROM queries q JOIN lut l ON q.query_id = l.query_id
-         |    CROSS JOIN cent) t
-         |  WHERE pr <= $nProbe),
-         |approx AS (
-         |  SELECT query_id, cand_id, qv,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY ascore DESC, cand_id) AS arnk
-         |  FROM (
-         |    SELECT /*+ BROADCAST(p) */ p.query_id, c.cand_id, p.qv,
-         |      pq_adc(p.lutv, c.cw) AS ascore
-         |    FROM probes p JOIN pq_index c
-         |      ON p.cell = c.cell AND p.query_id <> c.cand_id) raw),
-         |surv AS (SELECT query_id, cand_id, qv FROM approx WHERE arnk <= $rerank)
-         |SELECT query_id, cand_id, score, rnk FROM (
-         |  SELECT /*+ BROADCAST(s) */ s.query_id, s.cand_id,
-         |    dot_product(s.qv, x.cv) AS score,
-         |    row_number() OVER (PARTITION BY s.query_id ORDER BY
-         |      dot_product(s.qv, x.cv) DESC, s.cand_id) AS rnk
-         |  FROM surv s JOIN pq_index x ON s.cand_id = x.cand_id) t
-         |WHERE rnk <= $k
-         |ORDER BY query_id, rnk""".stripMargin)
-  }
+      mode: String = "overwrite"): Unit =
+    Ivf.write(spark, dir, Ivf.Pq, indexPath, mode)
 
   def probeIvfPqIndex(spark: SparkSession, dir: String, indexPath: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      rerank: Int = 50): DataFrame = {
-    StoredParquet.read(spark, indexPath).createOrReplaceTempView("pq_index")
-    probePqView(spark, dir, nQueries, k, nProbe, rerank)
-  }
+      rerank: Int = 50): DataFrame =
+    Ivf.topK(spark, dir, Ivf.Probe(codec = Ivf.Pq, index = stored(spark, indexPath),
+      nQueries = nQueries, k = k, nProbe = nProbe, rerank = rerank))
 
-  /** Self-contained census composition: write the packed-code index to
-    * a session scratch path, probe it. Same oracle as ann_ivf_pq — the
-    * storage layout is invisible in the result. */
   def ivfPqIndexedTopK(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 10, nProbe: Int = 4,
-      rerank: Int = 50): DataFrame = {
-    val idx = Engine.scratchDir("graft_pq_idx_") + "/index"
-    writeIvfPqIndex(spark, dir, idx)
-    probeIvfPqIndex(spark, dir, idx, nQueries, k, nProbe, rerank)
-  }
+      rerank: Int = 50): DataFrame =
+    Ivf.indexed(spark, dir, Ivf.Probe(codec = Ivf.Pq, nQueries = nQueries, k = k,
+      nProbe = nProbe, rerank = rerank))
 
   val ivfPqIndexed: QueryDef =
     QueryDef.sqlBacked("ann_ivf_pq_idx", ivfPqOracle)(ivfPqIndexedTopK(_, _))

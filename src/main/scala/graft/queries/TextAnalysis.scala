@@ -286,7 +286,7 @@ object TextAnalysis {
        |),
        |h AS (
        |  SELECT doc_id, p, n,
-       |    ${Dedup.hash60DuckSql(s"substr(t, CAST(p AS INT), $winnowK)")} % $winnowHashSpace AS h30
+       |    ${Dedup.portableHash60Duck(s"substr(t, CAST(p AS INT), $winnowK)")} % $winnowHashSpace AS h30
        |  FROM grams
        |),
        |sel AS (
@@ -318,7 +318,7 @@ object TextAnalysis {
          |),
          |h AS (
          |  SELECT doc_id, p, n,
-         |    ${Dedup.hash60SparkSql(s"substring(t, p, $winnowK)")} % $winnowHashSpace AS h30
+         |    ${Dedup.portableHash60Spark(s"substring(t, p, $winnowK)")} % $winnowHashSpace AS h30
          |  FROM grams
          |),
          |sel AS (

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Assignment, CreateTempView, 
   DeleteAction, DeleteFromTable, DropNamespace, DropTable, DropView, InsertAction,
   InsertIntoStatement, LogicalPlan, MergeIntoTable, Project, ShowFunctions, ShowTables,
   SubqueryAlias, UnresolvedWith, UpdateAction, UpdateTable}
+import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.execution.SimpleMode
 import org.apache.spark.sql.execution.command.{ExplainCommand, ShowNamespacesCommand}
 import org.apache.spark.sql.functions._
@@ -470,11 +471,17 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
         spark.sessionState.functionRegistry.listFunction()
           .map(_.funcName).distinct.sorted.toDF("function_name")
       case s: ShowNamespacesCommand => run(s).select(col("namespace").as("database"))
-      case ShowTables(CurrentNamespace, None, _) =>
-        // the reference lists the CURRENT database's catalog entries only
-        // (tests/show/tables.rs: empty under default, the three system
-        // tables under incresql) — the same rows as incresql.tables
-        tableRows.filter(_.database_name == currentDb).map(_.name).sorted.toDF("table")
+      case ShowTables(ns, pattern, _) =>
+        // one database's catalog entries (tests/show/tables.rs: empty
+        // under default, the three system tables under incresql) — the
+        // same rows as incresql.tables, LIKE-filtered as Spark filters
+        val db = ns match {
+          case UnresolvedNamespace(parts, _) => parts.last.toLowerCase
+          case _ => currentDb
+        }
+        require(databaseNames.contains(db), s"database $db does not exist")
+        val names = tableRows.filter(_.database_name == db).map(_.name)
+        pattern.fold(names)(StringUtils.filterPattern(names, _)).sorted.toDF("table")
       case d @ DropNamespace(UnresolvedNamespace(Seq(db), _), _, cascade) =>
         // the reference refuses to drop a non-empty database
         // (catalog/src/lib.rs:146-148 check_db_empty); Spark enforces that
@@ -915,11 +922,14 @@ final class GraftSession(val spark: SparkSession, viewCatalogDir: String = null,
     val df =
       if (name == "databases")
         // bootstrap databases exist even before any user DDL
-        (spark.catalog.listDatabases().collect().map(_.name).toSeq ++
-          Seq("incresql", "information_schema")).distinct.sorted.map(SysDbRow).toDF()
+        databaseNames.map(SysDbRow).toDF()
       else tableRows.toDF()
     df.queryExecution.analyzed
   }
+
+  private def databaseNames: Seq[String] =
+    (spark.catalog.listDatabases().collect().map(_.name).toSeq ++
+      Seq("incresql", "information_schema")).distinct.sorted
 
   private def tableRows: Seq[SysTableRow] = {
     val cur = currentDb

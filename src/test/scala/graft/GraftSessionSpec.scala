@@ -410,6 +410,15 @@ class GraftSessionSpec extends AnyFunSuite {
         "SHOW TABLES" -> ok(df => assert(df.collect().map(_.getString(0)).toSeq == Seq("mt", "pt"))),
         "CREATE VIEW {v} AS SELECT k, count(*) AS n FROM {mt} GROUP BY k" -> ok(_ =>
           assert(rows("SELECT k, n FROM v") == Seq("1|2", "2|2", "3|1"))),
+        "SHOW TABLES IN {d}" -> ok(df => assert(df.columns.toSeq == Seq("table") &&
+          df.collect().map(_.getString(0)).toSeq == Seq("mt", "pt", "v"))),
+        "SHOW TABLES LIKE 'm*|v'" -> ok(df => assert(df.columns.toSeq == Seq("table") &&
+          df.collect().map(_.getString(0)).toSeq == Seq("mt", "v"))),
+        "SHOW TABLES FROM {d} LIKE 'p*'" -> ok(df =>
+          assert(df.collect().map(_.getString(0)).toSeq == Seq("pt"))),
+        "SHOW TABLES IN incresql LIKE 't*'" -> ok(df =>
+          assert(df.collect().map(_.getString(0)).toSeq == Seq("tables"))),
+        "SHOW TABLES IN graft_surface_missing" -> fails("does not exist"),
         "CREATE OR REPLACE VIEW {v} AS SELECT k FROM {pt} WHERE k < 3" -> ok(_ =>
           assert(rows("SELECT * FROM v") == Seq("1", "2"))),
         "EXPLAIN SELECT k FROM {v}" -> ok(df =>
